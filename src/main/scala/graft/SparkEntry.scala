@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.io.Tables
+import graft.io.{ScratchDirs, Tables}
 import graft.ops._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -20,37 +20,81 @@ object SparkEntry {
   private def ev(s: SparkSession, d: String): DataFrame = Tables.events(s, d)
   private def li(s: SparkSession, d: String): DataFrame = Tables.lineitem(s, d)
 
-  /** Session-scoped scratch artifacts, one per (kind, sfDir): built on
-    * first use, reused by every later query invocation in the same JVM,
-    * removed at JVM exit. Repeated Bench/Verify runs stop leaking a fresh
-    * /tmp directory per invocation — and the ann_probe entry can time a
-    * PROBE against a layout ann_lsh already built.
+  // ------------------------------------------------------ scratch artifacts
+
+  /** What a scratch build reads: the session, the data dir, and the dirs
+    * of the upstream artifacts it declared (built before it).
+    */
+  private[graft] final case class Inputs(s: SparkSession, d: String,
+                                         dirs: Map[String, String]) {
+    def documents: DataFrame = Tables.documents(s, d)
+    def embeddings: DataFrame = Tables.embeddings(s, d)
+    def read(a: Artifact): DataFrame = s.read.parquet(dirs(a.kind))
+  }
+
+  /** A session-scoped scratch artifact, declared ONCE in the table below:
+    * its kind (the `graft_<kind>_*` dir under java.io.tmpdir and the cache
+    * key), the artifacts its build reads, and the build. A build returns
+    * the frame to persist, which the cache writes as parquet — first
+    * hash-repartitioned by `fanOut`, if given — or writes its own
+    * multi-part layout into the dir it is handed and returns None.
+    *
+    * Keyed fan-out (r18/r19-opt): a build frame inherits its input's
+    * split count — ONE split at bench scale — so an unrepartitioned
+    * artifact lands as one file and every consumer's doc-keyed work
+    * (band mins, verify collect_set, coverage windows, the vec_id = aid
+    * join) starts from a one-task scan. The fan-out must be hash(key),
+    * not round-robin: consumers aggregate or join by that key, and a
+    * round-robin scatter gives each task a corpus-sized partial-agg hash
+    * map (measured 168 s of spill at the sf1 decade vs ~30 s keyed). AQE
+    * does not re-coalesce an explicit repartition; defaultParallelism
+    * scales with the session's cores; consumers are order-free.
+    */
+  private[graft] final case class Artifact(kind: String,
+      upstream: Seq[Artifact] = Nil, fanOut: Option[String] = None)(
+      val build: (Inputs, String) => Option[DataFrame])
+
+  /** Built artifacts, `<kind>|<data dir>` → artifact dir: one per (kind,
+    * data dir), built on first use — the first consumer pays — and reused
+    * by every later query in the JVM (session reuse of intermediate
+    * results: repeated Bench/Verify runs stop rebuilding, and ann_probe
+    * times a probe against the layout ann_lsh built). Builds run one at a
+    * time under `buildLock` and never inside a map update: an artifact's
+    * upstream is resolved before its own key is checked, so a build that
+    * needs another artifact never re-enters the map.
     */
   private val scratchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val buildLock = new Object
 
-  private def rmrf(root: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-        .foreach(p => try java.nio.file.Files.delete(p) catch { case _: Throwable => () })
-  }
-
-  /** A JVM-exit-cleaned fresh temp dir (for artifacts that must be
-    * re-written per invocation, e.g. the timed minhash artifact write).
+  /** The dir of `a` for data dir `d`, building it — its upstream first —
+    * if this JVM has not. A build that throws leaves no entry and no dir;
+    * the next call builds again.
     */
-  private def cleanedTempDir(kind: String): String = {
-    val base = java.nio.file.Files.createTempDirectory(s"graft_${kind}_")
-    sys.addShutdownHook(rmrf(base))
-    base.toString
+  private[graft] def scratchDir(a: Artifact, s: SparkSession, d: String): String = {
+    val key = s"${a.kind}|$d"
+    Option(scratchDirs.get(key)).getOrElse {
+      val dirs = a.upstream.map(u => u.kind -> scratchDir(u, s, d)).toMap
+      buildLock.synchronized {
+        Option(scratchDirs.get(key)).getOrElse {
+          val base = ScratchDirs.create(a.kind)
+          val path = s"$base/${a.kind}"
+          try a.build(Inputs(s, d, dirs), path).foreach { df =>
+            a.fanOut.fold(df)(k =>
+              df.repartition(s.sparkContext.defaultParallelism, col(k)))
+              .write.parquet(path)
+            // the build's own cuts are dead once the artifact persists
+            Checkpoints.release(df)
+          } catch { case e: Throwable => ScratchDirs.remove(base); throw e }
+          scratchDirs.put(key, path)
+          path
+        }
+      }
+    }
   }
 
-  private def scratch(kind: String, d: String)(build: String => Unit): String =
-    scratchDirs.computeIfAbsent(s"$kind|$d", _ => {
-      val path = cleanedTempDir(kind) + s"/$kind"
-      build(path)
-      path
-    })
+  private def scratch(a: Artifact, s: SparkSession, d: String): DataFrame =
+    s.read.parquet(scratchDir(a, s, d))
 
   /** Drop every cached scratch artifact (and its files) so the next call
     * rebuilds from source. Bench calls this BETWEEN repeat passes: each
@@ -58,123 +102,118 @@ object SparkEntry {
     * medians stay comparable to past single-shot rounds, and the
     * build-vs-probe split (ann_lsh vs ann_probe) keeps its meaning.
     */
-  private[graft] def resetScratch(): Unit = {
+  private[graft] def resetScratch(): Unit = buildLock.synchronized {
     scratchDirs.values.forEach(p =>
-      rmrf(java.nio.file.Paths.get(p).getParent))
+      ScratchDirs.remove(java.nio.file.Paths.get(p).getParent))
     scratchDirs.clear()
   }
 
-  /** Shared percentile-bounds artifacts: ONE range-sort per (table,
-    * column, sfDir) at the union grid of every consumer's quantiles,
-    * persisted as a 1-row parquet through the scratch cache. At 100 TB,
-    * a curation run that re-sorts the corpus once per quantile consumer
-    * is the clearest scale waste — here `exact_quantiles`,
-    * `summary_approx`, `winsorize_price` and `robust_scale` all read the
-    * same lineitem price artifact (one sort for four queries), and the
-    * documents tier/bucket queries reuse per-doc derived-column
-    * artifacts (the writeCorpusKeys pattern) so tokenization and the
-    * quality formula each run once, not once per consumer. Bench calls
-    * `resetScratch` between passes, so medians still price in exactly
-    * one artifact build per pass.
+  // The table. At 100 TB each entry is a lake table one curation run
+  // emits and its governance consumers read; re-deriving it per consumer
+  // (a corpus sort per quantile, a tokenize per near-dup query) is the
+  // scale waste the split removes.
+
+  /** Percentile bounds of lineitem price: ONE range-sort at the union grid
+    * of every consumer's quantiles — `exact_quantiles`, `summary_approx`,
+    * `winsorize_price` and `robust_scale`.
     */
-  private def priceBounds(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(scratch("bounds_li_price", d) { p =>
-      Stats.exactPercentilesScale(li(s, d), "l_extendedprice",
-        Seq("p05" -> 0.05, "p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75,
-          "p90" -> 0.9, "p95" -> 0.95, "p99" -> 0.99)).write.parquet(p)
-    })
+  private val PriceBounds = Artifact("bounds_li_price") { (in, _) =>
+    Some(Stats.exactPercentilesScale(li(in.s, in.d), "l_extendedprice",
+      Seq("p05" -> 0.05, "p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75,
+        "p90" -> 0.9, "p95" -> 0.95, "p99" -> 0.99)))
+  }
 
-  /** Per-doc token counts — tokenize the corpus once per session. */
-  private def docTokenCounts(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(scratch("doc_token_counts", d) { p =>
-      TextAnalysis.tokenCounts(Tables.documents(s, d)).write.parquet(p)
-    })
-
-  private def docTokenBounds(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(scratch("bounds_doc_tokens", d) { p =>
-      Stats.exactPercentilesScale(docTokenCounts(s, d), "n_tokens",
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)).write.parquet(p)
-    })
-
-  /** Per-doc quality scores — the quality formula runs once per session. */
-  private def docQuality(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(scratch("doc_quality", d) { p =>
-      TextAnalysis.qualityScore(Tables.documents(s, d))
-        .select("doc_id", "quality").write.parquet(p)
-    })
-
-  private def docQualityBounds(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(scratch("bounds_doc_quality", d) { p =>
-      Stats.exactPercentilesScale(docQuality(s, d), "quality",
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)).write.parquet(p)
-    })
-
-  /** Dup-window-start frame of the exact-substring dedup — discovery
-    * runs once per session; profile and rewrite consume the artifact.
+  /** Per-doc token counts (the corpus tokenized once) and their quartiles
+    * — `length_buckets`.
     */
-  private def dupStartsDir(s: SparkSession, d: String): String =
-    scratch("substr_dup_starts", d)(p =>
-      TextAnalysis.writeDupWindowStarts(Tables.documents(s, d), p, 8))
+  private val DocTokenCounts = Artifact("doc_token_counts") { (in, _) =>
+    Some(TextAnalysis.tokenCounts(in.documents))
+  }
 
-  /** Component labels of the bounded brute near-dup graph — the closure
-    * runs ONCE per session and persists (id, cluster_id); the three
-    * governance consumers (verdicts, size histogram, keep-best) re-read
-    * the artifact instead of re-mining edges + re-running the closure.
-    * That is the production split at 100 TB: labels are a lake table,
-    * governance queries are cheap rollups over it.
-    */
-  /** Hashed-shingle parquet artifact of the full corpus — written once
-    * per session (r18-opt), consumed by the minhash near-dup suite
-    * (`minhash_neardup`, `dedup_clusters_lsh`, `neardup_by_source`): the
-    * ngramCcLabels split applied one level down. Before the split each
-    * of the three queries re-tokenized the corpus and re-wrote an
-    * identical artifact; at 100 TB that is the difference between one
-    * corpus tokenize per curation run and one per governance consumer.
-    * Bench semantics unchanged in kind: resetScratch() between passes
-    * still prices exactly one artifact build per pass (the first
-    * consumer pays it, as with the quantile/label artifacts).
-    */
-  /** The verified near-dup PAIR LIST over the shingle artifact — mined
-    * once per session (r19-opt, the ngramPairsDir precedent one tier
-    * up): the two governance consumers (`dedup_clusters_lsh`'s closure,
-    * `neardup_by_source`'s rollup) read the pair table instead of each
-    * re-running the band join + exact verify. The registered
-    * `minhash_neardup` query STILL times the full mine itself — it IS
-    * the tier's measured miner, so that datapoint keeps its meaning.
-    * Production split: verified pairs are a lake table one curation run
-    * emits; closure and source-redundancy rollups are cheap consumers.
-    */
-  private def minhashPairsDir(s: SparkSession, d: String): String =
-    scratch("minhash_pairs", d)(p =>
-      Similarity.minhashNearDupFromArtifact(s, shingleHashesDir(s, d))
-        .write.mode("overwrite").parquet(p))
+  private val DocTokenBounds =
+    Artifact("bounds_doc_tokens", Seq(DocTokenCounts)) { (in, _) =>
+      Some(Stats.exactPercentilesScale(in.read(DocTokenCounts), "n_tokens",
+        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)))
+    }
 
-  private def shingleHashesDir(s: SparkSession, d: String): String =
-    scratch("minhash_hashes", d)(p =>
-      Similarity.shingleHashes(Tables.documents(s, d))
-        // explicit fan-out, keyed by doc_id (r18-opt): the tokenize
-        // pipeline inherits the doc table's split count (ONE split at
-        // bench scale), so an unrepartitioned artifact lands as one file
-        // and every consumer's partial aggregate (band mins, verify
-        // collect_set) serializes on a single task. The fan-out MUST be
-        // hash(doc_id), not round-robin: every consumer aggregates by
-        // doc_id, and a round-robin scatter makes each task's partial
-        // agg see every doc (a corpus-sized hash map per task — measured
-        // 168 s of spill at the sf1 decade vs ~30 s keyed). AQE does not
-        // re-coalesce an explicit repartition; defaultParallelism scales
-        // with the session's cores; results are order-free aggregates.
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-        .write.mode("overwrite").parquet(p))
-
-  /** tf-idf feature + suffix-bound prefix artifacts of the bounded
-    * cosine corpus (doc_id < 1000, t = 0.85 — the constants all three
-    * registered consumers share) — written once per session (r18-opt),
-    * read by `cosine_allpairs`, `cosine_preflight` and
-    * `cosine_governed`. Integer-quantized BIGINT columns, so the
-    * parquet round-trip is value-exact. Production story: the feature
-    * table IS the lake artifact a curation run builds once and its
-    * capacity estimator, exact miner and governed router all consume.
+  /** Per-doc quality scores (the quality formula run once) and their
+    * quartiles — `quality_tiers`, `cluster_keep_best`.
     */
+  private val DocQuality = Artifact("doc_quality") { (in, _) =>
+    Some(TextAnalysis.qualityScore(in.documents).select("doc_id", "quality"))
+  }
+
+  private val DocQualityBounds =
+    Artifact("bounds_doc_quality", Seq(DocQuality)) { (in, _) =>
+      Some(Stats.exactPercentilesScale(in.read(DocQuality), "quality",
+        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75)))
+    }
+
+  /** Dup-window starts of the exact-substring dedup (k = 8): discovery
+    * runs once; `substring_dedup` (profile) and `substring_dedup_apply`
+    * (rewrite) consume it — the paper's profile-once-apply-once split.
+    */
+  private val DupStarts =
+    Artifact("substr_dup_starts", fanOut = Some("doc_id")) { (in, _) =>
+      Some(TextAnalysis.dupStarts(in.documents, 8))
+    }
+
+  /** The even-id corpus' distinct window fingerprints — the standing
+    * "seen spans" set `substring_dedup_incremental` probes.
+    */
+  private val WindowHashes = Artifact("window_hashes") { (in, p) =>
+    TextAnalysis.writeWindowHashes(in.documents.filter(col("doc_id") % 2 === 0), p)
+    None
+  }
+
+  /** md5 keys of the doc_id < 250 corpus — the standing seen-set of
+    * `dedup_incremental` and `dedup_incremental_bloom`.
+    */
+  private val CorpusKeys = Artifact("corpus_keys") { (in, p) =>
+    Similarity.writeCorpusKeys(in.documents.filter(col("doc_id") < 250), p)
+    None
+  }
+
+  /** Hashed shingles of the full corpus (r18-opt) — the minhash suite's
+    * one corpus tokenize: `minhash_neardup` mines it, and the verified
+    * pair list below is mined from it once.
+    */
+  private val ShingleHashes =
+    Artifact("minhash_hashes", fanOut = Some("doc_id")) { (in, _) =>
+      Some(Similarity.shingleHashes(in.documents))
+    }
+
+  /** The verified minhash near-dup pair list (r19-opt), read by
+    * `dedup_clusters_lsh`'s closure and `neardup_by_source`'s rollup
+    * instead of each re-running the band join + exact verify. The
+    * registered `minhash_neardup` query still times the full mine itself
+    * — it IS the tier's measured miner.
+    */
+  private val MinhashPairs =
+    Artifact("minhash_pairs", Seq(ShingleHashes)) { (in, _) =>
+      Some(Similarity.minhashNearDup(in.read(ShingleHashes)))
+    }
+
+  /** The incremental near-dup split: the first 80% of ids are the
+    * standing corpus, the rest the arriving batch.
+    */
+  private def idSplit(docs: DataFrame, batch: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, expr}
+    val bounds = docs.agg(expr("((max(doc_id) + 1) * 8) DIV 10").as("split"))
+    docs.crossJoin(broadcast(bounds))
+      .filter(if (batch) col("doc_id") >= col("split")
+        else col("doc_id") < col("split"))
+      .drop("split")
+  }
+
+  /** The band+hash index of the standing corpus — probed by
+    * `minhash_incremental` and `neardup_governed_incremental`.
+    */
+  private val MinhashIndex = Artifact("minhash_idx") { (in, p) =>
+    Similarity.writeNearDupIndex(idSplit(in.documents, batch = false), p)
+    None
+  }
+
   /** The ONE place the cosine artifact's corpus bound and threshold live
     * (r18 verdict "what's wrong #3"): `pref` is threshold-DEPENDENT (the
     * suffix bound embeds t), so a consumer passing a different t than
@@ -184,60 +223,99 @@ object SparkEntry {
   private val CosineDocBound = 1000L
   private val CosineThreshold = 0.85
 
-  private def cosineFeatsDir(s: SparkSession, d: String): String =
-    scratch("cosine_feats", d) { p =>
-      val (feats, pref) = Similarity.cosineFeatsAndPrefix(
-        Tables.documents(s, d).filter(col("doc_id") < CosineDocBound),
-        CosineThreshold)
-      feats.write.mode("overwrite").parquet(s"$p/feats")
-      pref.write.mode("overwrite").parquet(s"$p/pref")
-      // the cuts are dead once persisted — leave no resident blocks
-      Checkpoints.release(feats)
-      Checkpoints.release(pref)
+  /** tf-idf feature (`feats`) + suffix-bound prefix (`pref`) tables of the
+    * bounded cosine corpus (r18-opt), read by `cosine_allpairs`,
+    * `cosine_preflight` and `cosine_governed` — the capacity estimator,
+    * exact miner and governed router of one feature build. Integer-
+    * quantized BIGINT columns, so the parquet round-trip is value-exact.
+    */
+  private val CosineFeats = Artifact("cosine_feats") { (in, p) =>
+    val (feats, pref) = Similarity.cosineFeatsAndPrefix(
+      in.documents.filter(col("doc_id") < CosineDocBound), CosineThreshold,
+      cutPref = true)
+    feats.write.mode("overwrite").parquet(s"$p/feats")
+    pref.write.mode("overwrite").parquet(s"$p/pref")
+    // the cuts are dead once persisted — leave no resident blocks
+    Checkpoints.release(feats)
+    Checkpoints.release(pref)
+    None
+  }
+
+  /** The flat semantic-tier cell assignment (aid, cid; nlist = 8, r19-opt)
+    * — the quantize→md5-seed→assign prelude `semantic_dedup`,
+    * `semantic_clusters`, `semantic_governed` and `semantic_preflight`
+    * share. The hier/capped forms keep their own two-level assignment
+    * (different cell geometry by design).
+    */
+  private val SemanticAssign =
+    Artifact("semantic_assign", fanOut = Some("aid")) { (in, _) =>
+      Some(Ivf.semanticAssign(in.embeddings, 8))
     }
 
-  /** The flat semantic-tier cell assignment (aid, cid; nlist = 8) as a
-    * session-shared parquet artifact (r19-opt): semantic_dedup,
-    * semantic_clusters, semantic_governed and semantic_preflight all run
-    * the same quantize→md5-seed→assign prelude — one build per pass now
-    * (first consumer in bench order pays it), integer-exact so every
-    * consumer's oracle is unchanged. The hier/capped forms keep their
-    * own two-level assignment (different cell geometry by design).
+  /** The trained 8-rule BPE merge table (r18-opt): production trains a
+    * tokenizer ONCE and ships the table; `bpe_merges`, `bpe_encode` and
+    * `bpe_vocab` read it instead of each repeating the 8-round training.
     */
-  private def semanticAssignDir(s: SparkSession, d: String): String =
-    scratch("semantic_assign", d)(p =>
-      Ivf.writeSemanticAssign(Tables.embeddings(s, d), p, 8))
+  private val BpeMerges = Artifact("bpe_merges") { (in, _) =>
+    Some(Tokenizer.bpeTrain(in.documents, 8))
+  }
 
-  /** The trained 8-rule BPE merge table as a parquet artifact — written
-    * once per session (r18-opt), read by the three tokenizer queries:
-    * production trains a tokenizer ONCE and ships the merge table;
-    * re-training it inside every consumer (encode, vocab) repeated the
-    * 8 driver-round training loop three times per pass. First consumer
-    * in bench order pays the train, exactly like the other artifacts.
+  /** The bounded brute pair list (ngramJaccard, id < 500, j >= 0.1,
+    * r18-opt), read by the closure below and `dedup_ensemble`. The
+    * registered `ngram_jaccard` query still times the brute mine itself
+    * (the anti-baseline datapoint the SURVEY rows cite).
     */
-  private def bpeMergesDir(s: SparkSession, d: String): String =
-    scratch("bpe_merges", d)(p =>
-      Tokenizer.bpeTrain(Tables.documents(s, d), 8)
-        .write.mode("overwrite").parquet(p))
+  private val NgramPairs = Artifact("ngram_pairs") { (in, _) =>
+    Some(Similarity.ngramJaccard(in.documents, 500L, 0.1))
+  }
 
-  /** The bounded brute pair list (ngramJaccard, id < 500, j >= 0.1) as
-    * a parquet artifact — mined once per session (r18-opt), consumed by
-    * the closure build below AND `dedup_ensemble`'s cross-modal
-    * adjudication. The registered `ngram_jaccard` query still times the
-    * brute mine itself (it IS the anti-baseline datapoint the SURVEY
-    * rows cite), so that measurement keeps its meaning.
+  /** Component labels (id, cluster_id) of the pair list above: the closure
+    * runs ONCE; the three governance consumers (`dedup_clusters`,
+    * `cluster_size_hist`, `cluster_keep_best`) are cheap rollups over it.
     */
-  private def ngramPairsDir(s: SparkSession, d: String): String =
-    scratch("ngram_pairs", d)(p =>
-      Similarity.ngramJaccard(Tables.documents(s, d), 500L, 0.1)
-        .write.mode("overwrite").parquet(p))
+  private val NgramCcLabels =
+    Artifact("ngram_cc_labels", Seq(NgramPairs)) { (in, _) =>
+      Some(Clustering.connectedComponents(in.read(NgramPairs), "doc_a", "doc_b"))
+    }
 
-  private def ngramCcLabels(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(scratch("ngram_cc_labels", d) { p =>
-      Clustering.connectedComponents(
-        s.read.parquet(ngramPairsDir(s, d)),
-        "doc_a", "doc_b").write.parquet(p)
-    })
+  /** The hyperplane-bucketed embedding layout (2^6 buckets) `ann_lsh`
+    * builds and `ann_probe` reuses.
+    */
+  private val AnnLayout = Artifact("ann_layout") { (in, p) =>
+    Similarity.writeAnnLayout(in.embeddings, p, nPlanes = 6)
+    None
+  }
+
+  /** The IVF cell layout + centroid artifact `ann_ivf` builds and
+    * `ann_ivf_probe` reuses.
+    */
+  private val IvfLayout = Artifact("ivf_layout") { (in, p) =>
+    Ivf.writeIvfLayout(in.embeddings, p)
+    None
+  }
+
+  /** `ann_ivf` / `ann_ivf_probe`: vector 0's adaptive IVF top-10 over the
+    * session layout.
+    */
+  private def ivfProbe(s: SparkSession, d: String): DataFrame = {
+    val layout = scratchDir(IvfLayout, s, d)
+    val cents = Ivf.readCentroids(s, layout)
+    val q = s.read.parquet(layout).filter(col("vec_id") === 0L)
+      .select(col("embedding")).head()
+      .getAs[scala.collection.Seq[Float]](0).toArray
+    Ivf.ivfProbeAdaptive(s, layout, cents, q, 10, excludeId = Some(0L))
+  }
+
+  /** Events clustered by the Morton interleave of (value, user_id) —
+    * `zorder_scan`'s layout.
+    */
+  private val ZOrderEvents = Artifact("zorder_events") { (in, p) =>
+    import org.apache.spark.sql.functions.unix_micros
+    io.Layout.writeZOrdered(
+      ev(in.s, in.d).withColumn("t_us", unix_micros(col("ts"))).drop("ts"),
+      Seq("value", "user_id"), bits = 8, nFiles = 32, dir = p)
+    None
+  }
 
   /** Chained-CTE oracle replaying `n` BPE training rounds (bpe_merges).
     * Words are delimiter-wrapped symbol strings (chr(1) sym chr(2) per
@@ -594,7 +672,7 @@ object SparkEntry {
     // 100 TB. The sketch estimates themselves are pinned within 1% of
     // this output by SimilaritySpec (no cross-engine t-digest equality
     // exists).
-    "summary_approx" -> ((s, d) => priceBounds(s, d)
+    "summary_approx" -> ((s, d) => scratch(PriceBounds, s, d)
       .select(col("n"), col("p50").as("exact_median"),
         col("p99").as("exact_p99"))),
     // Exact percentiles via range-sort + global index — the shape that
@@ -602,13 +680,13 @@ object SparkEntry {
     // value-counts buffer does not). Served from the shared price-bounds
     // artifact: one sort per session feeds this, summary_approx,
     // winsorize_price and robust_scale.
-    "exact_quantiles" -> ((s, d) => priceBounds(s, d)
+    "exact_quantiles" -> ((s, d) => scratch(PriceBounds, s, d)
       .select("n", "p50", "p90", "p99")),
     // Winsorization: clamp prices into their exact [p05, p95] band —
     // outlier capping off the scale-safe range-sort quantile path.
     "winsorize_price" -> ((s, d) =>
       Stats.winsorize(li(s, d), "l_extendedprice", 0.05, 0.95,
-          Some(priceBounds(s, d)
+          Some(scratch(PriceBounds, s, d)
             .select(col("p05").as("q_lo"), col("p95").as("q_hi"))))
         .select("l_orderkey", "l_linenumber", "l_extendedprice",
           "q_lo", "q_hi", "winsorized")),
@@ -616,7 +694,7 @@ object SparkEntry {
     // sibling of minmax_scale (quartiles don't move with one wild value).
     "robust_scale" -> ((s, d) =>
       Stats.robustScale(li(s, d), "l_extendedprice",
-          Some(priceBounds(s, d)
+          Some(scratch(PriceBounds, s, d)
             .select(col("p50").as("med"), (col("p75") - col("p25")).as("iqr"))))
         .select("l_orderkey", "l_linenumber", "l_extendedprice",
           "med", "iqr", "scaled")),
@@ -769,20 +847,20 @@ object SparkEntry {
     // non-overlapping left-to-right replace on delimiter-wrapped symbol
     // strings — provably the same scan as the fold).
     // r18-opt: all three tokenizer queries read the session-shared
-    // trained merge artifact (bpeMergesDir) — same rows, one training
+    // trained merge artifact (BpeMerges) — same rows, one training
     // loop per pass instead of three.
-    "bpe_merges" -> ((s, d) => s.read.parquet(bpeMergesDir(s, d))),
+    "bpe_merges" -> ((s, d) => scratch(BpeMerges, s, d)),
     // The ENCODE side: per-doc token statistics under the trained
     // tokenizer (train → encode in one compose). Merge loop is
     // word-TYPE-space; ONE corpus join, pre-aggregated to
     // (doc, word, cnt) so the Zipf head can't amplify rows.
     "bpe_encode" -> ((s, d) => Tokenizer.bpeEncode(Tables.documents(s, d),
-      s.read.parquet(bpeMergesDir(s, d)))),
+      scratch(BpeMerges, s, d))),
     // The shipped vocabulary: final-state symbols with occurrence mass
     // and merged/base provenance — the budget-acceptance view of the
     // trained table.
     "bpe_vocab" -> ((s, d) => Tokenizer.bpeVocab(Tables.documents(s, d),
-      s.read.parquet(bpeMergesDir(s, d)))),
+      scratch(BpeMerges, s, d))),
     // Count-Min sketch point-frequency estimates (md5-bucketed, fully
     // oracle-able) with exact recount per probe term; w=16 is sized so
     // the synthetic 31-term vocabulary shows BOTH behaviors in the gate:
@@ -801,22 +879,21 @@ object SparkEntry {
     // discovery stage (fingerprint explode + key aggregate) persists ONCE
     // per session; profile and rewrite both consume the artifact — the
     // paper's own profile-once-apply-once split.
-    "substring_dedup" -> ((s, d) => TextAnalysis.substringDedupFromStarts(
-      Tables.documents(s, d), dupStartsDir(s, d), 8)),
+    "substring_dedup" -> ((s, d) => TextAnalysis.substringDedup(
+      Tables.documents(s, d),
+      TextAnalysis.readDupStarts(s, scratchDir(DupStarts, s, d), 8), 8)),
     // ...and the removal step: covered positions dropped, survivors
     // reassemble in order (range anti-join per document).
-    "substring_dedup_apply" -> ((s, d) => TextAnalysis.substringDedupApplyFromStarts(
-      Tables.documents(s, d), dupStartsDir(s, d), 8)),
+    "substring_dedup_apply" -> ((s, d) => TextAnalysis.substringDedupApply(
+      Tables.documents(s, d),
+      TextAnalysis.readDupStarts(s, scratchDir(DupStarts, s, d), 8), 8)),
     // ...and the continuous-ingest form: the odd-id batch dedups its
     // windows against the even-id corpus' persisted fingerprint artifact
     // plus itself — the resident corpus is never re-tokenized.
-    "substring_dedup_incremental" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      val dir = scratch("window_hashes", d)(p =>
-        TextAnalysis.writeWindowHashes(docs.filter(col("doc_id") % 2 === 0), p))
-      TextAnalysis.substringDedupIncremental(docs.filter(col("doc_id") % 2 === 1), dir)
-    }),
+    "substring_dedup_incremental" -> ((s, d) =>
+      TextAnalysis.substringDedupIncremental(
+        Tables.documents(s, d).filter(col("doc_id") % 2 === 1),
+        scratchDir(WindowHashes, s, d))),
     // BM25 topical scoring (retrieval-style curation slice); log-free
     // Robertson idf + fixed-order term addition keep doubles engine-exact.
     "bm25_score" -> ((s, d) =>
@@ -946,30 +1023,22 @@ object SparkEntry {
     // itself AND against the persisted corpus key artifact (doc_id < 250)
     // — only md5 keys shuffle; the artifact is the standing seen-set of
     // a continuous ingest.
-    "dedup_incremental" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      val keysDir = scratch("corpus_keys", d)(p =>
-        Similarity.writeCorpusKeys(docs.filter(col("doc_id") < 250), p))
-      Similarity.dedupIncremental(docs.filter(col("doc_id") >= 250), keysDir)
-    }),
+    "dedup_incremental" -> ((s, d) => Similarity.dedupIncremental(
+      Tables.documents(s, d).filter(col("doc_id") >= 250),
+      scratchDir(CorpusKeys, s, d))),
     // Same contract through the Bloom pre-gate: the standing key artifact
     // folds into a fixed-size sketch (Spark's BloomFilterAggregate via
     // graft_bloom_agg); only might_contain survivors pay the exact
     // anti-join. Row-identical to dedup_incremental (shared oracle).
-    "dedup_incremental_bloom" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(s, d)
-      val keysDir = scratch("corpus_keys", d)(p =>
-        Similarity.writeCorpusKeys(docs.filter(col("doc_id") < 250), p))
-      Similarity.dedupIncrementalBloom(docs.filter(col("doc_id") >= 250), keysDir)
-    }),
+    "dedup_incremental_bloom" -> ((s, d) => Similarity.dedupIncrementalBloom(
+      Tables.documents(s, d).filter(col("doc_id") >= 250),
+      scratchDir(CorpusKeys, s, d))),
     // Length-percentile batching buckets (boundaries via the scale-safe
     // range-sort percentiles, broadcast into a codegen bucket map).
     "length_buckets" -> ((s, d) => TextAnalysis.lengthBuckets(
       Tables.documents(s, d),
-      counts = Some(docTokenCounts(s, d)),
-      bounds = Some(docTokenBounds(s, d).select("p25", "p50", "p75")))),
+      counts = Some(scratch(DocTokenCounts, s, d)),
+      bounds = Some(scratch(DocTokenBounds, s, d).select("p25", "p50", "p75")))),
     // Per-language n-gram diversity (type-token ratio over md5 shingle
     // keys) — the repetitiveness metric behind per-language sampling.
     "ngram_diversity" -> ((s, d) => TextAnalysis.ngramDiversity(Tables.documents(s, d))),
@@ -993,8 +1062,8 @@ object SparkEntry {
     // score, broadcast-tiered, aggregated per (lang, tier).
     "quality_tiers" -> ((s, d) => TextAnalysis.qualityTiers(
       Tables.documents(s, d),
-      scores = Some(docQuality(s, d)),
-      tierBounds = Some(docQualityBounds(s, d).select("p25", "p50", "p75")))),
+      scores = Some(scratch(DocQuality, s, d)),
+      tierBounds = Some(scratch(DocQualityBounds, s, d).select("p25", "p50", "p75")))),
     // Per-language top-k vocabulary by document frequency.
     "top_terms" -> ((s, d) => TextAnalysis.topTerms(Tables.documents(s, d))),
     // Exact bigram top-10 via the sketch-then-recount shape: Misra–Gries
@@ -1021,31 +1090,21 @@ object SparkEntry {
     }),
     // LLM tier — near-dup (MinHash signatures + banded-LSH pairs).
     "minhash_sigs" -> ((s, d) => Similarity.minhashSignatures(Tables.documents(s, d))),
-    // Production shape: the hashed-shingle signature table is written to a
-    // (temp) lake artifact and re-read by both band join and verify.
-    // (fresh cleaned-at-exit dir per call: the artifact WRITE is part of
-    // the timed production shape, unlike the reusable scratch artifacts)
-    // r18-opt: reads the session-shared shingle artifact (see
-    // shingleHashesDir) instead of writing its own copy — same pairs,
-    // one corpus tokenize per pass instead of three across the suite.
+    // Production shape: the hashed-shingle signature table is a lake
+    // artifact re-read by both band join and verify. r18-opt: reads the
+    // session-shared shingle artifact (ShingleHashes) instead of writing
+    // its own copy — same pairs, one corpus tokenize per pass instead of
+    // three across the suite.
     "minhash_neardup" -> ((s, d) =>
-      Similarity.minhashNearDupFromArtifact(s, shingleHashesDir(s, d))),
+      Similarity.minhashNearDup(scratch(ShingleHashes, s, d))),
     // Incremental fuzzy dedup: the last 20% of ids (the "tonight's batch")
     // probe a persisted band+hash index built ONCE from the first 80% (the
     // standing corpus, reused across invocations via scratch) — only the
     // batch is tokenized; emitted pairs are exactly the near-dup pairs the
     // batch introduces (new×base and new×new).
-    "minhash_incremental" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{broadcast, expr}
-      val docs = Tables.documents(s, d)
-      val bounds = docs.agg(expr("((max(doc_id) + 1) * 8) DIV 10").as("split"))
-      val idxDir = scratch("minhash_idx", d)(p => Similarity.writeNearDupIndex(
-        docs.crossJoin(broadcast(bounds))
-          .filter(col("doc_id") < col("split")).drop("split"), p))
-      Similarity.minhashNearDupIncremental(
-        docs.crossJoin(broadcast(bounds))
-          .filter(col("doc_id") >= col("split")).drop("split"), idxDir)
-    }),
+    "minhash_incremental" -> ((s, d) => Similarity.minhashNearDupIncremental(
+      idSplit(Tables.documents(s, d), batch = true),
+      scratchDir(MinhashIndex, s, d))),
     // The governed incremental face (r17 verdict #7): same batch/index
     // split as minhash_incremental (the scratch artifact is shared), but
     // the nightly probe first MEASURES the exact refresh's candidate
@@ -1054,28 +1113,20 @@ object SparkEntry {
     // brute restricted pair set; the banded arm is pinned by spec.
     // estimated_pairs is xxhash64-ranked → projected out (the
     // neardup_governed convention).
-    "neardup_governed_incremental" -> ((s, d) => {
-      import org.apache.spark.sql.functions.{broadcast, expr}
-      val docs = Tables.documents(s, d)
-      val bounds = docs.agg(expr("((max(doc_id) + 1) * 8) DIV 10").as("split"))
-      val idxDir = scratch("minhash_idx", d)(p => Similarity.writeNearDupIndex(
-        docs.crossJoin(broadcast(bounds))
-          .filter(col("doc_id") < col("split")).drop("split"), p))
+    "neardup_governed_incremental" -> ((s, d) =>
       Similarity.neardupGovernedIncremental(
-        docs.crossJoin(broadcast(bounds))
-          .filter(col("doc_id") >= col("split")).drop("split"),
-        idxDir, 0.3, maxCandidatePairs = 50000000L)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"), col("method"))
-    }),
+        idSplit(Tables.documents(s, d), batch = true),
+        scratchDir(MinhashIndex, s, d), 0.3, maxCandidatePairs = 50000000L)
+        .frame.select(col("doc_a"), col("doc_b"), col("jaccard"), col("method"))),
     // Near-duplication rolled up to source pairs: the redundancy matrix a
     // mixing pipeline weights sources by (least/greatest-unordered cells).
     // r19-opt: reads the session-shared verified pair artifact
-    // (minhashPairsDir) — the rollup is two id-keyed joins + one tiny
+    // (MinhashPairs) — the rollup is two id-keyed joins + one tiny
     // aggregate over an already-mined pair list, exactly the production
     // consumer shape. Same pairs (parquet round-trip of longs + an
     // untouched double), so the rollup is value-identical.
-    "neardup_by_source" -> ((s, d) => Similarity.nearDupBySourceFromPairs(
-      Tables.documents(s, d), s.read.parquet(minhashPairsDir(s, d)))),
+    "neardup_by_source" -> ((s, d) => Similarity.nearDupBySource(
+      Tables.documents(s, d), scratch(MinhashPairs, s, d))),
     // Bounded brute baseline: doc_id < 500 covers the whole sf0.01 verify
     // corpus (25 real pairs ≥ 0.1) while keeping the all-pairs cost fixed
     // at any SF. (The old bound of 100 made the result vacuously empty —
@@ -1105,7 +1156,7 @@ object SparkEntry {
     // docs, and jaccard_allpairs stays unbounded here because SHINGLE
     // postings are short on any corpus.
     "cosine_allpairs" -> ((s, d) => {
-      val dir = cosineFeatsDir(s, d)
+      val dir = scratchDir(CosineFeats, s, d)
       Similarity.allPairsCosineFromFeatures(
         s.read.parquet(s"$dir/feats"), s.read.parquet(s"$dir/pref"),
         CosineThreshold)
@@ -1116,8 +1167,8 @@ object SparkEntry {
     // Integer-exact end-to-end (no xxhash in the cosine pipeline), so
     // the estimate itself is hash-oracled — same id bound as the miner.
     "cosine_preflight" -> ((s, d) =>
-      Similarity.cosinePreflightFromPrefix(
-        s.read.parquet(s"${cosineFeatsDir(s, d)}/pref"))),
+      Similarity.cosinePreflight(
+        s.read.parquet(s"${scratchDir(CosineFeats, s, d)}/pref"))),
     // Governed-degradation ROUTER (r17 verdict #1): measure the exact
     // join's candidate mass, run exact if it clears the budget, degrade
     // to the banded-LSH miner if not — completing either way, decision
@@ -1131,20 +1182,17 @@ object SparkEntry {
     // the spec pins it instead.
     "neardup_governed" -> ((s, d) => Similarity.neardupGoverned(
       Tables.documents(s, d), 0.5, maxCandidatePairs = 10000000L)
-      .select(org.apache.spark.sql.functions.col("doc_a"),
-        org.apache.spark.sql.functions.col("doc_b"),
-        org.apache.spark.sql.functions.col("jaccard"),
-        org.apache.spark.sql.functions.col("method"))),
+      .frame.select(col("doc_a"), col("doc_b"), col("jaccard"), col("method"))),
     // The cosine twin: id-bounded corpus (the cosine_allpairs bound), so
     // the mass (≤ ~5.1e6 at any SF) always clears 2e7 → exact arm, and
     // BOTH lineage columns are integer-exact → the full frame, estimate
     // included, is hash-oracled. The banded arm is pinned by spec.
     "cosine_governed" -> ((s, d) => {
-      val dir = cosineFeatsDir(s, d)
+      val dir = scratchDir(CosineFeats, s, d)
       Similarity.cosineGovernedFromFeatures(
         Tables.documents(s, d).filter(col("doc_id") < CosineDocBound),
         s.read.parquet(s"$dir/feats"), s.read.parquet(s"$dir/pref"),
-        CosineThreshold, maxCandidatePairs = 20000000L)
+        CosineThreshold, maxCandidatePairs = 20000000L).frame
     }),
     // Asymmetric containment over the same bounded id range: catches the
     // quote-inclusion/superset family whose symmetric Jaccard is tiny.
@@ -1152,8 +1200,8 @@ object SparkEntry {
     // Cross-modal adjudication: the lexical pair list annotated with the
     // corresponding embeddings' cosine (inner join on the shared id
     // space; the <500 id bound sits inside every SF's embedding range).
-    "dedup_ensemble" -> ((s, d) => Similarity.dedupEnsembleFromPairs(
-      s.read.parquet(ngramPairsDir(s, d)), Tables.embeddings(s, d))),
+    "dedup_ensemble" -> ((s, d) => Similarity.dedupEnsemble(
+      scratch(NgramPairs, s, d), Tables.embeddings(s, d))),
     "simhash" -> ((s, d) => Similarity.simhash(Tables.documents(s, d))),
     // Engine-agnostic md5-keyed signature twins — fully oracle-able,
     // unlike the xxhash64-seeded fast paths above.
@@ -1195,11 +1243,8 @@ object SparkEntry {
     // recall@10 >= 0.9 on the weakly-clustered sf0.1 corpus where the
     // r14 fixed radius-1 route measured 0.8 (ANN_RECALL_r15
     // ann_lsh_curve documents the recall-vs-budget trade).
-    "ann_lsh" -> ((s, d) => {
-      val layout = scratch("ann_layout", d)(p =>
-        Similarity.writeAnnLayout(Tables.embeddings(s, d), p, nPlanes = 6))
-      Similarity.annLshBucketedAdaptive(s, layout, 0L, 10)
-    }),
+    "ann_lsh" -> ((s, d) =>
+      Similarity.annLshBucketedAdaptive(s, scratchDir(AnnLayout, s, d), 0L, 10)),
     // The BUDGET-CONSTRAINED contrast point on the committed
     // recall-vs-budget curve (ANN_RECALL ann_lsh_curve): same layout,
     // same query-directed probe, at a 0.25 scan budget — documented
@@ -1209,11 +1254,8 @@ object SparkEntry {
     // latency-bound caller actually trades away; it still reuses the
     // session-cached layout ann_lsh built, so its wall time is the
     // steady-state probe latency at the tighter budget.
-    "ann_probe" -> ((s, d) => {
-      val layout = scratch("ann_layout", d)(p =>
-        Similarity.writeAnnLayout(Tables.embeddings(s, d), p, nPlanes = 6))
-      Similarity.annLshBucketedAdaptive(s, layout, 0L, 10, scanBudget = 0.25)
-    }),
+    "ann_probe" -> ((s, d) => Similarity.annLshBucketedAdaptive(
+      s, scratchDir(AnnLayout, s, d), 0L, 10, scanBudget = 0.25)),
     // IVF (coarse-quantizer) ANN — the data-ADAPTIVE counterpart to the
     // hyperplane layout: deterministic k-means cells, cell-partitioned
     // layout + persisted centroid artifact, probe = driver-side ADAPTIVE
@@ -1221,30 +1263,12 @@ object SparkEntry {
     // capped at a 50% scan budget — narrow on separated corpora, wide
     // exactly when narrow loses recall) → directory-pruned cosine top-k.
     // Rows-only like ann_lsh (plan + exactness contracts in IvfSpec).
-    "ann_ivf" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val layout = scratch("ivf_layout", d)(p =>
-        Ivf.writeIvfLayout(Tables.embeddings(s, d), p))
-      val cents = Ivf.readCentroids(s, layout)
-      val q = s.read.parquet(layout).filter(col("vec_id") === 0L)
-        .select(col("embedding")).head()
-        .getAs[scala.collection.Seq[Float]](0).toArray
-      Ivf.ivfProbeAdaptive(s, layout, cents, q, 10, excludeId = Some(0L))
-    }),
+    "ann_ivf" -> ivfProbe _,
     // Steady-state IVF probe against the session-cached layout (bench
     // runs alphabetically: ann_ivf has always built the layout first) —
     // the figure that matters once the layout is a standing artifact,
     // mirroring the ann_lsh / ann_probe split.
-    "ann_ivf_probe" -> ((s, d) => {
-      import org.apache.spark.sql.functions.col
-      val layout = scratch("ivf_layout", d)(p =>
-        Ivf.writeIvfLayout(Tables.embeddings(s, d), p))
-      val cents = Ivf.readCentroids(s, layout)
-      val q = s.read.parquet(layout).filter(col("vec_id") === 0L)
-        .select(col("embedding")).head()
-        .getAs[scala.collection.Seq[Float]](0).toArray
-      Ivf.ivfProbeAdaptive(s, layout, cents, q, 10, excludeId = Some(0L))
-    }),
+    "ann_ivf_probe" -> ivfProbe _,
     // All-corpus embedding near-dup pair mining. The PRIMARY registration
     // is the BANDED (multi-table) LSH form — table count solved from the
     // LSH bound for recall >= 0.9 at the threshold (measured 0.93 at
@@ -1275,11 +1299,11 @@ object SparkEntry {
     // SemDeDup over the same deterministic cells: within-cell cosine
     // pairs >= 0.4, greedy-by-id removal list — fully hash-oracle-able.
     // r19-opt: all four flat-tier queries read the session-shared
-    // assignment artifact (semanticAssignDir) instead of each rebuilding
+    // assignment artifact (SemanticAssign) instead of each rebuilding
     // the quantize→seed→assign prelude — values identical (BIGINT
     // integer-exact assignment round-trips through parquet unchanged).
-    "semantic_dedup" -> ((s, d) => Ivf.semanticDedupFromAssign(
-      Tables.embeddings(s, d), s.read.parquet(semanticAssignDir(s, d)), 0.4)),
+    "semantic_dedup" -> ((s, d) => Ivf.semanticDedup(
+      Tables.embeddings(s, d), scratch(SemanticAssign, s, d), 0.4)),
     // Governed router for the semantic tier (the neardup_governed
     // pattern on SemDeDup): measure the flat form's within-cell mass,
     // run flat nlist=8 when it clears 1e7 (every oracle SF: ~2.5e3 at
@@ -1287,23 +1311,23 @@ object SparkEntry {
     // integer-exact estimate), degrade to the hier form at the decade
     // (sf1-shape 20k vectors → ~2.5e7 → hier). Both arms project the
     // shared (vec_id, dup_of, max_cosine) removal-decision schema.
-    "semantic_governed" -> ((s, d) => Ivf.semanticDedupGovernedFromAssign(
-      Tables.embeddings(s, d), s.read.parquet(semanticAssignDir(s, d)), 0.4,
-      maxPairs = 10000000L, coarse = 4, fine = 2)),
+    "semantic_governed" -> ((s, d) => Ivf.semanticDedupGoverned(
+      Tables.embeddings(s, d), scratch(SemanticAssign, s, d), 0.4,
+      maxPairs = 10000000L, coarse = 4, fine = 2).frame),
     // Governance twin of the row above (the L151 preflight pattern on
     // the semantic tier): the exact within-cell pair mass Σ C(cnt,2)
     // over the same md5-seeded integer-exact assignment — the number
     // semanticDedup's opt-in maxPairs budget refuses on. BIGINT
     // end-to-end below the 2^20 quantization, so hash-oracled.
     "semantic_preflight" -> ((s, d) =>
-      Ivf.semanticPreflightFromAssign(s.read.parquet(semanticAssignDir(s, d)))),
+      Ivf.semanticPreflight(scratch(SemanticAssign, s, d))),
     // Two-level SemDeDup (the measured scale fix: assignment n·2√nlist
     // instead of n·nlist): 4 coarse cells × 2 per-cell fine seeds.
     "semantic_dedup_hier" -> ((s, d) => Ivf.semanticDedupHier(Tables.embeddings(s, d), 0.4, 4, 2)),
     // SemDeDup neighborhood graph -> connected components (the
     // Clustering terminal stage the LSH lexical path also ends on).
-    "semantic_clusters" -> ((s, d) => Ivf.semanticClustersFromAssign(
-      Tables.embeddings(s, d), s.read.parquet(semanticAssignDir(s, d)), 0.4)),
+    "semantic_clusters" -> ((s, d) => Ivf.semanticClusters(
+      Tables.embeddings(s, d), scratch(SemanticAssign, s, d), 0.4)),
     // Size-capped SemDeDup: leaves over cap=50 split by a content-hash
     // salt (exact dups always co-locate) — the worst-case skew guard;
     // cap deliberately small here so the salting is exercised in-gate.
@@ -1352,17 +1376,18 @@ object SparkEntry {
     // Fuzzy-dedup terminal stage: connected components over the exact
     // Jaccard pair list → canonical doc + keep/drop verdict per member.
     // The three governance queries share ONE persisted label artifact
-    // (ngramCcLabels): the closure runs once, each consumer is a rollup.
+    // (NgramCcLabels): the closure runs once, each consumer is a rollup.
     "dedup_clusters" -> ((s, d) =>
-      Clustering.dedupClustersFromLabels(ngramCcLabels(s, d))),
+      Clustering.dedupClusters(scratch(NgramCcLabels, s, d))),
     // Dedup governance: component-size histogram of the same near-dup
     // graph — the look-before-you-delete removal budget per size class.
     "cluster_size_hist" -> ((s, d) =>
-      Clustering.clusterSizeHistogramFromLabels(ngramCcLabels(s, d))),
+      Clustering.clusterSizeHistogram(scratch(NgramCcLabels, s, d))),
     // Quality-aware terminal stage: same components, survivor chosen by
     // quality score (ties -> lowest id) instead of min id.
     "cluster_keep_best" -> ((s, d) =>
-      Clustering.clusterKeepBestFromLabels(ngramCcLabels(s, d), docQuality(s, d))),
+      Clustering.clusterKeepBest(scratch(NgramCcLabels, s, d),
+        scratch(DocQuality, s, d))),
     // PRODUCTION fuzzy-dedup compose: the closure consuming the LSH
     // miner's pair list (persisted shingle artifact → band join → exact
     // verify at j ≥ 0.3) instead of the bounded brute baseline above —
@@ -1372,21 +1397,27 @@ object SparkEntry {
     // banding, recall 1 for j ≥ threshold — pinned in SimilaritySpec), so
     // the two miners' pair lists coincide and the verdicts hash-match.
     // r19-opt: the closure consumes the session-shared verified pair
-    // artifact (minhashPairsDir) — this query pays the mine on the first
+    // artifact (MinhashPairs) — this query pays the mine on the first
     // pass (bench order) and times closure + artifact build; the SAME
     // pair list feeds neardup_by_source without a second band join.
     "dedup_clusters_lsh" -> ((s, d) => Clustering.dedupClusters(
-      s.read.parquet(minhashPairsDir(s, d)))),
+      Clustering.connectedComponents(scratch(MinhashPairs, s, d),
+        "doc_a", "doc_b"))),
     // Bounded-id-window twin of the LSH closure: the identical compose
     // (persisted shingle artifact → band join → exact verify →
     // components) over doc_id < 1500, so the DuckDB all-pairs closure
     // oracle stays feasible at sf0.1 — the unbounded twin above is only
     // oracle-checkable at the sf0.01 gate scale (12.5M pairs of ~100-hash
-    // lists at sf0.1 is hours in DuckDB; 1.1M is not).
-    "dedup_clusters_lsh_window" -> ((s, d) => Clustering.dedupClusters(
-      Similarity.minhashNearDupPersisted(
-        Tables.documents(s, d).filter(col("doc_id") < 1500),
-        cleanedTempDir("minhash_cc_w") + "/shingle_hashes"))),
+    // lists at sf0.1 is hours in DuckDB; 1.1M is not). The shingle
+    // artifact is written per call (fresh dir, removed at JVM exit): its
+    // WRITE is part of this timed production shape.
+    "dedup_clusters_lsh_window" -> ((s, d) => {
+      val hashes = s"${ScratchDirs.create("minhash_cc_w")}/shingle_hashes"
+      Similarity.shingleHashes(Tables.documents(s, d).filter(col("doc_id") < 1500))
+        .write.parquet(hashes)
+      Clustering.dedupClusters(Clustering.connectedComponents(
+        Similarity.minhashNearDup(s.read.parquet(hashes)), "doc_a", "doc_b"))
+    }),
     // Z-order clustered layout roundtrip: events written clustered by the
     // Morton interleave of (value, user_id), then a 2-D box query over
     // the layout. The RESULT is layout-independent (the oracle filters
@@ -1394,11 +1425,7 @@ object SparkEntry {
     // files — is pinned in LayoutSpec.
     "zorder_scan" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val layout = scratch("zorder_events", d)(p =>
-        io.Layout.writeZOrdered(
-          ev(s, d).withColumn("t_us", unix_micros(col("ts"))).drop("ts"),
-          Seq("value", "user_id"), bits = 8, nFiles = 32, dir = p))
-      s.read.parquet(layout)
+      scratch(ZOrderEvents, s, d)
         .filter(col("value").between(95.0, 105.0) &&
           col("user_id").between(30L, 60L))
         .groupBy(col("event_type"))

@@ -258,7 +258,8 @@ object Stress {
     val tris = spark.range(50000L)
       .select((col("id") * 10 + 5).as("doc_a"), (col("id") * 10 + 6).as("doc_b"))
     time("dedup_clusters_200k")(
-      ops.Clustering.dedupClusters(chains.unionByName(tris)))
+      ops.Clustering.dedupClusters(ops.Clustering.connectedComponents(
+        chains.unionByName(tris), "doc_a", "doc_b")))
 
     // Heavy-hitter tier at 4× the tick volume: 20M tokens, ~1M-word tail
     // vocabulary with 100 head words holding ~30% of the mass — the

@@ -134,6 +134,12 @@ object StressScaling {
       try body finally spark.sparkContext.setCheckpointDir(null)
     }
 
+    // the persisted minhash shape: shingle artifact written, then mined
+    def persistedNearDup(docs: DataFrame, dir: String): DataFrame = {
+      ops.Similarity.shingleHashes(docs).write.mode("overwrite").parquet(dir)
+      ops.Similarity.minhashNearDup(spark.read.parquet(dir))
+    }
+
     def timed(f: => DataFrame): Double = {
       val t0 = System.nanoTime()
       f.write.format("noop").mode("overwrite").save()
@@ -179,11 +185,11 @@ object StressScaling {
       lazy val d = docs(spark, nDocs).localCheckpoint() // materialized like a real table scan
       if (want("minhash_neardup"))
         record("minhash_neardup", scale, nDocs, timed(
-          ops.Similarity.minhashNearDupPersisted(d, tmp("mh") )))
+          persistedNearDup(d, tmp("mh"))))
       if (want("dedup_clusters_lsh"))
         record("dedup_clusters_lsh", scale, nDocs, timed(
-          ops.Clustering.dedupClusters(
-            ops.Similarity.minhashNearDupPersisted(d, tmp("mhcc")))))
+          ops.Clustering.dedupClusters(ops.Clustering.connectedComponents(
+            persistedNearDup(d, tmp("mhcc")), "doc_a", "doc_b"))))
       if (want("curation_full"))
         record("curation_full", scale, nDocs, timed(
           ops.Pipeline.curationFull(d)))
@@ -191,7 +197,7 @@ object StressScaling {
       // through one hash agg + one doc-partitioned lag — expected linear.
       if (want("substring_dedup"))
         record("substring_dedup", scale, nDocs, timed(
-          ops.TextAnalysis.substringDedup(d, 8)))
+          ops.TextAnalysis.substringDedup(d, ops.TextAnalysis.dupStarts(d, 8), 8)))
       // Contrast arm: the single-pass window verdict on the same corpus
       // (fastest when no key is hot — the number the agg form must stay
       // within band of on skew-FREE data).
@@ -204,7 +210,7 @@ object StressScaling {
       lazy val dh = docsHotKey(spark, nDocs).localCheckpoint()
       if (want("substring_dedup_hotkey"))
         record("substring_dedup_hotkey", scale, nDocs, timed(
-          ops.TextAnalysis.substringDedup(dh, 8)))
+          ops.TextAnalysis.substringDedup(dh, ops.TextAnalysis.dupStarts(dh, 8), 8)))
       if (want("substring_dedup_hotkey_window"))
         record("substring_dedup_hotkey_window", scale, nDocs, timed(
           ops.TextAnalysis.substringDedupWindowVerdict(dh, 8)))
@@ -284,7 +290,7 @@ object StressScaling {
           val budget = sys.env.getOrElse(
             "SPARK_GRAFT_STRESS_COSINE_BUDGET", "100000000").toLong
           val t0 = System.nanoTime()
-          val g = ops.Similarity.cosineGovernedResult(d, 0.85,
+          val g = ops.Similarity.cosineGoverned(d, 0.85,
             maxCandidatePairs = budget)
           g.pairs.write.format("noop").mode("overwrite").save()
           val sec = (System.nanoTime() - t0) / 1e9
@@ -345,7 +351,7 @@ object StressScaling {
       val nlist = math.max(8L, nVecs / 1250L).toInt
       if (scale <= 10L && want("semantic_dedup_flat"))
         record("semantic_dedup_flat", scale, nVecs, timed(
-          ops.Ivf.semanticDedup(emb, 0.95, nlist)))
+          ops.Ivf.semanticDedup(emb, ops.Ivf.semanticAssign(emb, nlist), 0.95)))
       val side = math.max(2, math.ceil(math.sqrt(nlist.toDouble)).toInt)
       // Diagnostic stage split: the two-level cell ASSIGNMENT alone —
       // hier minus this is the within-leaf m² pair stage, so a
@@ -383,13 +389,14 @@ object StressScaling {
       // mass aggregate at every scale; expected ~linear in n.
       if (want("semantic_preflight_estimate"))
         record("semantic_preflight_estimate", scale, nVecs, timed(
-          ops.Ivf.semanticPreflight(emb, 8)))
+          ops.Ivf.semanticPreflight(ops.Ivf.semanticAssign(emb, 8))))
       if (want("semantic_preflight"))
         record("semantic_preflight", scale, nVecs, {
           val budget = sys.env.getOrElse(
             "SPARK_GRAFT_STRESS_SEMANTIC_BUDGET", "1000000000").toLong
           val t0 = System.nanoTime()
-          try ops.Ivf.semanticDedup(emb, 0.95, 8, maxPairs = budget)
+          try ops.Ivf.semanticDedup(emb, ops.Ivf.semanticAssign(emb, 8), 0.95,
+              maxPairs = budget)
             .write.format("noop").mode("overwrite").save()
           catch {
             case e: ops.CandidateMassExceeded => println(

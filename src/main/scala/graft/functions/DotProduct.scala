@@ -833,7 +833,7 @@ object GraftFunctions {
   // literals identically (a BIGINT literal like 3L once raised an opaque
   // ClassCastException from the extensions path where the registry path
   // gave litInt's descriptive error)
-  private[functions] val firstmatchBuilder: Seq[Expression] => Expression = {
+  private val firstmatchBuilder: Seq[Expression] => Expression = {
     case Seq(a, b, bits, n) =>
       FirstMatchedGroup(a, b, litInt(bits, "groupBits"), litInt(n, "nGroups"))
     case other => throw new IllegalArgumentException(
@@ -854,7 +854,7 @@ object GraftFunctions {
       s"graft_packsig: planes must be an ARRAY<ARRAY<DOUBLE>> literal, got $other")
   }
 
-  private[functions] val packsigBuilder: Seq[Expression] => Expression = {
+  private val packsigBuilder: Seq[Expression] => Expression = {
     case Seq(emb, pl, bits, n) =>
       PackedSignBits(emb, litPlanes(pl),
         litInt(bits, "planesPerTable"), litInt(n, "nTables"))
@@ -946,101 +946,38 @@ object GraftFunctions {
       s"graft_might_contain takes exactly 2 arguments, got ${other.length}")
   }
 
+  /** The ONE list of graft's native functions — (SQL name, info,
+    * builder) — that both [[register]] and [[GraftExtensions]] install.
+    */
+  private[functions] val Natives: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", dotInfo, dotBuilder),
+    ("graft_l2q", l2qInfo, l2qBuilder),
+    ("graft_ldot", ldotInfo, ldotBuilder),
+    ("graft_fddot", fddotInfo, fddotBuilder),
+    ("graft_firstmatch", firstmatchInfo, firstmatchBuilder),
+    ("graft_packsig", packsigInfo, packsigBuilder),
+    ("graft_md5pre", md5preInfo, md5preBuilder),
+    ("graft_md5u32", md5u32Info, md5u32Builder),
+    ("graft_sdot", sdotInfo, sdotBuilder),
+    ("graft_entropy", entropyInfo, entropyBuilder),
+    ("graft_normalize", normalizeInfo, normalizeBuilder),
+    ("graft_bloom_agg", bloomAggInfo, bloomAggBuilder),
+    ("graft_might_contain", mightContainInfo, mightContainBuilder))
+
   /** Idempotently register graft functions into an existing session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_dot"), dotInfo, dotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_l2q"), l2qInfo, l2qBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_ldot"), ldotInfo, ldotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_fddot"), fddotInfo, fddotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_firstmatch"), firstmatchInfo, firstmatchBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_packsig"), packsigInfo, packsigBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_md5pre"), md5preInfo, md5preBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_md5u32"), md5u32Info, md5u32Builder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sdot"), sdotInfo, sdotBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_entropy"), entropyInfo, entropyBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_normalize"), normalizeInfo, normalizeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"), bloomAggInfo, bloomAggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_might_contain"), mightContainInfo, mightContainBuilder)
-  }
+  def register(spark: SparkSession): Unit =
+    Natives.foreach { case (name, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(
+        FunctionIdentifier(name), info, builder)
+    }
 }
 
 /** `spark.sql.extensions`-style injection point:
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductFloat].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProductFloat(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2q"),
-      new ExpressionInfo(classOf[L2SquaredLong].getName, "graft_l2q"),
-      (exprs: Seq[Expression]) => L2SquaredLong(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ldot"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "graft_ldot"),
-      (exprs: Seq[Expression]) => DotProductLong(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fddot"),
-      new ExpressionInfo(classOf[DotProductFloatDouble].getName, "graft_fddot"),
-      (exprs: Seq[Expression]) => DotProductFloatDouble(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_firstmatch"),
-      new ExpressionInfo(classOf[FirstMatchedGroup].getName, "graft_firstmatch"),
-      GraftFunctions.firstmatchBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_packsig"),
-      new ExpressionInfo(classOf[PackedSignBits].getName, "graft_packsig"),
-      GraftFunctions.packsigBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5pre"),
-      new ExpressionInfo(classOf[Md5Prefix].getName, "graft_md5pre"),
-      (exprs: Seq[Expression]) => Md5Prefix(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5u32"),
-      new ExpressionInfo(classOf[Md5Uint32].getName, "graft_md5u32"),
-      (exprs: Seq[Expression]) => Md5Uint32(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sdot"),
-      new ExpressionInfo(classOf[SparseDotSorted].getName, "graft_sdot"),
-      (exprs: Seq[Expression]) => SparseDotSorted(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[CharEntropyExpr].getName, "graft_entropy"),
-      (exprs: Seq[Expression]) => CharEntropyExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[NormalizeTextExpr].getName, "graft_normalize"),
-      (exprs: Seq[Expression]) => NormalizeTextExpr(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.Natives.foreach { case (name, info, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), info, builder))
+    }
 }

@@ -45,10 +45,6 @@ object Sources {
     df.toDF(names: _*)
   }
 
-  /** S5: parquet scan with an enforced schema (`process_data.py:36`). */
-  def readParquet(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(path)
-
   /** S1 (driver-side edge step): extract every member of a local ZIP
     * archive into `outDir`, returning the extracted paths — the unpack
     * half of `download_and_extract_binance_data`

@@ -25,7 +25,6 @@ object Tables {
   def region(s: SparkSession, dir: String): DataFrame    = table(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame    = table(s, dir, "nation")
   def customer(s: SparkSession, dir: String): DataFrame  = table(s, dir, "customer")
-  def supplier(s: SparkSession, dir: String): DataFrame  = table(s, dir, "supplier")
   def part(s: SparkSession, dir: String): DataFrame      = table(s, dir, "part")
   def orders(s: SparkSession, dir: String): DataFrame    = table(s, dir, "orders")
   def lineitem(s: SparkSession, dir: String): DataFrame  = table(s, dir, "lineitem")

@@ -184,26 +184,23 @@ object Clustering {
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
-  /** Fuzzy-dedup verdicts from a similarity pair list: each paired doc's
-    * component, the component size, and the keep/drop flag (the lowest
-    * doc_id in a component is the canonical survivor — deterministic and
-    * engine-agnostic, no tie to arrival order). Docs in no pair are
-    * implicitly kept and not listed (at 100 TB that's the overwhelming
-    * majority — emitting only the contested rows keeps the verdict table
-    * proportional to the near-dup population, not the corpus).
+  /** Fuzzy-dedup verdicts over a similarity graph's component labels
+    * (id, cluster_id) — [[connectedComponents]] of a pair list: each
+    * paired doc's component, the component size, and the keep/drop flag
+    * (the lowest doc_id in a component is the canonical survivor —
+    * deterministic and engine-agnostic, no tie to arrival order). Docs in
+    * no pair are implicitly kept and not listed (at 100 TB that's the
+    * overwhelming majority — emitting only the contested rows keeps the
+    * verdict table proportional to the near-dup population, not the
+    * corpus).
+    *
+    * The governance consumers (verdicts here, [[clusterSizeHistogram]],
+    * [[clusterKeepBest]]) take LABELS, not pairs — the production split:
+    * the O(log n)-round closure runs once and its labels persist as a
+    * lake artifact every consumer re-reads; an in-memory caller runs the
+    * closure first.
     */
-  def dedupClusters(pairs: DataFrame,
-                    aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame =
-    dedupClustersFromLabels(connectedComponents(pairs, aCol, bCol))
-
-  /** [[dedupClusters]] over an ALREADY-COMPUTED label table (id,
-    * cluster_id) — the production split: the O(log n)-round closure runs
-    * once and its labels persist as a lake artifact; every governance
-    * consumer (verdicts here, [[clusterSizeHistogramFromLabels]],
-    * [[clusterKeepBestFromLabels]]) re-reads the labels instead of
-    * re-deriving the components from the pair list.
-    */
-  def dedupClustersFromLabels(labels: DataFrame): DataFrame = {
+  def dedupClusters(labels: DataFrame): DataFrame = {
     val sizes = labels.groupBy(col("cluster_id").as("cid"))
       .agg(count(lit(1)).as("cluster_size"))
     // un-hinted: cluster count tracks the near-dup population, which can
@@ -222,24 +219,17 @@ object Clustering {
     * the best one (the [[graft.ops.Similarity.dedupKeepBest]] policy
     * lifted from exact-key groups to fuzzy components).
     *
-    * `scored` maps id → score; only ids appearing in a pair are looked up
-    * (the join is component-table-sized, not corpus-sized). The winner is
-    * one max(struct(score, −id)) per component — same engine-agnostic
-    * total order as dedupKeepBest, no window sort. Docs in no pair are
-    * implicitly kept and not listed, as in [[dedupClusters]].
+    * `comp` is the component label table (id, cluster_id) — see
+    * [[dedupClusters]]. `scored` maps id → score; only ids appearing in a
+    * pair are looked up (the join is component-table-sized, not
+    * corpus-sized). The winner is one max(struct(score, −id)) per
+    * component — same engine-agnostic total order as dedupKeepBest, no
+    * window sort. Docs in no pair are implicitly kept and not listed, as
+    * in [[dedupClusters]].
     */
-  def clusterKeepBest(pairs: DataFrame, scored: DataFrame,
-                      idCol: String = "doc_id", scoreCol: String = "quality",
-                      aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame =
-    clusterKeepBestFromLabels(connectedComponents(pairs, aCol, bCol),
-      scored, idCol, scoreCol)
-
-  /** [[clusterKeepBest]] over a persisted label table — see
-    * [[dedupClustersFromLabels]] for the artifact split rationale.
-    */
-  def clusterKeepBestFromLabels(comp: DataFrame, scored: DataFrame,
-                                idCol: String = "doc_id",
-                                scoreCol: String = "quality"): DataFrame = {
+  def clusterKeepBest(comp: DataFrame, scored: DataFrame,
+                      idCol: String = "doc_id",
+                      scoreCol: String = "quality"): DataFrame = {
     val withScore = comp.join(
       scored.select(col(idCol).as("id"), col(scoreCol).as("_score")), Seq("id"))
     val winners = withScore.groupBy(col("cluster_id").as("cid"))
@@ -260,18 +250,12 @@ object Clustering {
     * usually means the similarity threshold is too loose — this is the
     * number to look at BEFORE deleting (size·clusters − clusters) docs.
     *
-    * Shape: [[connectedComponents]]'s output aggregates twice — per
-    * component (near-dup-population-sized) then per SIZE (a handful of
-    * rows). Nothing corpus-sized shuffles.
+    * Shape: the component labels ([[connectedComponents]]' output — see
+    * [[dedupClusters]]) aggregate twice — per component
+    * (near-dup-population-sized) then per SIZE (a handful of rows).
+    * Nothing corpus-sized shuffles.
     */
-  def clusterSizeHistogram(pairs: DataFrame,
-                           aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame =
-    clusterSizeHistogramFromLabels(connectedComponents(pairs, aCol, bCol))
-
-  /** [[clusterSizeHistogram]] over a persisted label table — see
-    * [[dedupClustersFromLabels]] for the artifact split rationale.
-    */
-  def clusterSizeHistogramFromLabels(labels: DataFrame): DataFrame =
+  def clusterSizeHistogram(labels: DataFrame): DataFrame =
     labels
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size"))

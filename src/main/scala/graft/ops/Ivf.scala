@@ -300,34 +300,6 @@ object Ivf {
       .limit(k)
   }
 
-  /** SemDeDup semantic deduplication (Abbas et al., "SemDeDup: Data-
-    * efficient learning at web-scale through semantic deduplication",
-    * 2023): cluster the embedding space, then prune near-identical
-    * vectors WITHIN each cluster — the within-cell m² pairing makes
-    * web-scale semantic dedup tractable where corpus-wide all-pairs
-    * cosine is not, at the cost of missing duplicates the clustering
-    * splits across cells (the paper's accepted approximation).
-    *
-    * This form is deterministic end-to-end so the whole path is
-    * hash-oracle-able (the md5-twin discipline of [[annIvfMd5]], whose
-    * integer-exact cell machinery it shares): md5-seeded cells, BIGINT
-    * quantized assignment, then exact double cosine within cells. The
-    * dedup contract is greedy-by-id: a vector is REMOVED iff some
-    * lower-id vector in its cell has cosine ≥ `threshold` with it
-    * (chains prune transitively: in a~b~c with a≁c, both b and c go —
-    * each duplicates a lower-id survivor-or-casualty, matching the
-    * paper's "keep one representative per near-dup neighborhood").
-    * Returns the removal list (vec_id, cid, dup_of = lowest duplicated
-    * partner, max_cosine = tightest duplication), ready to anti-join
-    * against the corpus.
-    *
-    * Shape at 100 TB: assignment is the one broadcast-join pass; the
-    * pair join is an EQUI-join on cid (sort-merge, never a cartesian)
-    * whose per-cell m² cost is bounded by sizing nlist ∝ n/target —
-    * the same knob [[Similarity.embNearDupAuto]] documents — and the
-    * embedding rides into exactly one join, with only (ids, cid,
-    * cosine) surviving the pairing.
-    */
   /** The SemDeDup candidate-pair mass as a ONE-ROW frame
     * `(estimated_pairs)` — Σ_cid C(cnt, 2) over the md5-seeded
     * integer-exact cell assignment: exactly the unordered pairs the
@@ -338,9 +310,11 @@ object Ivf {
     * arithmetic (the [[annIvfMd5]] machinery), so the estimate is
     * engine-exact and oracle-able.
     *
-    * The regime this exists for: [[semanticDedup]] with an UNDERSIZED
-    * `nlist` (the paper form's documented trap — a default-8 call on a
-    * million-vector corpus puts ~n/8 vectors in each cell, ~6×10¹⁰
+    * `assigned` is a [[semanticAssign]] frame (in memory, or the
+    * persisted artifact). The regime this exists for: [[semanticDedup]]
+    * with an UNDERSIZED `nlist` (the paper form's documented trap — a
+    * default-8 call on a million-vector corpus puts ~n/8 vectors in each
+    * cell, ~6×10¹⁰
     * pairs) pays a pairing that grows ~n²/nlist while the assignment
     * the preflight needs stays ~n·nlist — the refusal is cheap exactly
     * where the launch is fatal. The answer to a refusal is nlist ∝ n
@@ -348,11 +322,7 @@ object Ivf {
     * capped/hier production forms, whose per-task work is bounded by
     * construction.
     */
-  def semanticPreflight(embeddings: DataFrame, nlist: Int = 8): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val quant = Checkpoints.stable(
-      quantized(embeddings).select(col("vec_id"), col("qe")))
-    val assigned = md5CellAssign(quant, md5SeedCells(quant, nlist))
+  def semanticPreflight(assigned: DataFrame): DataFrame =
     // cross-cell sum in DECIMAL(38,0) so an enormous mass can never
     // wrap a BIGINT silently (ANSI off; r17 ADVICE #1 discipline); the
     // published column folds back to BIGINT — by the time a corpus
@@ -361,7 +331,6 @@ object Ivf {
       .agg(coalesce(sum(col("c").cast("decimal(38,0)") * (col("c") - lit(1L))),
         lit(java.math.BigDecimal.ZERO)).as("m2"))
       .selectExpr("CAST(m2 DIV 2 AS BIGINT) AS estimated_pairs")
-  }
 
   /** Σ_cid C(size, 2) over a cell-assignment frame — the within-cell
     * pair mass the SemDeDup m² phase will pay, as ONE driver-side Long.
@@ -383,134 +352,98 @@ object Ivf {
     }
   }
 
-  /** Persist the flat md5-seeded cell assignment (aid, cid) as a parquet
-    * artifact — the shared prelude of the flat SemDeDup tier (r19-opt).
-    * Four registered consumers (semantic_dedup, semantic_clusters,
-    * semantic_governed, semantic_preflight) run the SAME
-    * quantize→seed→assign subtree at nlist=8; before the split each
-    * rebuilt it per query. Integer-exact end-to-end (BIGINT quantized
-    * argmin, md5 seeds), so the parquet round-trip changes no value and
-    * every consumer's oracle is untouched. Keyed fan-out by `aid` (the
-    * writeNearDupIndex discipline): consumers join embeddings on
-    * vec_id = aid, and a single-file artifact would start every
-    * consumer from a one-task scan.
+  /** The flat md5-seeded cell assignment (aid, cid) — the builder of the
+    * flat SemDeDup tier's materialized input. Four registered consumers
+    * (semantic_dedup, semantic_clusters, semantic_governed,
+    * semantic_preflight) read ONE persisted copy at nlist=8 (r19-opt);
+    * before the split each rebuilt it per query. Integer-exact
+    * end-to-end (BIGINT quantized argmin, md5 seeds), so the parquet
+    * round-trip changes no value and every consumer's oracle is
+    * untouched. The assignment is lazy over a materialized (vec_id, qe)
+    * cut: without it the derived transform re-evaluates inside every
+    * consumer — seed selection AND each of the ×nlist assignment copies
+    * (see [[semanticDedupHierCells]]). Releasing the returned frame's
+    * cuts ([[Checkpoints.release]]) drops that one.
     */
-  def writeSemanticAssign(embeddings: DataFrame, dir: String,
-                          nlist: Int = 8): Unit = {
+  def semanticAssign(embeddings: DataFrame, nlist: Int = 8): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
     val quant = Checkpoints.stable(
       quantized(embeddings).select(col("vec_id"), col("qe")))
     md5CellAssign(quant, md5SeedCells(quant, nlist))
-      .repartition(embeddings.sparkSession.sparkContext.defaultParallelism,
-        col("aid"))
-      .write.mode("overwrite").parquet(dir)
-    // the quant cut is dead once the assignment persists
-    Checkpoints.release(quant)
   }
 
-  /** [[semanticDedup]] (budget-free form) over an already-built
-    * assignment artifact — the consumer face of [[writeSemanticAssign]].
-    */
-  def semanticDedupFromAssign(embeddings: DataFrame, assigned: DataFrame,
-                              threshold: Double): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val cells = embeddings
+  /** (vec_id, cid, embedding) rows: the embeddings joined to their cell. */
+  private def assignedCells(embeddings: DataFrame,
+                            assigned: DataFrame): DataFrame =
+    embeddings
       .join(assigned, col("vec_id") === col("aid"))
       .select(col("vec_id"), col("cid"), col("embedding"))
-    greedyPairRemoval(cells, Seq("cid"), "cid", threshold)
-  }
 
-  /** [[semanticClusters]] over an already-built assignment artifact. */
-  def semanticClustersFromAssign(embeddings: DataFrame, assigned: DataFrame,
-                                 threshold: Double): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val cells = embeddings
-      .join(assigned, col("vec_id") === col("aid"))
-      .select(col("vec_id"), col("cid"), col("embedding"))
-    graft.ops.Clustering
-      .dedupClusters(cellPairs(cells, Seq("cid"), "cid", threshold),
-        "vec_a", "vec_b")
-      .withColumnRenamed("doc_id", "vec_id")
-  }
-
-  /** [[semanticPreflight]] over an already-built assignment artifact —
-    * one hash aggregate, the estimator face of the split.
+  /** SemDeDup semantic deduplication (Abbas et al., "SemDeDup: Data-
+    * efficient learning at web-scale through semantic deduplication",
+    * 2023): cluster the embedding space, then prune near-identical
+    * vectors WITHIN each cluster — the within-cell m² pairing makes
+    * web-scale semantic dedup tractable where corpus-wide all-pairs
+    * cosine is not, at the cost of missing duplicates the clustering
+    * splits across cells (the paper's accepted approximation).
+    *
+    * This form is deterministic end-to-end so the whole path is
+    * hash-oracle-able (the md5-twin discipline of [[annIvfMd5]], whose
+    * integer-exact cell machinery it shares): md5-seeded cells, BIGINT
+    * quantized assignment, then exact double cosine within cells. The
+    * dedup contract is greedy-by-id: a vector is REMOVED iff some
+    * lower-id vector in its cell has cosine ≥ `threshold` with it
+    * (chains prune transitively: in a~b~c with a≁c, both b and c go —
+    * each duplicates a lower-id survivor-or-casualty, matching the
+    * paper's "keep one representative per near-dup neighborhood").
+    * Returns the removal list (vec_id, cid, dup_of = lowest duplicated
+    * partner, max_cosine = tightest duplication), ready to anti-join
+    * against the corpus. `assigned` is the materialized cell assignment
+    * ([[semanticAssign]]: the persisted artifact, or an in-memory build);
+    * a finite `maxPairs` opts into the [[semanticPreflight]] guard, which
+    * refuses with [[graft.ops.CandidateMassExceeded]] and releases the
+    * input's cuts.
+    *
+    * Shape at 100 TB: assignment is the one broadcast-join pass; the
+    * pair join is an EQUI-join on cid (sort-merge, never a cartesian)
+    * whose per-cell m² cost is bounded by sizing nlist ∝ n/target —
+    * the same knob [[Similarity.embNearDupAuto]] documents — and the
+    * embedding rides into exactly one join, with only (ids, cid,
+    * cosine) surviving the pairing.
     */
-  def semanticPreflightFromAssign(assigned: DataFrame): DataFrame =
-    assigned.groupBy(col("cid")).agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(col("c").cast("decimal(38,0)") * (col("c") - lit(1L))),
-        lit(java.math.BigDecimal.ZERO)).as("m2"))
-      .selectExpr("CAST(m2 DIV 2 AS BIGINT) AS estimated_pairs")
-
-  /** [[semanticDedupGoverned]] over an already-built assignment artifact
-    * — measure-then-route unchanged (the mass aggregate runs over the
-    * SAME assignment the exact arm consumes); the hier fallback builds
-    * its own two-level assignment exactly as before.
-    */
-  def semanticDedupGovernedFromAssign(embeddings: DataFrame,
-      assigned: DataFrame, threshold: Double, maxPairs: Long,
-      coarse: Int = 8, fine: Int = 8): DataFrame = {
-    require(maxPairs > 0L && maxPairs < Long.MaxValue,
-      "semanticDedupGoverned requires a finite positive budget — for an " +
-        "ungoverned flat run call semanticDedup directly")
-    GraftFunctions.register(embeddings.sparkSession)
-    val mass = cellPairMass(assigned)
-    def decisions(df: DataFrame) =
-      df.select(col("vec_id"), col("dup_of"), col("max_cosine"))
-    val g =
-      if (mass <= maxPairs) {
-        val cells = embeddings
-          .join(assigned, col("vec_id") === col("aid"))
-          .select(col("vec_id"), col("cid"), col("embedding"))
-        GovernedPairing("exact", mass, maxPairs,
-          decisions(greedyPairRemoval(cells, Seq("cid"), "cid", threshold)))
-      } else
-        GovernedPairing("hier", mass, maxPairs,
-          decisions(semanticDedupHier(embeddings, threshold, coarse, fine)))
-    g.pairs.withColumn("method", lit(g.method))
-      .withColumn("estimated_pairs", lit(g.estimatedPairs))
-  }
-
-  def semanticDedup(embeddings: DataFrame, threshold: Double = 0.4,
-                    nlist: Int = 8,
+  def semanticDedup(embeddings: DataFrame, assigned: DataFrame,
+                    threshold: Double = 0.4,
                     maxPairs: Long = Long.MaxValue): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
-    // Materialized (vec_id, qe): without the cut, the derived transform
-    // re-evaluates inside every consumer — seed selection AND each of
-    // the ×nlist assignment copies (see [[semanticDedupHierCells]]).
-    val quant = Checkpoints.stable(
-      quantized(embeddings).select(col("vec_id"), col("qe")))
-    val rawAssigned = md5CellAssign(quant, md5SeedCells(quant, nlist))
     // opt-in pair-mass preflight (see [[semanticPreflight]]): the cut
     // is taken only on the guarded path so the default plan is
-    // byte-identical; on acceptance the pairing reuses it, so the
-    // preflight costs one aggregate, not a second assignment pass
-    val assigned =
-      if (maxPairs == Long.MaxValue) rawAssigned
+    // unchanged; on acceptance the pairing reuses it, so the preflight
+    // costs one aggregate, not a second assignment pass
+    val admitted =
+      if (maxPairs == Long.MaxValue) assigned
       else {
-        val cut = Checkpoints.stable(rawAssigned)
+        val cut = Checkpoints.stable(assigned)
         val mass = cellPairMass(cut)
         if (mass > maxPairs) {
           // a refusal must leave zero resident state (r17 ADVICE #3)
           Checkpoints.release(cut)
-          Checkpoints.release(quant)
+          Checkpoints.release(assigned)
           throw graft.ops.CandidateMassExceeded("semanticDedup", mass, maxPairs)
         }
         cut
       }
-    val cells = embeddings
-      .join(assigned, col("vec_id") === col("aid"))
-      .select(col("vec_id"), col("cid"), col("embedding"))
-    greedyPairRemoval(cells, Seq("cid"), "cid", threshold)
+    greedyPairRemoval(assignedCells(embeddings, admitted), Seq("cid"), "cid",
+      threshold)
   }
 
   /** Governed-degradation router for the SEMANTIC tier — the
-    * [[graft.ops.Similarity.neardupGovernedResult]] pattern closing the
+    * [[graft.ops.Similarity.neardupGoverned]] pattern closing the
     * L151 semantic preflight's consumer gap the same way the text tier's
     * router closed the all-pairs miners': MEASURE the flat form's
-    * within-cell pair mass first (the linear n·nlist assignment + one
-    * hash aggregate, stable-cut so the accepted path reuses it), run the
-    * paper-form [[semanticDedup]] at `nlist` when it clears `maxPairs`,
+    * within-cell pair mass over the materialized assignment first (one
+    * hash aggregate over the same `assigned` frame the exact arm
+    * consumes), run the paper-form [[semanticDedup]] when it clears
+    * `maxPairs`,
     * and DEGRADE to the hierarchical form ([[semanticDedupHier]] at
     * `coarse`×`fine` leaves — per-task pair work bounded by the two-level
     * split) when it doesn't — completing either way, decision + measured
@@ -525,49 +458,31 @@ object Ivf {
     * can remove DIFFERENT near-duplicate witnesses for the same
     * neighborhood (cell partitions differ — the recall trade of the
     * degrade, like the text router's banded arm); each arm individually
-    * is its registered, oracled operator.
+    * is its registered, oracled operator. Both lineage columns of
+    * [[GovernedPairing.frame]] are integer-exact, so the full frame is
+    * hash-oracled.
     */
-  def semanticDedupGovernedResult(embeddings: DataFrame,
-      threshold: Double, nlist: Int, maxPairs: Long,
-      coarse: Int = 8, fine: Int = 8): graft.ops.GovernedPairing = {
+  def semanticDedupGoverned(embeddings: DataFrame, assigned: DataFrame,
+      threshold: Double, maxPairs: Long, coarse: Int = 8,
+      fine: Int = 8): GovernedPairing = {
     require(maxPairs > 0L && maxPairs < Long.MaxValue,
       "semanticDedupGoverned requires a finite positive budget — for an " +
         "ungoverned flat run call semanticDedup directly")
     GraftFunctions.register(embeddings.sparkSession)
-    val quant = Checkpoints.stable(
-      quantized(embeddings).select(col("vec_id"), col("qe")))
-    val cut = Checkpoints.stable(
-      md5CellAssign(quant, md5SeedCells(quant, nlist)))
-    val mass = cellPairMass(cut)
+    val mass = cellPairMass(assigned)
     def decisions(df: DataFrame) =
       df.select(col("vec_id"), col("dup_of"), col("max_cosine"))
-    if (mass <= maxPairs) {
-      val cells = embeddings
-        .join(cut, col("vec_id") === col("aid"))
-        .select(col("vec_id"), col("cid"), col("embedding"))
-      graft.ops.GovernedPairing("exact", mass, maxPairs,
-        decisions(greedyPairRemoval(cells, Seq("cid"), "cid", threshold)))
-    } else {
+    if (mass <= maxPairs)
+      GovernedPairing("exact", mass, maxPairs,
+        decisions(greedyPairRemoval(assignedCells(embeddings, assigned),
+          Seq("cid"), "cid", threshold)))
+    else {
       // the decision leaves zero resident state; the hier arm builds its
       // own two-level assignment from scratch
-      Checkpoints.release(cut)
-      Checkpoints.release(quant)
-      graft.ops.GovernedPairing("hier", mass, maxPairs,
+      Checkpoints.release(assigned)
+      GovernedPairing("hier", mass, maxPairs,
         decisions(semanticDedupHier(embeddings, threshold, coarse, fine)))
     }
-  }
-
-  /** [[semanticDedupGovernedResult]] flattened for query registration
-    * (the text routers' convention) — both lineage columns are
-    * integer-exact here too, so the full frame is hash-oracled.
-    */
-  def semanticDedupGoverned(embeddings: DataFrame, threshold: Double,
-      nlist: Int, maxPairs: Long, coarse: Int = 8,
-      fine: Int = 8): DataFrame = {
-    val g = semanticDedupGovernedResult(embeddings, threshold, nlist,
-      maxPairs, coarse, fine)
-    g.pairs.withColumn("method", lit(g.method))
-      .withColumn("estimated_pairs", lit(g.estimatedPairs))
   }
 
   /** Within-group greedy pair phase shared by the SemDeDup family.
@@ -681,18 +596,13 @@ object Ivf {
     * canonical min-id representative as `keep`. Components only ever
     * span within cells — the SemDeDup approximation carried through.
     */
-  def semanticClusters(embeddings: DataFrame, threshold: Double = 0.4,
-                       nlist: Int = 8): DataFrame = {
+  def semanticClusters(embeddings: DataFrame, assigned: DataFrame,
+                       threshold: Double = 0.4): DataFrame = {
     GraftFunctions.register(embeddings.sparkSession)
-    val quant = Checkpoints.stable(
-      quantized(embeddings).select(col("vec_id"), col("qe")))
-    val assigned = md5CellAssign(quant, md5SeedCells(quant, nlist))
-    val cells = embeddings
-      .join(assigned, col("vec_id") === col("aid"))
-      .select(col("vec_id"), col("cid"), col("embedding"))
     graft.ops.Clustering
-      .dedupClusters(cellPairs(cells, Seq("cid"), "cid", threshold),
-        "vec_a", "vec_b")
+      .dedupClusters(graft.ops.Clustering.connectedComponents(
+        cellPairs(assignedCells(embeddings, assigned), Seq("cid"), "cid",
+          threshold), "vec_a", "vec_b"))
       .withColumnRenamed("doc_id", "vec_id")
   }
 

@@ -1,12 +1,10 @@
 package graft.ops
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.io.{Sinks, Sources}
+import graft.io.{ScratchDirs, Sinks, Sources}
 
 /** End-to-end golden paths: the reference's full ETL chain (extract →
   * transform → load → export) compressed into verifiable queries.
@@ -31,7 +29,7 @@ object Pipeline {
     */
   def etlRoundtrip(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val tmp = Files.createTempDirectory("graft_etl_").toString
+    val tmp = ScratchDirs.create("etl").toString
     events
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("value"))
@@ -55,7 +53,7 @@ object Pipeline {
     */
   def warehouseRoundtrip(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
-    val tmp = Files.createTempDirectory("graft_wh_").toString
+    val tmp = ScratchDirs.create("wh").toString
     val hourly = Resample.ohlcHourly(events)
     Sinks.saveTable(hourly, "aggregated_financial_data", s"$tmp/table")
     val back = spark.table("aggregated_financial_data")
@@ -156,7 +154,7 @@ object Pipeline {
     */
   def jsonlRoundtrip(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val tmp = Files.createTempDirectory("graft_jsonl_").toString
+    val tmp = ScratchDirs.create("jsonl").toString
     Sinks.writeJsonl(documents, s"$tmp/landing")
     val restored = Sources.readJsonl(spark, s"$tmp/landing", jsonlDocSchema,
       mode = "FAILFAST")
@@ -187,7 +185,7 @@ object Pipeline {
     * exact-pairing candidate mass at `pairMassThreshold`
     * ([[Similarity.cosinePreflight]]: Σ_t C(cnt,2) over the suffix-bound
     * prefix — integer-exact, hence oracled): the number the governed
-    * dedup routers ([[Similarity.neardupGovernedResult]] family) judge
+    * dedup routers ([[Similarity.neardupGoverned]] family) judge
     * their budget against, published as a per-run curation metric so
     * capacity planning reads it off the card instead of launching a
     * probe. One corpus-wide scalar, broadcast onto the per-source rows;
@@ -228,7 +226,8 @@ object Pipeline {
         (col("n_docs") - col("n_unique")).as("n_exact_dups"),
         col("mean_quality"), col("lang_entropy"))
       .crossJoin(broadcast(
-        Similarity.cosinePreflight(documents, pairMassThreshold)
+        Similarity.cosinePreflight(Similarity.cosineFeatsAndPrefix(
+          documents, pairMassThreshold, cutPref = false)._2)
           .select(col("estimated_pairs").as("estimated_pair_mass"))))
   }
 }

@@ -21,20 +21,29 @@ final case class CandidateMassExceeded(operator: String,
       "a bounded plan (the LSH/banded miners; for the semantic tier, " +
       "nlist ∝ n or the capped/hier forms), or raise the budget knowingly.")
 
-/** A governed pairing run's decision + lineage
-  * ([[Similarity.neardupGovernedResult]] /
-  * [[Similarity.cosineGovernedResult]] and the incremental face): which
-  * arm ran (`"exact"` — the measured candidate mass cleared the budget —
-  * or `"banded"`, the LSH fallback), the MEASURED mass the decision was
-  * made on, and the budget it was judged against. `pairs` is the verified
-  * pair frame of whichever arm ran. The driver-facing `neardupGoverned` /
-  * `cosineGoverned` flatten this into constant lineage columns; pipelines
-  * that need the decision without executing the pairs (logging, routing a
+/** A governed pairing run's decision + lineage — what every router
+  * ([[Similarity.neardupGoverned]], [[Similarity.cosineGoverned]], their
+  * incremental/artifact forms, [[Ivf.semanticDedupGoverned]]) returns:
+  * which arm ran (`"exact"` — the measured candidate mass cleared the
+  * budget — or the fallback, `"banded"` / `"hier"`), the MEASURED mass
+  * the decision was made on, and the budget it was judged against.
+  * `pairs` is the result frame of whichever arm ran. Pipelines that need
+  * the decision without executing the pairs (logging, routing a
   * downstream stage) read it here, where it costs nothing beyond the
   * preflight aggregate already paid.
   */
 final case class GovernedPairing(method: String, estimatedPairs: Long,
-    maxCandidatePairs: Long, pairs: DataFrame)
+    maxCandidatePairs: Long, pairs: DataFrame) {
+
+  /** The pairs with the decision as constant lineage columns
+    * `(method, estimated_pairs)` — a result frame that carries its own
+    * provenance ("these pairs are exact" / "these are the degrade, and
+    * this is the mass that forced it"); the query-registration form.
+    */
+  def frame: DataFrame =
+    pairs.withColumn("method", lit(method))
+      .withColumn("estimated_pairs", lit(estimatedPairs))
+}
 
 /** Deduplication + similarity-search operators for the LLM-data-pipeline
   * tier: exact dedup, MinHash+banded-LSH near-dup, SimHash, n-gram
@@ -266,56 +275,13 @@ object Similarity {
       xxhash64(concat_ws(",", (0 until k).map(i => col(s"mh_$i")): _*)).as("sig_hash"))
   }
 
-  /** MinHash + banded LSH near-duplicate pairs, verified with exact
-    * Jaccard ≥ `threshold`.
-    *
-    * Bands of r=1 over k=32 hashes ⇒ candidate-recall 1-(1-j)^32 (≈1 for
-    * j ≥ 0.3, the registered threshold), so the verified output equals the
-    * exact all-pairs answer — which is what the DuckDB oracle computes.
-    * (r/k are parameters: at higher scale/thresholds use r=2..4 to cut
-    * candidate volume; the verify step keeps the output exact either way.)
-    */
-  def minhashNearDup(documents: DataFrame, k: Int = 32,
-                     threshold: Double = 0.3): DataFrame =
-    // One tokenize/shingle/hash pass, materialized (localCheckpoint) and
-    // shared by BOTH the signature branch and the verification branch.
-    // In-memory variant for interactive use; pipelines should prefer
-    // [[minhashNearDupPersisted]] — localCheckpoint pins blocks to
-    // executor storage, which doesn't survive executor loss at scale.
-    nearDupFromHashes(shingleHashes(documents).localCheckpoint(), k, threshold)
-
-  /** The persistable signature input: hashed-shingle rows (doc_id, h).
-    * Only longs — the shingle strings never leave the first stage.
+  /** The signature input of [[minhashNearDup]]: hashed-shingle rows
+    * (doc_id, h). Only longs — the shingle strings never leave the first
+    * stage.
     */
   def shingleHashes(documents: DataFrame): DataFrame =
     shingleRows(documents)
       .select(col("doc_id"), pmod(xxhash64(col("s")), lit(MinhashP)).as("h"))
-
-  /** Production shape of [[minhashNearDup]]: the hashed-shingle table is
-    * WRITTEN ONCE as a lake artifact (parquet) and re-read by both the
-    * band join and the verification branch — the artifact survives
-    * executor loss, is shareable across jobs (incremental dedup reuses
-    * yesterday's signatures), and caps the recompute at one scan instead
-    * of re-tokenizing 100 TB per consumer.
-    */
-  def minhashNearDupPersisted(documents: DataFrame, artifactDir: String,
-                              k: Int = 32, threshold: Double = 0.3): DataFrame = {
-    shingleHashes(documents).write.mode("overwrite").parquet(artifactDir)
-    minhashNearDupFromArtifact(documents.sparkSession, artifactDir, k, threshold)
-  }
-
-  /** The consumer face of the artifact split (r18-opt): mine near-dup
-    * pairs from an ALREADY-WRITTEN [[shingleHashes]] parquet artifact.
-    * At 100 TB the corpus is tokenized ONCE per curation run and every
-    * governance consumer (pair mining, the cluster closure, the
-    * source-redundancy rollup) reads the artifact — re-tokenizing per
-    * consumer was the single largest redundant cost in the bench's
-    * minhash tier (three identical artifact builds per pass).
-    */
-  def minhashNearDupFromArtifact(spark: org.apache.spark.sql.SparkSession,
-                                 artifactDir: String, k: Int = 32,
-                                 threshold: Double = 0.3): DataFrame =
-    nearDupFromHashes(spark.read.parquet(artifactDir), k, threshold)
 
   /** r=1 banded signature rows (doc_id, band_idx, band_key) from hashed
     * shingles: each signature position is its own band. Shared by the
@@ -332,8 +298,24 @@ object Similarity {
           .as(Seq("band_idx", "band_key")))
   }
 
-  private def nearDupFromHashes(hashes: DataFrame, k: Int,
-                                threshold: Double): DataFrame = {
+  /** MinHash + banded LSH near-duplicate pairs, verified with exact
+    * Jaccard ≥ `threshold`, mined from a MATERIALIZED [[shingleHashes]]
+    * frame — both the band join and the verification branch read it, so
+    * it must not be a lazy tokenize (that would run once per branch).
+    * Production reads the persisted parquet artifact (it survives
+    * executor loss, and every governance consumer — pair mining, the
+    * cluster closure, the source-redundancy rollup — shares one
+    * tokenize); in-memory callers pass `shingleHashes(docs)
+    * .localCheckpoint()`.
+    *
+    * Bands of r=1 over k=32 hashes ⇒ candidate-recall 1-(1-j)^32 (≈1 for
+    * j ≥ 0.3, the registered threshold), so the verified output equals the
+    * exact all-pairs answer — which is what the DuckDB oracle computes.
+    * (r/k are parameters: at higher scale/thresholds use r=2..4 to cut
+    * candidate volume; the verify step keeps the output exact either way.)
+    */
+  def minhashNearDup(hashes: DataFrame, k: Int = 32,
+                     threshold: Double = 0.3): DataFrame = {
     // r=1 banding via [[bandRows]]. The candidate join carries ONLY
     // (band, key, id) — never the shingle payload. With a skewed shingle
     // distribution a popular min-value makes big buckets whose m² pairs
@@ -440,29 +422,20 @@ object Similarity {
     verifyPairs(candIds, allHashes, threshold)
   }
 
-  /** Near-duplication attributed to SOURCE pairs: the verified
-    * [[minhashNearDup]] pair set rolled up to (source, source) cells with
-    * pair counts and mean overlap — the redundancy matrix a mixing
-    * pipeline reads before weighting sources (two crawls of the same site
-    * light up one off-diagonal cell; a source that templates its own
-    * pages lights up its diagonal). Unordered cells: (s1 ≤ s2) by
-    * least/greatest, so A×B and B×A accumulate together.
+  /** Near-duplication attributed to SOURCE pairs: a verified near-dup
+    * pair list (typically [[minhashNearDup]]'s, mined once per run) rolled
+    * up to (source, source) cells with pair counts and mean overlap — the
+    * redundancy matrix a mixing pipeline reads before weighting sources
+    * (two crawls of the same site light up one off-diagonal cell; a
+    * source that templates its own pages lights up its diagonal).
+    * Unordered cells: (s1 ≤ s2) by least/greatest, so A×B and B×A
+    * accumulate together.
     *
-    * Cost = the near-dup miner + two id-keyed joins of the (small)
-    * verified pair set against the doc→source projection + one tiny
-    * aggregate; the rollup adds no payload shuffle.
+    * Cost = two id-keyed joins of the (small) verified pair set against
+    * the doc→source projection + one tiny aggregate; the rollup adds no
+    * payload shuffle.
     */
-  def nearDupBySource(documents: DataFrame, k: Int = 32,
-                      threshold: Double = 0.3): DataFrame =
-    nearDupBySourceFromPairs(documents, minhashNearDup(documents, k, threshold))
-
-  /** [[nearDupBySource]] over an already-mined pair list — the artifact
-    * split's rollup face (r18-opt): pairs typically come from
-    * [[minhashNearDupFromArtifact]] so the corpus is tokenized once per
-    * run, not once per governance consumer.
-    */
-  def nearDupBySourceFromPairs(documents: DataFrame,
-                               pairs: DataFrame): DataFrame = {
+  def nearDupBySource(documents: DataFrame, pairs: DataFrame): DataFrame = {
     val src = documents.filter(col("source").isNotNull)
       .select(col("doc_id"), col("source"))
     pairs
@@ -949,25 +922,15 @@ object Similarity {
     * documents' embeddings — the multi-signal curation stage that
     * separates true near-dups (high overlap AND high cosine) from
     * template/boilerplate collisions (high overlap, low cosine —
-    * shared scaffolding around different content). Runs on the bounded
-    * lexical baseline here; in production the pair source is the
-    * banded-LSH miner and this stage is one id-equi-join per side
-    * against the embedding table — pairs carry (ids, jaccard, cosine)
-    * only, never two payloads.
+    * shared scaffolding around different content). `pairs` is an
+    * already-mined lexical pair list (doc_a, doc_b, jaccard) — the
+    * bounded [[ngramJaccard]] baseline here, mined once per run and also
+    * closed by the cluster governance consumers; in production the pair
+    * source is the banded-LSH miner. This stage is one id-equi-join per
+    * side against the embedding table — pairs carry (ids, jaccard,
+    * cosine) only, never two payloads.
     */
-  def dedupEnsemble(documents: DataFrame, embeddings: DataFrame,
-                    maxDocId: Long, threshold: Double): DataFrame =
-    dedupEnsembleFromPairs(ngramJaccard(documents, maxDocId, threshold),
-      embeddings)
-
-  /** [[dedupEnsemble]] over an already-mined lexical pair list — the
-    * artifact split's adjudication face (r18-opt): the bounded brute
-    * baseline is mined once per curation run; its pair list is then
-    * annotated here and closed by the cluster governance consumers,
-    * instead of each consumer re-running the m² mine.
-    */
-  def dedupEnsembleFromPairs(pairs: DataFrame,
-                             embeddings: DataFrame): DataFrame = {
+  def dedupEnsemble(pairs: DataFrame, embeddings: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), col("embedding"))
     pairs
@@ -1845,15 +1808,12 @@ object Similarity {
     */
   /** The stable-cut (feats, pref) pair of [[allPairsCosine]] — the
     * normalized-quantized feature rows and the suffix-bound prefix table
-    * (see its scaladoc). private[graft] so the preflight spec can count
-    * the true candidate-join mass over the identical prefix table the
-    * estimator aggregates.
-    */
-  private[graft] def cosineFeatsAndPrefix(documents: DataFrame,
-      threshold: Double): (DataFrame, DataFrame) =
-    cosineFeatsAndPrefixImpl(documents, threshold, cutPref = true)
-
-  /** `cutPref=false` (r19-opt) skips the prefix stable-cut: the cut is a
+    * (see its scaladoc): the builder of the cosine tier's materialized
+    * inputs. private[graft] so the preflight spec can count the true
+    * candidate-join mass over the identical prefix table the estimator
+    * aggregates.
+    *
+    * `cutPref=false` (r19-opt) skips the prefix stable-cut: the cut is a
     * value-neutral materialization barrier that pays off only when pref
     * has MULTIPLE consumers (both candidate legs). The preflight-only
     * path ([[cosinePreflight]], data_card's `estimated_pair_mass`)
@@ -1861,7 +1821,7 @@ object Similarity {
     * overhead there — one full pass of the prefix build whose output was
     * then re-read once.
     */
-  private def cosineFeatsAndPrefixImpl(documents: DataFrame,
+  private[graft] def cosineFeatsAndPrefix(documents: DataFrame,
       threshold: Double, cutPref: Boolean): (DataFrame, DataFrame) = {
     val W = org.apache.spark.sql.expressions.Window
     val tq = math.floor(threshold * math.pow(2.0, 40)).toLong
@@ -1923,32 +1883,19 @@ object Similarity {
   /** The [[allPairsCosine]] candidate-mass estimate as a ONE-ROW frame
     * `(estimated_pairs)` — the standalone face of the preflight, for
     * capacity planning and governance dashboards ("what would the exact
-    * join cost on this corpus?") without ever launching the join. The
-    * whole pipeline below the tokenize is BIGINT arithmetic (the
-    * [[allPairsCosine]] quantization discipline), so unlike the
-    * xxhash64-ranked Jaccard prefix this estimate is ENGINE-EXACT and
-    * oracle-able: Σ_t C(cnt_t, 2) over the suffix-bound prefix table is
-    * the same number in any engine. Cost: the linear prefix build plus
-    * one hash aggregate — never a join.
+    * join cost on this corpus?") without ever launching the join. `pref`
+    * is a [[cosineFeatsAndPrefix]] prefix table: the persisted artifact
+    * one tf-idf build per curation run shares with the exact miner and
+    * the governed router, or — for a one-off estimate — the uncut
+    * (`cutPref = false`) prefix, whose maxw join + suffix window then
+    * stream straight into this aggregate. The whole pipeline below the
+    * tokenize is BIGINT arithmetic (the [[allPairsCosine]] quantization
+    * discipline), so unlike the xxhash64-ranked Jaccard prefix this
+    * estimate is ENGINE-EXACT and oracle-able: Σ_t C(cnt_t, 2) over the
+    * suffix-bound prefix table is the same number in any engine. Cost:
+    * one hash aggregate over the prefix — never a join.
     */
-  def cosinePreflight(documents: DataFrame, threshold: Double): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0, 1], got $threshold")
-    // cutPref=false (r19-opt): the estimate aggregates pref ONCE, so the
-    // eager prefix materialization the two-consumer miner path needs is
-    // skipped here — the maxw join + suffix window stream straight into
-    // the count aggregate. Values identical (the cut was value-neutral).
-    val (_, pref) = cosineFeatsAndPrefixImpl(documents, threshold,
-      cutPref = false)
-    cosinePreflightFromPrefix(pref)
-  }
-
-  /** [[cosinePreflight]] over an already-built (typically persisted)
-    * prefix table — the artifact split's estimator face (r18-opt): one
-    * tf-idf feature build per curation run serves the capacity
-    * estimate, the exact miner and the governed router.
-    */
-  def cosinePreflightFromPrefix(pref: DataFrame): DataFrame =
+  def cosinePreflight(pref: DataFrame): DataFrame =
     // cross-key sum in DECIMAL(38,0) — a silent BIGINT wraparound here
     // would publish a negative "estimate" (r17 ADVICE #1; see
     // candidatePairMass); the output column folds back to BIGINT.
@@ -1962,7 +1909,8 @@ object Similarity {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     val tq = math.floor(threshold * math.pow(2.0, 40)).toLong
-    val (feats, pref) = cosineFeatsAndPrefix(documents, threshold)
+    val (feats, pref) = cosineFeatsAndPrefix(documents, threshold,
+      cutPref = true)
     // Candidate-mass PREFLIGHT (opt-in via a finite budget; the
     // allPairsJaccard rationale, and THIS operator is the one the r16
     // stress run measured dying ungoverned — 767 s, >69 GB spill, at
@@ -2093,9 +2041,9 @@ object Similarity {
     * thresholds). Cost of a banded decision: the preflight's linear
     * prefix build, released before the fallback runs.
     */
-  def neardupGovernedResult(documents: DataFrame, threshold: Double,
-                            maxCandidatePairs: Long,
-                            k: Int = 32): GovernedPairing = {
+  def neardupGoverned(documents: DataFrame, threshold: Double,
+                      maxCandidatePairs: Long,
+                      k: Int = 32): GovernedPairing = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     require(maxCandidatePairs > 0L && maxCandidatePairs < Long.MaxValue,
@@ -2114,21 +2062,9 @@ object Similarity {
       Checkpoints.release(pref)
       Checkpoints.release(sh)
       GovernedPairing("banded", mass, maxCandidatePairs,
-        minhashNearDup(documents, k, threshold))
+        minhashNearDup(shingleHashes(documents).localCheckpoint(), k,
+          threshold))
     }
-  }
-
-  /** [[neardupGovernedResult]] flattened for query registration: the
-    * verified pairs with the routing decision as constant lineage
-    * columns `(method, estimated_pairs)` — a result frame that carries
-    * its own provenance ("these pairs are exact" / "these are the
-    * banded degrade, and this is the mass that forced it").
-    */
-  def neardupGoverned(documents: DataFrame, threshold: Double,
-                      maxCandidatePairs: Long, k: Int = 32): DataFrame = {
-    val g = neardupGovernedResult(documents, threshold, maxCandidatePairs, k)
-    g.pairs.withColumn("method", lit(g.method))
-      .withColumn("estimated_pairs", lit(g.estimatedPairs))
   }
 
   /** The governed router's incremental/maintenance face: dedup an
@@ -2151,7 +2087,7 @@ object Similarity {
     * an ops incident, and [[GovernedPairing.estimatedPairs]] is the
     * number a data card publishes as the corpus's pairing mass.
     */
-  def neardupGovernedIncrementalResult(newDocs: DataFrame,
+  def neardupGovernedIncremental(newDocs: DataFrame,
       artifactDir: String, threshold: Double, maxCandidatePairs: Long,
       k: Int = 32): GovernedPairing = {
     require(threshold > 0.0 && threshold <= 1.0,
@@ -2190,19 +2126,8 @@ object Similarity {
     }
   }
 
-  /** [[neardupGovernedIncrementalResult]] flattened for query
-    * registration (the [[neardupGoverned]] convention).
-    */
-  def neardupGovernedIncremental(newDocs: DataFrame, artifactDir: String,
-      threshold: Double, maxCandidatePairs: Long, k: Int = 32): DataFrame = {
-    val g = neardupGovernedIncrementalResult(newDocs, artifactDir, threshold,
-      maxCandidatePairs, k)
-    g.pairs.withColumn("method", lit(g.method))
-      .withColumn("estimated_pairs", lit(g.estimatedPairs))
-  }
-
   /** Governed-degradation router over the tf-idf cosine pairing tier —
-    * [[neardupGovernedResult]]'s vector-space twin. Exact arm:
+    * [[neardupGoverned]]'s vector-space twin. Exact arm:
     * [[allPairsCosine]]'s prefix-filter join. Banded arm: SimHash IS the
     * hyperplane-LSH family for angular similarity, so candidates come
     * from [[simhashNearDup]]'s banded Hamming mining (bounded by
@@ -2214,18 +2139,22 @@ object Similarity {
     * explode: signatures need raw token multiplicities, which the
     * normalized feature rows no longer carry) and every emitted pair is
     * truly ≥ t (precision 1; recall is the traded quantity, governed by
-    * `maxHamming`).
+    * `maxHamming`). Unlike the Jaccard router, BOTH lineage columns here
+    * are oracle-exact (the cosine preflight is integer arithmetic
+    * end-to-end), so the full [[GovernedPairing.frame]] including the
+    * estimate is hash-checkable in any engine.
     */
-  def cosineGovernedResult(documents: DataFrame, threshold: Double,
-                           maxCandidatePairs: Long,
-                           maxHamming: Int = 3): GovernedPairing = {
+  def cosineGoverned(documents: DataFrame, threshold: Double,
+                     maxCandidatePairs: Long,
+                     maxHamming: Int = 3): GovernedPairing = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     require(maxCandidatePairs > 0L && maxCandidatePairs < Long.MaxValue,
       "cosineGoverned requires a finite positive budget — for an " +
         "ungoverned exact run call allPairsCosine directly")
     val tq = math.floor(threshold * math.pow(2.0, 40)).toLong
-    val (feats, pref) = cosineFeatsAndPrefix(documents, threshold)
+    val (feats, pref) = cosineFeatsAndPrefix(documents, threshold,
+      cutPref = true)
     val mass = candidatePairMass(pref.select(col("t").as("k")))
     if (mass <= maxCandidatePairs)
       GovernedPairing("exact", mass, maxCandidatePairs,
@@ -2241,19 +2170,6 @@ object Similarity {
     }
   }
 
-  /** [[cosineGovernedResult]] flattened for query registration — unlike
-    * the Jaccard router, BOTH lineage columns here are oracle-exact
-    * (the cosine preflight is integer arithmetic end-to-end), so the
-    * full frame including the estimate is hash-checkable in any engine.
-    */
-  def cosineGoverned(documents: DataFrame, threshold: Double,
-                     maxCandidatePairs: Long, maxHamming: Int = 3): DataFrame = {
-    val g = cosineGovernedResult(documents, threshold, maxCandidatePairs,
-      maxHamming)
-    g.pairs.withColumn("method", lit(g.method))
-      .withColumn("estimated_pairs", lit(g.estimatedPairs))
-  }
-
   /** [[cosineGoverned]] over already-built (typically persisted)
     * feature/prefix tables — the artifact split's router face (r18-opt):
     * the measure-then-route contract is unchanged (the mass aggregate
@@ -2266,7 +2182,7 @@ object Similarity {
   def cosineGovernedFromFeatures(documents: DataFrame, feats: DataFrame,
                                  pref: DataFrame, threshold: Double,
                                  maxCandidatePairs: Long,
-                                 maxHamming: Int = 3): DataFrame = {
+                                 maxHamming: Int = 3): GovernedPairing = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
     require(maxCandidatePairs > 0L && maxCandidatePairs < Long.MaxValue,
@@ -2276,16 +2192,13 @@ object Similarity {
     // hinted=false on both arms: feats/pref are artifact-fed here (real
     // parquet stats), so join strategy is stats/AQE-driven — see
     // [[allPairsCosineFromFeatures]].
-    val g =
-      if (mass <= maxCandidatePairs)
-        GovernedPairing("exact", mass, maxCandidatePairs,
-          cosineVerifyPairs(cosineCandidates(pref, hinted = false), feats, tq,
-            hinted = false))
-      else
-        GovernedPairing("banded", mass, maxCandidatePairs,
-          cosineVerifyPairs(simhashNearDup(documents, maxHamming)
-            .select(col("doc_a"), col("doc_b")), feats, tq, hinted = false))
-    g.pairs.withColumn("method", lit(g.method))
-      .withColumn("estimated_pairs", lit(g.estimatedPairs))
+    if (mass <= maxCandidatePairs)
+      GovernedPairing("exact", mass, maxCandidatePairs,
+        cosineVerifyPairs(cosineCandidates(pref, hinted = false), feats, tq,
+          hinted = false))
+    else
+      GovernedPairing("banded", mass, maxCandidatePairs,
+        cosineVerifyPairs(simhashNearDup(documents, maxHamming)
+          .select(col("doc_a"), col("doc_b")), feats, tq, hinted = false))
   }
 }

@@ -96,13 +96,6 @@ object TextAnalysis {
       termScore.as("bm25"))
   }
 
-  /** [[bm25]] top-k: best-scoring docs, deterministic tie-break. */
-  def bm25TopK(documents: DataFrame, queryTerms: Seq[String],
-               k: Int): DataFrame =
-    bm25(documents, queryTerms)
-      .orderBy(col("bm25").desc, col("doc_id").asc)
-      .limit(k)
-
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
   /** Per-doc token counts, as a standalone frame — the shareable
@@ -919,38 +912,6 @@ object TextAnalysis {
           .as("overestimate"))
   }
 
-  /** Cross-document duplicated-substring profile — the exact-substring
-    * dedup stage of Lee et al., "Deduplicating Training Data Makes
-    * Language Models Better" (ACL 2022), at token-window granularity:
-    * every `k`-token sliding window is fingerprinted, a window is
-    * DUPLICATED iff its text occurs in ≥ 2 distinct documents (within-doc
-    * repetition is [[repetitionNgram]]'s job), and each document reports
-    * how much of it is covered by duplicated spans. Where [[dedupSpans]]
-    * drops disjoint fixed spans, the sliding window catches duplicated
-    * passages at ANY alignment — the case C4-style span dedup misses.
-    *
-    * Returns (doc_id, n_tokens, n_windows, dup_windows, covered_tokens,
-    * dup_frac) for every document with ≥ k tokens; `covered_tokens` is
-    * the exact size of the union of the duplicated [s, s+k) intervals,
-    * computed from one `lag` over dup window starts: a window whose
-    * predecessor starts g < k positions back contributes g new tokens,
-    * otherwise k — no interval list ever materializes.
-    *
-    * Shape at 100 TB: the window fingerprints ride ONE array `transform`
-    * per document and explode to (doc_id, start, 16-byte key) rows — the
-    * window text itself never leaves the row it was sliced from. The
-    * cross-corpus multiplicity is a hash aggregate on the key (map-side
-    * combined after the per-doc dedup), the coverage pass is a window
-    * partitioned BY DOCUMENT (never a global funnel), and the final join
-    * back to per-doc token counts is id+ints only. A full suffix-array
-    * (the paper's exact construction) orders all corpus positions
-    * globally; the k-gram formulation trades sub-k-token matches for an
-    * embarrassingly parallel plan — the standard production trade.
-    */
-  /** (doc_id, s) rows of every k-token window start whose window text
-    * occurs in ≥ 2 distinct documents — the shared discovery stage of
-    * [[substringDedup]] (profile) and [[substringDedupApply]] (rewrite).
-    */
   /** (doc_id, s, h) rows: every k-window start and its md5 fingerprint —
     * carried as the RAW 16 bytes (`unhex`), not the 32-char hex string:
     * the exploded window frame is ~33 rows/doc and its shuffle bytes are
@@ -1155,12 +1116,43 @@ object TextAnalysis {
           col("n_tokens")).as("dup_frac"))
   }
 
-  def substringDedup(documents: DataFrame, k: Int = 8): DataFrame = {
+  /** Cross-document duplicated-substring profile — the exact-substring
+    * dedup stage of Lee et al., "Deduplicating Training Data Makes
+    * Language Models Better" (ACL 2022), at token-window granularity:
+    * every `k`-token sliding window is fingerprinted, a window is
+    * DUPLICATED iff its text occurs in ≥ 2 distinct documents (within-doc
+    * repetition is [[repetitionNgram]]'s job), and each document reports
+    * how much of it is covered by duplicated spans. Where [[dedupSpans]]
+    * drops disjoint fixed spans, the sliding window catches duplicated
+    * passages at ANY alignment — the case C4-style span dedup misses.
+    *
+    * Returns (doc_id, n_tokens, n_windows, dup_windows, covered_tokens,
+    * dup_frac) for every document with ≥ k tokens; `covered_tokens` is
+    * the exact size of the union of the duplicated [s, s+k) intervals,
+    * computed from one `lag` over dup window starts: a window whose
+    * predecessor starts g < k positions back contributes g new tokens,
+    * otherwise k — no interval list ever materializes. `starts` is the
+    * materialized discovery stage, a [[dupStarts]] frame (in memory, or
+    * the persisted artifact read back through [[readDupStarts]]).
+    *
+    * Shape at 100 TB: the window fingerprints ride ONE array `transform`
+    * per document and explode to (doc_id, start, 16-byte key) rows — the
+    * window text itself never leaves the row it was sliced from. The
+    * cross-corpus multiplicity is a hash aggregate on the key (map-side
+    * combined after the per-doc dedup), the coverage pass is a window
+    * partitioned BY DOCUMENT (never a global funnel), and the final join
+    * back to per-doc token counts is id+ints only. A full suffix-array
+    * (the paper's exact construction) orders all corpus positions
+    * globally; the k-gram formulation trades sub-k-token matches for an
+    * embarrassingly parallel plan — the standard production trade.
+    */
+  def substringDedup(documents: DataFrame, starts: DataFrame,
+                     k: Int = 8): DataFrame = {
     require(k >= 2, s"window must span at least 2 tokens, got $k")
     val base = documents
       .withColumn("w", toks)
       .filter(size(col("w")) >= k)
-    coverageProfile(base, dupWindowStarts(base, k), k)
+    coverageProfile(base, starts.select(col("doc_id"), col("s")), k)
   }
 
   /** [[substringDedup]] pinned to the single-pass WINDOW verdict
@@ -1176,57 +1168,39 @@ object TextAnalysis {
     coverageProfile(base, crossDocDupStartsWindow(windowRows(base, k)), k)
   }
 
-  /** Persist the discovery stage shared by [[substringDedup]] and
-    * [[substringDedupApply]]: the (doc_id, s) dup-window-start frame.
-    * In the paper's pipeline the profile is computed ONCE and both the
-    * report and the rewrite consume it — at 100 TB the fingerprint
-    * explode + key aggregate is the dominant cost, and re-running it per
-    * consumer doubles the bill. Ints + 16-byte keys only.
+  /** The discovery stage shared by [[substringDedup]] and
+    * [[substringDedupApply]] — the builder of their materialized input:
+    * the (doc_id, s) dup-window-start frame. In the paper's pipeline the
+    * profile is computed ONCE and both the report and the rewrite consume
+    * it — at 100 TB the fingerprint explode + key aggregate is the
+    * dominant cost, and re-running it per consumer doubles the bill. Ints
+    * + 16-byte keys only. The frame is only meaningful at the k it was
+    * built with: it carries k as a constant column, so a persisted copy
+    * read back through [[readDupStarts]] at a different k fails loud
+    * instead of silently producing wrong coverage spans.
     */
-  def writeDupWindowStarts(documents: DataFrame, dir: String, k: Int = 8): Unit = {
+  def dupStarts(documents: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 2, s"window must span at least 2 tokens, got $k")
     val base = documents.withColumn("w", toks).filter(size(col("w")) >= k)
-    // The artifact is only meaningful at the k it was built with: stamp
-    // it as a constant column so a mismatched reader fails loud instead
-    // of silently producing wrong coverage spans.
-    // Explicit fan-out keyed by doc_id (r19-opt, the shingleHashesDir /
-    // writeNearDupIndex precedent): the routed-agg verdict's semi-join
-    // output inherits its reducer count, which AQE can coalesce to ONE
-    // partition at bench scale — the artifact then lands as a single
-    // file and every consumer's doc-keyed work (the coverage window,
-    // the rewrite's per-doc spans) starts from a one-task scan. Keyed,
-    // not round-robin, so per-doc rows stay co-located for the
-    // consumers' doc_id windows; row order inside the artifact is
-    // irrelevant (consumers window/aggregate by doc_id).
     dupWindowStarts(base, k).withColumn("k", lit(k))
-      .repartition(documents.sparkSession.sparkContext.defaultParallelism,
-        col("doc_id"))
-      .write.mode("overwrite").parquet(dir)
   }
 
-  /** Read a [[writeDupWindowStarts]] artifact, asserting its k stamp
+  /** Read a persisted [[dupStarts]] artifact, asserting its k stamp
     * matches the k the consumer is about to apply (a mismatch means
     * wrong window extents — silently, without this check). An empty
     * artifact (no cross-doc dup windows) passes trivially.
     */
-  private def readDupStarts(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, k: Int): DataFrame = {
+  def readDupStarts(spark: org.apache.spark.sql.SparkSession,
+                    dir: String, k: Int): DataFrame = {
     val df = spark.read.parquet(dir)
     require(df.columns.contains("k"),
-      s"dup-starts artifact at $dir carries no k stamp — rewrite it with writeDupWindowStarts")
+      s"dup-starts artifact at $dir carries no k stamp — rewrite it from dupStarts")
     df.select(col("k")).limit(1).collect().headOption.foreach { r =>
       val wrote = r.getInt(0)
       require(wrote == k,
         s"dup-starts artifact at $dir was written with k=$wrote; reader requested k=$k")
     }
     df.select(col("doc_id"), col("s"))
-  }
-
-  /** [[substringDedup]] over a persisted [[writeDupWindowStarts]] frame. */
-  def substringDedupFromStarts(documents: DataFrame, startsDir: String,
-                               k: Int = 8): DataFrame = {
-    val base = documents.withColumn("w", toks).filter(size(col("w")) >= k)
-    coverageProfile(base, readDupStarts(documents.sparkSession, startsDir, k), k)
   }
 
   /** Write the corpus's DISTINCT k-window fingerprints as a parquet
@@ -1297,32 +1271,17 @@ object TextAnalysis {
     * bounded by document length; reassembly is one `collect_list` per
     * document, the same bound the input row already carries.
     */
-  def substringDedupApply(documents: DataFrame, k: Int = 8): DataFrame = {
+  def substringDedupApply(documents: DataFrame, starts: DataFrame,
+                          k: Int = 8): DataFrame = {
     require(k >= 2, s"window must span at least 2 tokens, got $k")
     val base = documents
       .withColumn("w", toks)
       .filter(size(col("w")) >= k)
-    substringDedupApplyWithStarts(base, dupWindowStarts(base, k), k)
-  }
-
-  /** [[substringDedupApply]] over a persisted [[writeDupWindowStarts]]
-    * frame (see there for the shared-discovery rationale).
-    */
-  def substringDedupApplyFromStarts(documents: DataFrame, startsDir: String,
-                                    k: Int = 8): DataFrame = {
-    val base = documents.withColumn("w", toks).filter(size(col("w")) >= k)
-    substringDedupApplyWithStarts(base,
-      readDupStarts(documents.sparkSession, startsDir, k), k)
-  }
-
-  private def substringDedupApplyWithStarts(base: DataFrame,
-                                            dupStarts: DataFrame,
-                                            k: Int): DataFrame = {
-    val starts = dupStarts.withColumnRenamed("doc_id", "sd")
+    val sd = starts.select(col("doc_id").as("sd"), col("s"))
     val tokRows = base
       .select(col("doc_id"), posexplode(col("w")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).as("p"), col("tok"))
-    val kept = tokRows.join(starts,
+    val kept = tokRows.join(sd,
         col("sd") === col("doc_id") &&
           col("s").between(col("p") - (k - 1), col("p")),
         "left_anti")

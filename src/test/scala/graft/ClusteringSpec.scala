@@ -75,9 +75,13 @@ class ClusteringSpec extends SparkSpec {
     assert(Clustering.connectedComponents(selfs, "doc_a", "doc_b").count() == 0L)
   }
 
+  /** The governance consumers read component labels: close the graph first. */
+  private def labels(pairs: org.apache.spark.sql.DataFrame) =
+    Clustering.connectedComponents(pairs, "doc_a", "doc_b")
+
   test("dedupClusters: canonical keep flag + component sizes") {
     val pairs = Seq((5L, 9L), (9L, 7L), (30L, 31L)).toDF("doc_a", "doc_b")
-    val out = Clustering.dedupClusters(pairs).collect()
+    val out = Clustering.dedupClusters(labels(pairs)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
       .sortBy(_._1)
     assert(out.toSeq == Seq(
@@ -89,7 +93,7 @@ class ClusteringSpec extends SparkSpec {
     // components: {5,7,9} size 3, {30,31} size 2, {40,41} size 2
     val pairs = Seq((5L, 9L), (9L, 7L), (30L, 31L), (40L, 41L))
       .toDF("doc_a", "doc_b")
-    val out = Clustering.clusterSizeHistogram(pairs).collect()
+    val out = Clustering.clusterSizeHistogram(labels(pairs)).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(out == Map(
       3L -> ((1L, 3L, 2L)), // one size-3 cluster: 3 docs, 2 removable
@@ -128,7 +132,7 @@ class ClusteringSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
     val scored = Seq((1L, 0.5), (2L, 0.9), (3L, 0.7), (10L, 0.4), (11L, 0.4))
       .toDF("doc_id", "quality")
-    val out = Clustering.clusterKeepBest(pairs, scored).collect()
+    val out = Clustering.clusterKeepBest(labels(pairs), scored).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))))
       .toMap
     assert(out.keySet == Set(1L, 2L, 3L, 10L, 11L))
@@ -139,7 +143,7 @@ class ClusteringSpec extends SparkSpec {
     assert(out(10L)._4 && !out(11L)._4)
     assert(out(11L) == ((10L, 2L, 0.4, false)))
     // exactly one survivor per component
-    val keeps = Clustering.clusterKeepBest(pairs, scored)
+    val keeps = Clustering.clusterKeepBest(labels(pairs), scored)
       .groupBy("cluster_id")
       .agg(org.apache.spark.sql.functions.sum(
         org.apache.spark.sql.functions.when(

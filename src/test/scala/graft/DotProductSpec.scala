@@ -397,4 +397,28 @@ class DotProductSpec extends SparkSpec {
       assert(out.length == embRows.size)
     }
   }
+
+  test("GraftExtensions injects exactly the functions register installs, with the same infos") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val injected = scala.collection.mutable.Map.empty[String, String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(fd: FunctionDescription): Unit = {
+        injected(fd._1.funcName) = fd._2.getClassName
+        super.injectFunction(fd)
+      }
+    }
+    new graft.functions.GraftExtensions()(ext)
+    // a fresh session state: only what register adds appears below
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val before = reg.listFunction().map(_.funcName).toSet
+    GraftFunctions.register(fresh)
+    val registered = reg.listFunction().map(_.funcName).toSet -- before
+    assert(registered.size == 13, registered)
+    assert(injected.keySet == registered)
+    registered.foreach { n =>
+      assert(reg.lookupFunction(FunctionIdentifier(n)).map(_.getClassName)
+        .contains(injected(n)), n)
+    }
+  }
 }

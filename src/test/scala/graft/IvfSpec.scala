@@ -379,7 +379,8 @@ class IvfSpec extends SparkSpec {
       (6L, Array(1f, 1f, 0f, 0f), 4),    // cos 0.707 to e0: below threshold
       (7L, e0, 0)                        // dup of 0 AND of 3 -> dup_of = 0
     ).toDF("vec_id", "embedding", "label")
-    val out = Ivf.semanticDedup(emb, threshold = 0.999, nlist = 4).collect()
+    val out = Ivf.semanticDedup(emb, Ivf.semanticAssign(emb, nlist = 4),
+      threshold = 0.999).collect()
       .map(r => r.getLong(0) -> ((r.getLong(2), r.getDouble(3)))).toMap
     assert(out.keySet == Set(3L, 5L, 7L))
     assert(out(3L) == ((0L, 1.0)))
@@ -409,7 +410,8 @@ class IvfSpec extends SparkSpec {
       (3L, e0, 0), (4L, Array(0f, 0f, 0f, 1f), 3),
       (5L, e1, 1), (6L, Array(1f, 1f, 0f, 0f), 4), (7L, e0, 0)
     ).toDF("vec_id", "embedding", "label")
-    val out = Ivf.semanticClusters(emb, threshold = 0.999, nlist = 4).collect()
+    val out = Ivf.semanticClusters(emb, Ivf.semanticAssign(emb, nlist = 4),
+      threshold = 0.999).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getBoolean(3))))
       .toMap
     // only graph members appear: {0,3,7} and {1,5}
@@ -456,7 +458,7 @@ class IvfSpec extends SparkSpec {
 
   test("semanticDedup on real testdata: removals reference lower-id survivors-or-casualties above threshold") {
     val emb = graft.io.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val rows = Ivf.semanticDedup(emb, 0.4, 8).collect()
+    val rows = Ivf.semanticDedup(emb, Ivf.semanticAssign(emb, 8), 0.4).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getLong(2) < r.getLong(0))   // dup_of is a lower id
@@ -493,7 +495,7 @@ class IvfSpec extends SparkSpec {
   test("semanticPreflight: estimate equals the sequential assignment's pair count; refusal carries it; clear budgets change nothing") {
     val emb = planted(4, 50, 8) // 200 vectors
     val nlist = 4
-    val est = Ivf.semanticPreflight(emb, nlist).as[Long].head()
+    val est = Ivf.semanticPreflight(Ivf.semanticAssign(emb, nlist)).as[Long].head()
     // independent truth: the annIvfMd5-spec sequential reimplementation
     // of the md5-seed + integer-argmin assignment, pair mass by hand
     val rows = emb.collect().map(r => (r.getLong(0),
@@ -513,10 +515,11 @@ class IvfSpec extends SparkSpec {
       .map(g => g.size.toLong * (g.size - 1) / 2).sum
     assert(est == want, s"preflight $est != sequential truth $want")
     // nlist = 1 anchor: everything in one cell, mass exactly C(n, 2)
-    assert(Ivf.semanticPreflight(emb, 1).as[Long].head() == 200L * 199 / 2)
+    assert(Ivf.semanticPreflight(Ivf.semanticAssign(emb, 1)).as[Long].head() ==
+      200L * 199 / 2)
     // refusal carries the same estimate; budget 0 always trips
     val e = intercept[graft.ops.CandidateMassExceeded] {
-      Ivf.semanticDedup(emb, 0.4, nlist, maxPairs = 0L)
+      Ivf.semanticDedup(emb, Ivf.semanticAssign(emb, nlist), 0.4, maxPairs = 0L)
     }
     assert(e.operator == "semanticDedup" && e.estimatedPairs == est,
       s"refusal estimate ${e.estimatedPairs} != preflight $est")
@@ -524,37 +527,39 @@ class IvfSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(t => (t._1, t._2)).toSeq
-    val default = canon(Ivf.semanticDedup(emb, 0.4, nlist))
-    val guarded = canon(Ivf.semanticDedup(emb, 0.4, nlist, maxPairs = est))
+    val default = canon(Ivf.semanticDedup(emb, Ivf.semanticAssign(emb, nlist), 0.4))
+    val guarded = canon(Ivf.semanticDedup(emb, Ivf.semanticAssign(emb, nlist), 0.4,
+      maxPairs = est))
     assert(default == guarded && default.nonEmpty)
   }
 
   test("semanticDedupGoverned: exact arm when the mass clears, hier COMPLETION when it doesn't, estimate attached, no resident blocks") {
     val emb = planted(4, 50, 8) // 200 vectors
     val nlist = 4
-    val mass = Ivf.semanticPreflight(emb, nlist).as[Long].head()
+    def assigned = Ivf.semanticAssign(emb, nlist)
+    val mass = Ivf.semanticPreflight(assigned).as[Long].head()
     assert(mass > 1L)
     def decisions(df: org.apache.spark.sql.DataFrame) = df
       .select($"vec_id", $"dup_of", $"max_cosine").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // exact arm: the governed result IS the flat form's decision set
-    val gEx = Ivf.semanticDedupGovernedResult(emb, 0.4, nlist, maxPairs = mass)
+    val gEx = Ivf.semanticDedupGoverned(emb, assigned, 0.4, maxPairs = mass)
     assert(gEx.method == "exact" && gEx.estimatedPairs == mass)
-    val flat = decisions(Ivf.semanticDedup(emb, 0.4, nlist))
+    val flat = decisions(Ivf.semanticDedup(emb, assigned, 0.4))
     assert(decisions(gEx.pairs) == flat && flat.nonEmpty)
     // over-budget: COMPLETES via the hier form (no CandidateMassExceeded),
     // matching the hier operator's own decisions, estimate attached
     // (refusal-releases-cuts hygiene for this tier is pinned in
     // SimilaritySpec's zero-resident-blocks test)
-    val gH = Ivf.semanticDedupGovernedResult(emb, 0.4, nlist,
+    val gH = Ivf.semanticDedupGoverned(emb, assigned, 0.4,
       maxPairs = mass - 1, coarse = 4, fine = 2)
     assert(gH.method == "hier" && gH.estimatedPairs == mass)
     assert(decisions(gH.pairs) ==
       decisions(Ivf.semanticDedupHier(emb, 0.4, 4, 2)))
-    // the flattened face carries the decision as lineage columns
-    val row = Ivf.semanticDedupGoverned(emb, 0.4, nlist,
+    // the flattened frame carries the decision as lineage columns
+    val row = Ivf.semanticDedupGoverned(emb, assigned, 0.4,
       maxPairs = mass - 1, coarse = 4, fine = 2)
-      .select($"method", $"estimated_pairs").head()
+      .frame.select($"method", $"estimated_pairs").head()
     assert(row.getString(0) == "hier" && row.getLong(1) == mass)
   }
 }

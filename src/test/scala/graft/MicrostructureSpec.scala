@@ -339,7 +339,7 @@ class MicrostructureSpec extends SparkSpec {
     val inc = Similarity.minhashNearDupIncremental(
       docs.filter(col("doc_id") >= split), dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val full = Similarity.minhashNearDup(docs)
+    val full = Similarity.minhashNearDup(Similarity.shingleHashes(docs).localCheckpoint())
       .filter(col("doc_b") >= split)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(inc === full)
@@ -354,7 +354,8 @@ class MicrostructureSpec extends SparkSpec {
       (1L, tpl + " y", "en", "sB", 1L),
       (2L, "totally different words entirely unrelated content here now", "en", "sA", 1L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val out = Similarity.nearDupBySource(docs).collect()
+    val pairs = Similarity.minhashNearDup(Similarity.shingleHashes(docs).localCheckpoint())
+    val out = Similarity.nearDupBySource(docs, pairs).collect()
     assert(out.length === 1)
     val r = out.head
     assert(r.getString(0) === "sA" && r.getString(1) === "sB")

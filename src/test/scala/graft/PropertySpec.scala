@@ -167,7 +167,8 @@ class PropertySpec extends SparkSpec {
   test("substringDedup equals a sequential reference on generated corpora") {
     val k = 3
     samples(corpusGen, 6, 300L).foreach { docs =>
-      val out = TextAnalysis.substringDedup(docs.toDF("doc_id", "text"), k)
+      val df = docs.toDF("doc_id", "text")
+      val out = TextAnalysis.substringDedup(df, TextAnalysis.dupStarts(df, k), k)
         .collect()
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4))))
         .toMap

@@ -32,8 +32,12 @@ class SimilaritySpec extends SparkSpec {
     assert(out.filter(col("doc_id") === 0L).count() == 1) // min id kept
   }
 
+  /** minhashNearDup's in-memory input: the corpus tokenized once, cut. */
+  private def inMemoryHashes(d: org.apache.spark.sql.DataFrame) =
+    Similarity.shingleHashes(d).localCheckpoint()
+
   test("minhashNearDup: finds planted near-dup and exact pair, skips unrelated") {
-    val pairs = Similarity.minhashNearDup(docs, threshold = 0.3)
+    val pairs = Similarity.minhashNearDup(inMemoryHashes(docs), threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val keys = pairs.map(p => (p._1, p._2)).toSet
     assert(keys.contains((0L, 3L))) // exact copy: jaccard 1.0
@@ -59,8 +63,10 @@ class SimilaritySpec extends SparkSpec {
   test("minhashNearDupPersisted: writes the artifact, result identical to in-memory form") {
     val dir = java.nio.file.Files.createTempDirectory("graft_mh_spec_").toString + "/hashes"
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val mem = Similarity.minhashNearDup(docs, threshold = 0.3).collect().map(key).toSet
-    val per = Similarity.minhashNearDupPersisted(docs, dir, threshold = 0.3)
+    val mem = Similarity.minhashNearDup(inMemoryHashes(docs), threshold = 0.3)
+      .collect().map(key).toSet
+    Similarity.shingleHashes(docs).write.parquet(dir)
+    val per = Similarity.minhashNearDup(spark.read.parquet(dir), threshold = 0.3)
       .collect().map(key).toSet
     assert(per == mem && per.nonEmpty)
     // the artifact is a real, re-readable (doc_id, h) table
@@ -122,7 +128,8 @@ class SimilaritySpec extends SparkSpec {
     val e = Seq(
       (0L, Array(1f, 0f)), (1L, Array(1f, 0f)), (2L, Array(0f, 1f))
     ).toDF("vec_id", "embedding")
-    val rows = Similarity.dedupEnsemble(d, e, 10L, 0.1).collect()
+    val rows = Similarity.dedupEnsemble(Similarity.ngramJaccard(d, 10L, 0.1), e)
+      .collect()
     assert(rows.length == 1)
     val r = rows.head
     assert((r.getLong(0), r.getLong(1)) == ((0L, 1L)))
@@ -749,7 +756,7 @@ class SimilaritySpec extends SparkSpec {
 
     // --- Cosine: same contract over the tf-idf prefix (no size filter
     // in its join, so the estimate is exactly the unordered join mass).
-    val (_, cpref) = Similarity.cosineFeatsAndPrefix(d, 0.85)
+    val (_, cpref) = Similarity.cosineFeatsAndPrefix(d, 0.85, cutPref = true)
     val cosMass = cpref.as("a").join(cpref.as("b"),
       $"a.t" === $"b.t" && $"a.doc_id" < $"b.doc_id").count()
     val ec = intercept[graft.ops.CandidateMassExceeded] {
@@ -859,8 +866,9 @@ class SimilaritySpec extends SparkSpec {
       Similarity.allPairsCosine(d, 0.85, maxCandidatePairs = 0L)
     }
     intercept[graft.ops.CandidateMassExceeded] {
-      graft.ops.Ivf.semanticDedup(
-        graft.io.Tables.embeddings(spark, sf), 0.95, 8, maxPairs = 0L)
+      val emb = graft.io.Tables.embeddings(spark, sf)
+      graft.ops.Ivf.semanticDedup(emb, graft.ops.Ivf.semanticAssign(emb, 8),
+        0.95, maxPairs = 0L)
     }
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert((after -- before).isEmpty,
@@ -879,7 +887,7 @@ class SimilaritySpec extends SparkSpec {
     // --- Jaccard, exact arm: the governed result IS allPairsJaccard
     val exact = Similarity.allPairsJaccard(d, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val gEx = Similarity.neardupGovernedResult(d, 0.5, maxCandidatePairs = mass)
+    val gEx = Similarity.neardupGoverned(d, 0.5, maxCandidatePairs = mass)
     assert(gEx.method == "exact" && gEx.estimatedPairs == mass)
     assert(gEx.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       == exact && exact.nonEmpty)
@@ -887,7 +895,7 @@ class SimilaritySpec extends SparkSpec {
     // --- Jaccard, banded arm: an over-budget corpus COMPLETES via the
     // LSH fallback (no CandidateMassExceeded), precision 1 vs the exact
     // set, the planted near-dup family still found, estimate attached
-    val gB = Similarity.neardupGovernedResult(d, 0.5,
+    val gB = Similarity.neardupGoverned(d, 0.5,
       maxCandidatePairs = mass - 1)
     assert(gB.method == "banded" && gB.estimatedPairs == mass)
     val banded = gB.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -895,7 +903,7 @@ class SimilaritySpec extends SparkSpec {
       s"banded arm emitted non-exact pairs: ${(banded -- exact).take(3)}")
     // the flattened face carries the decision as lineage columns
     val row = Similarity.neardupGoverned(d, 0.5, maxCandidatePairs = mass - 1)
-      .select($"method", $"estimated_pairs").head()
+      .frame.select($"method", $"estimated_pairs").head()
     assert(row.getString(0) == "banded" && row.getLong(1) == mass)
 
     // --- Cosine twin: same contract; banded pairs verified by the SAME
@@ -906,12 +914,12 @@ class SimilaritySpec extends SparkSpec {
     }.estimatedPairs
     val cExact = Similarity.allPairsCosine(db, 0.85).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val cgEx = Similarity.cosineGovernedResult(db, 0.85,
+    val cgEx = Similarity.cosineGoverned(db, 0.85,
       maxCandidatePairs = cMass)
     assert(cgEx.method == "exact" && cgEx.estimatedPairs == cMass)
     assert(cgEx.pairs.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == cExact)
-    val cgB = Similarity.cosineGovernedResult(db, 0.85,
+    val cgB = Similarity.cosineGoverned(db, 0.85,
       maxCandidatePairs = cMass - 1)
     assert(cgB.method == "banded" && cgB.estimatedPairs == cMass)
     val cBanded = cgB.pairs.collect()
@@ -935,7 +943,7 @@ class SimilaritySpec extends SparkSpec {
     assert(banded.nonEmpty)
     // exact arm: a clearing budget routes exact; at t=0.3/k=32 the
     // banded probe's recall is ~1, so the two arms agree on this corpus
-    val gEx = Similarity.neardupGovernedIncrementalResult(batch, idxDir,
+    val gEx = Similarity.neardupGovernedIncremental(batch, idxDir,
       0.3, maxCandidatePairs = Long.MaxValue - 1)
     assert(gEx.method == "exact" && gEx.estimatedPairs > 0L)
     val exact = pairSet(gEx.pairs)
@@ -944,14 +952,14 @@ class SimilaritySpec extends SparkSpec {
     // every emitted pair's LARGER id is from the batch (both arms)
     assert(exact.forall(_._2 >= split))
     // over-budget batch routes banded, estimate attached, same pairs
-    val gB = Similarity.neardupGovernedIncrementalResult(batch, idxDir,
+    val gB = Similarity.neardupGovernedIncremental(batch, idxDir,
       0.3, maxCandidatePairs = gEx.estimatedPairs - 1)
     assert(gB.method == "banded" && gB.estimatedPairs == gEx.estimatedPairs)
     assert(pairSet(gB.pairs) == banded)
     // lineage columns on the flattened face
     val row = Similarity.neardupGovernedIncremental(batch, idxDir, 0.3,
       maxCandidatePairs = gEx.estimatedPairs - 1)
-      .select($"method", $"estimated_pairs").head()
+      .frame.select($"method", $"estimated_pairs").head()
     assert(row.getString(0) == "banded" && row.getLong(1) == gEx.estimatedPairs)
   }
 }

@@ -114,7 +114,9 @@ class TextAnalysisSpec extends SparkSpec {
       (3L, "m n o m n o m n o"),       // repeats only WITHIN itself
       (4L, "q r")                      // < k tokens: excluded
     ).toDF("doc_id", "text")
-    val out = graft.ops.TextAnalysis.substringDedup(docs, 3).collect()
+    val starts = graft.ops.TextAnalysis.dupStarts(docs, 3)
+    val rows = graft.ops.TextAnalysis.substringDedup(docs, starts, 3).collect()
+    val out = rows
       .map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getDouble(5)))).toMap
     // doc 1: dup starts {1,2} -> covered = 3 + 1 = 4 of 6 tokens
@@ -124,10 +126,20 @@ class TextAnalysisSpec extends SparkSpec {
     // doc 3: "m n o" occurs 3x but in ONE doc -> nothing flagged
     assert(out(3L) == ((9, 7, 0, 0, 0.0)))
     assert(!out.contains(4L))
+    // the persisted artifact the registered queries read gives the same
+    // profile, and its k stamp refuses a reader at another k
+    val dir = java.nio.file.Files.createTempDirectory("graft_dup_starts_")
+      .toString + "/starts"
+    starts.write.parquet(dir)
+    val persisted = graft.ops.TextAnalysis.readDupStarts(spark, dir, 3)
+    assert(graft.ops.TextAnalysis.substringDedup(docs, persisted, 3).collect()
+      .toSet == rows.toSet)
+    intercept[IllegalArgumentException](
+      graft.ops.TextAnalysis.readDupStarts(spark, dir, 4))
 
     // the removal step on the same corpus: covered positions drop,
     // survivors reassemble in order, untouched docs pass through
-    val applied = graft.ops.TextAnalysis.substringDedupApply(docs, 3).collect()
+    val applied = graft.ops.TextAnalysis.substringDedupApply(docs, starts, 3).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getInt(2), r.getInt(3)))).toMap
     assert(applied(1L) == (("e f", 6, 4)))
     assert(applied(2L) == (("x y z", 7, 4)))
@@ -150,7 +162,8 @@ class TextAnalysisSpec extends SparkSpec {
       .crossDocDupStartsRouted(base, 3, sampleFrac = 1.0, hotMin = 2L)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     // reference: the plain window verdict over the same frame
-    val expected = graft.ops.TextAnalysis.substringDedup(docs, 3)
+    val expected = graft.ops.TextAnalysis
+      .substringDedup(docs, graft.ops.TextAnalysis.dupStarts(docs, 3), 3)
       .collect().map(r => r.getLong(0) -> r.getInt(3)).toMap
     // boilerplate window (s=1) duplicated in every doc; docs 7/11 share
     // their full tails too

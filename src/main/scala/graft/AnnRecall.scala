@@ -67,8 +67,7 @@ object AnnRecall {
     // recall — a data property the adaptive rule detects and pays for,
     // while staying narrow on planted clustered corpora (IvfSpec).
     {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_recall_ivf").toString + "/layout"
+      val dir = graft.io.ScratchDirs.create("recall_ivf").toString + "/layout"
       val cents = ops.Ivf.writeIvfLayout(emb, dir, nlist = 16, iters = 3)
       val q = emb.filter(col("vec_id") === 0L).select(col("embedding"))
         .head().getAs[scala.collection.Seq[Float]](0).toArray
@@ -94,8 +93,7 @@ object AnnRecall {
     // the 2^6-bucket layout), plus the r14 fixed radius-1 point for
     // contrast — the documented operating-point evidence.
     {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_recall_lsh").toString + "/layout"
+      val dir = graft.io.ScratchDirs.create("recall_lsh").toString + "/layout"
       ops.Similarity.writeAnnLayout(emb, dir, nPlanes = 6)
       val curve = Seq(0.125, 0.25, 0.375, 0.5).map { budget =>
         val got = ops.Similarity.annLshBucketedAdaptive(spark, dir, 0L, k,

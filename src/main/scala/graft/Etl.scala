@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.io.{Sinks, Sources}
 import graft.ops.Resample
@@ -25,6 +26,14 @@ object Etl {
       warehousePath: String,
       exportDir: String)         // analytics CSV export
 
+  /** The silver zone's schema as a parquet scan of it reads it back: the
+    * written columns, nullable, then the `month` partition column, whose
+    * yyyy-MM values partition inference keeps as strings.
+    */
+  private[graft] def silverSchema(written: StructType): StructType =
+    StructType(written.fields.map(_.copy(nullable = true)) :+
+      StructField("month", StringType))
+
   /** Run the full chain over an already-landed events frame. Returns the
     * exported summary (what Looker would read). Each stage is the
     * registered operator — this is wiring, not new semantics.
@@ -41,8 +50,10 @@ object Etl {
       org.apache.spark.sql.functions.timestamp_seconds(
         org.apache.spark.sql.functions.col("bucket")))
     Sinks.overwriteByMonth(hourlyTs, "bucket_ts", cfg.aggregatedDir)
-    // warehouse load (S10) from the silver zone.
-    val silver = spark.read.parquet(cfg.aggregatedDir)
+    // warehouse load (S10) from the silver zone, declared with the schema
+    // just written: inferring it would run a footer job per run.
+    val silver = spark.read.schema(silverSchema(hourlyTs.schema))
+      .parquet(cfg.aggregatedDir)
     Sinks.saveTable(silver.drop("month", "bucket_ts"),
       cfg.warehouseTable, cfg.warehousePath)
     // export (S11) with the empty guard — BOTH forms: the reference

@@ -76,8 +76,7 @@ object KlineScale {
       val p = java.nio.file.Paths.get(d)
       java.nio.file.Files.createDirectories(p)
       p.toString
-    }.getOrElse(java.nio.file.Files
-      .createTempDirectory("graft_kline_scale").toString)
+    }.getOrElse(graft.io.ScratchDirs.create("kline_scale").toString)
 
     // land N months as header-less CSV (the reference's zip payload
     // shape), gapless across every seam. Default N=2 IS the reference's

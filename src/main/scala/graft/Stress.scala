@@ -171,8 +171,7 @@ object Stress {
     val planes = ops.Similarity.planesFor(emb)
     println(f"STRESS emb_planes_for        ${(System.nanoTime() - tP0) / 1e9}%8.2f s  " +
       f"($nVec vectors -> $planes planes, ${1 << planes} buckets)")
-    val layout = java.nio.file.Files.createTempDirectory("graft_stress_ann_")
-      .toString + "/layout"
+    val layout = graft.io.ScratchDirs.create("stress_ann").toString + "/layout"
     val tB0 = System.nanoTime()
     ops.Similarity.writeAnnLayout(emb, layout, planes)
     println(f"STRESS emb_layout_build      ${(System.nanoTime() - tB0) / 1e9}%8.2f s  ($nVec vectors)")
@@ -208,8 +207,7 @@ object Stress {
     // cell-partitioned write, the one-time artifact) vs steady-state
     // probe. nlist ~ √n per the FAISS rule; 2 Lloyd rounds move the
     // md5-sampled seeds onto the planted structure.
-    val ivfDir = java.nio.file.Files.createTempDirectory("graft_stress_ivf_")
-      .toString + "/layout"
+    val ivfDir = graft.io.ScratchDirs.create("stress_ivf").toString + "/layout"
     val nlist = math.max(math.sqrt(nVec.toDouble).toInt, 16)
     // Training-sample payoff: Lloyd rounds over a 10% hash-sample vs the
     // full corpus (the layout's one full-corpus assignment is unchanged —

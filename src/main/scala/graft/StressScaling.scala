@@ -100,7 +100,7 @@ object StressScaling {
   }
 
   private def tmp(kind: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_scaling_$kind").toString + "/a"
+    graft.io.ScratchDirs.create(s"scaling_$kind").toString + "/a"
 
   def main(args: Array[String]): Unit = {
     val baseDocs = args.headOption.map(_.toLong).getOrElse(5000L)

@@ -1,8 +1,13 @@
 package graft.io
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 /** Readers for the driver-generated star-schema test tables (TESTDATA.md).
   *
@@ -13,14 +18,68 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * `components/btcusdt_ingest_data.py:11-34`) — lives in
   * [[graft.io.Sources]]; these helpers are the harness-facing entry points.
   *
-  * Scale note: each is a plain `spark.read.parquet`, so Catalyst's column
-  * pruning and predicate pushdown reach the scan untouched. Do NOT cache or
-  * materialize here — at 100 TB the winning move is to let every query
-  * prune/push into its own scan.
+  * Scale note: each reads through [[parquet]], which infers a table's
+  * schema once per JVM and hands it to every later read, so a query
+  * starts no footer job while its frame is built. The read is still a
+  * plain file scan: Catalyst's column pruning and predicate pushdown reach
+  * it untouched. Do NOT cache or materialize here — at 100 TB the winning
+  * move is to let every query prune/push into its own scan.
   */
 object Tables {
+
+  /** What a schema was inferred from: the path's qualified name, length
+    * and modification time, and the session's `*.parquet.*` conf entries
+    * (they change what the footer reads as — `events.ts` under
+    * `nanosAsLong`).
+    */
+  private final case class SchemaKey(path: String, length: Long, mtime: Long,
+                                     conf: Map[String, String])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** A parquet input that never changes under its path once written — a
+    * fixture table or a write-once scratch artifact. The first read of a
+    * path infers its schema, which without a declared one is a one-task
+    * footer job per call; later reads declare the inferred schema and
+    * start no job. A file rewritten at the path has another length or
+    * modification time and is inferred again. Dirs that are appended to
+    * must not be read here: a new file below a partitioned root leaves
+    * the root's own status unchanged.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val key = SchemaKey(fs.makeQualified(p).toString, st.getLen,
+      st.getModificationTime,
+      spark.conf.getAll.filter { case (k, _) => k.contains(".parquet.") })
+    // get-then-put: the inference job never runs inside a map update
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+    }
+  }
+
+  /** Drop the schemas of local dir `dir` and of everything below it: the
+    * dir is being deleted, and a later dir at its path is another input.
+    */
+  private[graft] def forget(dir: String): Unit = {
+    val root = java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    schemas.keySet.removeIf { k =>
+      val p = new Path(k.path).toUri.getPath
+      p == root || p.startsWith(s"$root/")
+    }
+  }
+
+  /** The qualified paths that have a cached schema. */
+  private[graft] def schemaPaths: Set[String] =
+    schemas.keySet.asScala.map(_.path).toSet
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, dir: String): DataFrame    = table(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame    = table(s, dir, "nation")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -193,6 +193,11 @@ object Pipeline {
     */
   def dataCard(documents: DataFrame,
                pairMassThreshold: Double = 0.85): DataFrame = {
+    // A double sum's last bits follow the order the shuffle delivers its
+    // rows in, and the card must not change with the partitioning: each
+    // term is rounded to 18 decimal places, summed exactly as a decimal,
+    // and the total rounded once to double.
+    def exactSum(c: Column): Column = sum(c.cast(DecimalType(38, 18))).cast("double")
     val toks = split(lower(col("text")), " ")
     // Stable-cut (r18-opt): perDoc feeds the per-source rollup AND the
     // language-entropy branch — lazily each re-ran the doc projection,
@@ -213,12 +218,12 @@ object Pipeline {
       sum(col("n_toks")).as("n_tokens"),
       sum(col("n_chr")).as("n_chars"),
       countDistinct(col("h")).as("n_unique"),
-      avg(col("quality")).as("mean_quality"))
+      (exactSum(col("quality")) / count(col("quality"))).as("mean_quality"))
     val ent = perDoc.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("c"))
       .join(bySource.select(col("source"), col("n_docs")), "source")
       .groupBy(col("source"))
-      .agg(sum((col("c").cast("double") / col("n_docs").cast("double")) *
+      .agg(exactSum((col("c").cast("double") / col("n_docs").cast("double")) *
         (log2(col("n_docs").cast("double")) - log2(col("c").cast("double"))))
         .as("lang_entropy"))
     bySource.join(ent, "source")

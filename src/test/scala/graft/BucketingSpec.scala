@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
+import graft.io.ScratchDirs
 import graft.ops.Joins
 
 /** Scale mechanics that only show up in plans: bucketed co-located joins
@@ -13,7 +12,7 @@ class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed tables join without a shuffle exchange") {
-    val dir = Files.createTempDirectory("graft_bucket_").toString
+    val dir = ScratchDirs.create("bucket").toString
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val ord = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     li.write.mode("overwrite").option("path", s"$dir/li")
@@ -72,7 +71,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("month-partitioned zone: month filter prunes partitions at the scan") {
-    val dir = s"${Files.createTempDirectory("graft_prune_").toString}/zone"
+    val dir = s"${ScratchDirs.create("prune").toString}/zone"
     val rows = (0 until 84).map { d =>
       (java.sql.Timestamp.valueOf(f"2024-${d / 28 + 1}%02d-${d % 28 + 1}%02d 12:00:00"),
         d.toDouble)

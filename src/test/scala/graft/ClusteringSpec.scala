@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.ScratchDirs
 import graft.ops.Clustering
 
 /** Connected components: transitive closure, not just pair grouping. */
@@ -109,7 +110,7 @@ class ClusteringSpec extends SparkSpec {
     assert(spark.sparkContext.getCheckpointDir.isEmpty,
       "precondition: suite session has no checkpoint dir")
     val localResult = labels()
-    val dir = java.nio.file.Files.createTempDirectory("graft_reliable_ckpt")
+    val dir = ScratchDirs.create("reliable_ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
       assert(spark.sparkContext.getCheckpointDir.isDefined)

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import graft.io.ScratchDirs
 
 /** The full orchestrated chain (crawl manifest → transform → silver zone
   * → warehouse → export) over real sf0.001 events, run twice to prove
@@ -9,7 +9,7 @@ import java.nio.file.Files
 class EtlSpec extends SparkSpec {
 
   test("Etl.run: end-to-end chain, idempotent on re-run") {
-    val base = Files.createTempDirectory("graft_etlspec_").toString
+    val base = ScratchDirs.create("etlspec").toString
     val cfg = Etl.EtlConfig(
       sources = Seq("BTCUSDT-1s"),
       periods = Seq("2024-01"),
@@ -36,5 +36,17 @@ class EtlSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Etl.run(spark, events, cfg.copy(periods = Seq("not-a-period")))
     }
+  }
+
+  test("Etl.run: the declared silver read-back schema is the one a parquet scan infers") {
+    val base = ScratchDirs.create("etlspec").toString
+    val cfg = Etl.EtlConfig(Seq("BTCUSDT-1s"), Seq("2024-01"), s"$base/landing",
+      s"$base/agg", "etlspec_schema_table", s"$base/wh", s"$base/export")
+    val events = graft.io.Tables.events(spark, "/root/testdata/sf0.001")
+    Etl.run(spark, events, cfg)
+    val written = graft.ops.Resample.ohlcHourly(events).withColumn("bucket_ts",
+      org.apache.spark.sql.functions.timestamp_seconds(
+        org.apache.spark.sql.functions.col("bucket"))).schema
+    assert(Etl.silverSchema(written) == spark.read.parquet(cfg.aggregatedDir).schema)
   }
 }

@@ -4,7 +4,7 @@ import java.io.{File, FileOutputStream}
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
-import graft.io.{Sinks, Sources}
+import graft.io.{ScratchDirs, Sinks, Sources}
 import graft.schema.KlineSchema
 
 /** Ingest/sink surface specs: header-less kline CSV with the canonical
@@ -15,7 +15,7 @@ class IoSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft_iospec_").toString
+    ScratchDirs.create("iospec").toString
 
   private val klineCsv =
     """1704067200000,42000.0,42100.0,41900.0,42050.0,12.5,1704067200999,525625.0,321,6.2,260687.5,0

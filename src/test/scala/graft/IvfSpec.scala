@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.io.ScratchDirs
 import graft.ops.{Ivf, Similarity}
 
 /** IVF ANN contracts — pinned WITHOUT assuming k-means found the planted
@@ -28,7 +27,7 @@ class IvfSpec extends SparkSpec {
 
   test("ivf: cell assignment is exactly nearest-centroid (ties to lower cid)") {
     val emb = planted(4, 50, 8)
-    val dir = Files.createTempDirectory("graft_ivf").toString + "/layout"
+    val dir = ScratchDirs.create("ivf").toString + "/layout"
     val cents = Ivf.writeIvfLayout(emb, dir, nlist = 4, iters = 3)
     val norms = cents.map(_.map(v => v.toDouble * v).sum)
     spark.read.parquet(dir)
@@ -52,7 +51,7 @@ class IvfSpec extends SparkSpec {
     val emb = planted(4, 50, 8)
     val first = emb.filter(col("vec_id") < 100L)
     val second = emb.filter(col("vec_id") >= 100L)
-    val dir = Files.createTempDirectory("graft_ivf_app").toString + "/layout"
+    val dir = ScratchDirs.create("ivf_app").toString + "/layout"
     val cents = Ivf.writeIvfLayout(first, dir, nlist = 4, iters = 3)
     Ivf.appendToLayout(second, dir)
     val back = spark.read.parquet(dir)
@@ -84,7 +83,7 @@ class IvfSpec extends SparkSpec {
 
   test("ivf probe: directory pruning + exact within probed cells; all-cells = brute force") {
     val emb = planted(4, 50, 8)
-    val dir = Files.createTempDirectory("graft_ivf").toString + "/layout"
+    val dir = ScratchDirs.create("ivf").toString + "/layout"
     Ivf.writeIvfLayout(emb, dir, nlist = 4, iters = 3)
     val cents = Ivf.readCentroids(spark, dir)
     val q = emb.filter($"vec_id" === 0L)
@@ -147,7 +146,7 @@ class IvfSpec extends SparkSpec {
     // The adaptive probe returns the same rows as the fixed probe over
     // the same routed cells — the scan is shared machinery.
     val emb = planted(4, 50, 8)
-    val dir = Files.createTempDirectory("graft_ivf_ad").toString + "/layout"
+    val dir = ScratchDirs.create("ivf_ad").toString + "/layout"
     val cents = Ivf.writeIvfLayout(emb, dir, nlist = 4, iters = 3)
     val q = emb.filter($"vec_id" === 0L)
       .head.getAs[scala.collection.Seq[Float]]("embedding").toArray
@@ -171,7 +170,7 @@ class IvfSpec extends SparkSpec {
     // a 30% hash-sample still has ~30 points per planted bundle — the
     // trained cells must still assign each bundle coherently: probing the
     // query's cell returns only same-bundle neighbors
-    val dir = Files.createTempDirectory("graft_ivf").toString + "/layout"
+    val dir = ScratchDirs.create("ivf").toString + "/layout"
     Ivf.writeIvfLayout(emb, dir, nlist = 4, iters = 3, trainSampleRate = 0.3)
     val cents = Ivf.readCentroids(spark, dir)
     val q = emb.filter($"vec_id" === 0L)
@@ -347,7 +346,7 @@ class IvfSpec extends SparkSpec {
     val emb = planted(4, 50, 8)
     val first = emb.filter(col("vec_id") < 100L)
     val iid = emb.filter(col("vec_id") >= 100L)
-    val dir = Files.createTempDirectory("graft_ivf_drift").toString + "/layout"
+    val dir = ScratchDirs.create("ivf_drift").toString + "/layout"
     Ivf.writeIvfLayout(first, dir, nlist = 4, iters = 3)
     // i.i.d. batch: same gaussian bundles (σ=0.1) the layout was trained
     // on — per-cell means land within a few noise σ of the centroids

@@ -1,10 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
-import graft.io.Layout
+import graft.io.{Layout, ScratchDirs}
 
 /** Z-order layout: interleave arithmetic and the locality it buys —
   * a 2-D box query's rows concentrate in few files of the clustered
@@ -42,7 +40,7 @@ class LayoutSpec extends SparkSpec {
       col("id"),
       (pmod(xxhash64(col("id") * 31L), lit(100000L)) / 100000.0).as("x"),
       (pmod(xxhash64(col("id") * 37L), lit(100000L)) / 100000.0).as("y"))
-    val base = Files.createTempDirectory("graft_zorder_").toString
+    val base = ScratchDirs.create("zorder").toString
     Layout.writeZOrdered(pts, Seq("x", "y"), bits = 8, nFiles = 64, dir = s"$base/z")
     pts.repartition(64).write.parquet(s"$base/rows") // the unclustered control
 
@@ -71,7 +69,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact: shrinks a small-file directory to the byte-target count, data identical") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = ScratchDirs.create("compact").toString + "/t"
     val df = (0 until 10000).map(i => (i.toLong, s"row_$i")).toDF("id", "s")
     df.repartition(64).write.parquet(dir)
     def parquetFiles(d: String) = new java.io.File(d).listFiles()
@@ -94,7 +92,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compactPartitioned: each key=value directory compacts in place; table unchanged") {
-    val root = Files.createTempDirectory("graft_compactp").toString + "/t"
+    val root = ScratchDirs.create("compactp").toString + "/t"
     val df = (0 until 8000)
       .map(i => (i.toLong, if (i % 2 == 0) "2024-01" else "2024-02"))
       .toDF("id", "month")

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
+import graft.io.ScratchDirs
 import graft.ops.{Microstructure, Similarity}
 
 /** Hand-computed contracts for the microstructure/risk tier and the
@@ -334,7 +335,7 @@ class MicrostructureSpec extends SparkSpec {
       (i.toLong, txt, "en", s"src${i % 3}", txt.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
     val split = 30L
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_test_").toString
+    val dir = ScratchDirs.create("idx_test").toString
     Similarity.writeNearDupIndex(docs.filter(col("doc_id") < split), dir)
     val inc = Similarity.minhashNearDupIncremental(
       docs.filter(col("doc_id") >= split), dir)

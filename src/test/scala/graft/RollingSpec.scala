@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.agg.CumProd
+import graft.io.ScratchDirs
 import graft.ops.Rolling
 
 /** Notebook-analytics fixtures (FIXTURES §A2): rolling means, cumprod
@@ -70,7 +71,7 @@ class RollingSpec extends SparkSpec {
     }
     check(Rolling.cumprodEquityChunked(df).orderBy("event_id").collect())
     // persisted two-pass: pass-1 artifact on disk, same result
-    val work = java.nio.file.Files.createTempDirectory("graft_cumprod_").toString + "/pass1"
+    val work = ScratchDirs.create("cumprod").toString + "/pass1"
     check(Rolling.cumprodEquityChunked(df, workDir = Some(work))
       .orderBy("event_id").collect())
     assert(spark.read.parquet(work).columns.contains("g"))

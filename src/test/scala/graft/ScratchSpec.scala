@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry.{Artifact, scratchDir}
-import graft.io.ScratchDirs
+import graft.io.{ScratchDirs, Tables}
 
 /** The declared scratch-artifact table behind [[SparkEntry.queries]]:
   * upstream builds, failed builds, and nested builds whose cache keys
@@ -96,5 +96,21 @@ class ScratchSpec extends SparkSpec {
       val got = rows(d)
       assert(got.nonEmpty && got == rows(sf), query)
     }
+  }
+
+  test("resetScratch leaves no cached schema for a dir it removes") {
+    val sf = "/root/testdata/sf0.001"
+    // exact_quantiles reads its bounds artifact; dedup_clusters reads its
+    // labels artifact, whose build reads its upstream pair list
+    Seq("exact_quantiles", "dedup_clusters").foreach(q =>
+      assert(SparkEntry.queries(q)(spark, sf).count() > 0, q))
+    val kinds = Seq("bounds_li_price", "ngram_cc_labels", "ngram_pairs")
+    def cached = Tables.schemaPaths.map(new org.apache.hadoop.fs.Path(_).toUri.getPath)
+      .filter(p => kinds.exists(k => p.contains(s"/graft_${k}_")))
+    val before = cached
+    kinds.foreach(k => assert(before.exists(_.contains(s"/graft_${k}_")), k))
+    SparkEntry.resetScratch()
+    assert(before.forall(p => !Files.exists(Paths.get(p))))
+    assert(cached.isEmpty)
   }
 }

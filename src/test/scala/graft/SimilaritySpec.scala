@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.io.ScratchDirs
 import graft.ops.Similarity
 
 /** LLM-tier operator specs: planted near-duplicates must be found, exact
@@ -61,7 +62,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("minhashNearDupPersisted: writes the artifact, result identical to in-memory form") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mh_spec_").toString + "/hashes"
+    val dir = ScratchDirs.create("mh_spec").toString + "/hashes"
     def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getDouble(2))
     val mem = Similarity.minhashNearDup(inMemoryHashes(docs), threshold = 0.3)
       .collect().map(key).toSet
@@ -290,7 +291,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat).toSeq, 1)
     }
     val emb = (cluster ++ noise).toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_layout_").toString + "/ann"
+    val dir = ScratchDirs.create("ann_layout").toString + "/ann"
     Similarity.writeAnnLayout(emb, dir)
     val bucketed = Similarity.annLshBucketed(spark, dir, 0L, 10)
     // the probe filter reaches the scan as a PARTITION filter (directory
@@ -317,7 +318,7 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Array.fill(dim)(rnd.nextGaussian().toFloat).toSeq, 1)
     }
     val emb = (cluster ++ noise).toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_adapt_").toString + "/ann"
+    val dir = ScratchDirs.create("ann_adapt").toString + "/ann"
     Similarity.writeAnnLayout(emb, dir, nPlanes = 6)
     val adaptive = Similarity.annLshBucketedAdaptive(spark, dir, 0L, 10,
       nPlanes = 6, scanBudget = 0.25)
@@ -503,7 +504,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("dedupIncremental: batch dedups within itself and against the corpus artifact; append admits nothing twice") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_keys_").toString + "/keys"
+    val dir = ScratchDirs.create("inc_keys").toString + "/keys"
     Similarity.writeCorpusKeys(docs.filter(col("doc_id") <= 1L), dir) // corpus: base, nearDup
     val batch = Seq(
       (10L, base, "en", "s9", base.length.toLong),      // dup of corpus doc 0 → dropped
@@ -520,7 +521,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("dedupIncrementalBloom: row-identical to the exact anti-join form") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom_keys_").toString + "/keys"
+    val dir = ScratchDirs.create("bloom_keys").toString + "/keys"
     Similarity.writeCorpusKeys(docs.filter(col("doc_id") <= 1L), dir)
     val batch = Seq(
       (10L, base, "en", "s9", base.length.toLong),
@@ -795,7 +796,7 @@ class SimilaritySpec extends SparkSpec {
     val resident = all.filter(_._1 % 2 == 0).toDF("vec_id", "embedding", "label")
     val batch = all.filter(_._1 % 2 == 1).toDF("vec_id", "embedding", "label")
     val embAll = all.toDF("vec_id", "embedding", "label")
-    val base = java.nio.file.Files.createTempDirectory("graft_ann_append_").toString
+    val base = ScratchDirs.create("ann_append").toString
     val incDir = base + "/inc"
     val fullDir = base + "/full"
     Similarity.writeAnnLayout(resident, incDir, nPlanes = 6)
@@ -934,8 +935,7 @@ class SimilaritySpec extends SparkSpec {
     val split = docs.agg(max($"doc_id")).head().getLong(0) * 8 / 10
     val base = docs.filter($"doc_id" < split)
     val batch = docs.filter($"doc_id" >= split)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft_gov_idx_").toString
+    val idxDir = ScratchDirs.create("gov_idx").toString
     Similarity.writeNearDupIndex(base, idxDir)
     def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

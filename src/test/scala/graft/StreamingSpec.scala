@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
+import graft.io.ScratchDirs
 import graft.ops.Resample
 import graft.stream.{StreamingResample, StreamingSink}
 
@@ -22,7 +22,7 @@ class StreamingSpec extends SparkSpec {
         if (i % 2 == 0) "btc" else "eth", 100.0 + rnd.nextGaussian())
     }.toDF("event_id", "ts", "event_type", "value")
 
-    val dir = Files.createTempDirectory("graft_stream_").toString
+    val dir = ScratchDirs.create("stream").toString
     events.write.mode("overwrite").parquet(s"$dir/in")
 
     val streamDf = StreamingResample.hourlyOhlc(
@@ -59,7 +59,7 @@ class StreamingSpec extends SparkSpec {
     val (phase1, phase2) = all.splitAt(1620) // boundary mid-hour at 4.5 h
     val sentinel = Seq((99999L,
       new Timestamp(1704067200000L + 50L * 3600000L), "btc", 1.0))
-    val dir = Files.createTempDirectory("graft_ckpt_").toString
+    val dir = ScratchDirs.create("ckpt").toString
 
     def runOnce(): Unit = {
       val q = StreamingResample.hourlyOhlc(spark, s"$dir/in",
@@ -115,7 +115,7 @@ class StreamingSpec extends SparkSpec {
     val phase1 = (0 until 1000).map { i =>
       (i.toLong, t0 + i * 60000L, if (i % 2 == 0) "btc" else "eth", 100.0 + i)
     } ++ Seq((5000L, feb, "btc", 7.0)) // one early February straggler
-    val dir = Files.createTempDirectory("graft_whsink_").toString
+    val dir = ScratchDirs.create("whsink").toString
     val schema = mkDf(phase1).schema
     mkDf(phase1).write.mode("append").parquet(s"$dir/in")
 
@@ -195,7 +195,7 @@ class StreamingSpec extends SparkSpec {
         .toDF("event_id", "ts", "event_type", "value")
     val jan = (0 until 200).map(i => (i.toLong, t0 + i * 60000L, "btc", 1.0 + i))
     val febRows = (0 until 50).map(i => (1000L + i, feb + i * 60000L, "eth", 2.0 + i))
-    val dir = Files.createTempDirectory("graft_wap_").toString
+    val dir = ScratchDirs.create("wap").toString
     val wh = s"$dir/wh"
     StreamingSink.upsertByMonth(mkDf(jan ++ febRows), "event_id", "ts", wh)
     assert(spark.read.parquet(wh).count() == 250)
@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
         if (i % 2 == 0) "btc" else "eth", 100.0 + rnd.nextGaussian())
     }
     val (phase1, phase2) = all.splitAt(1000) // boundary mid-hour (~2.8 h in)
-    val dir = Files.createTempDirectory("graft_aggsink_").toString
+    val dir = ScratchDirs.create("aggsink").toString
     val schema = phase1.toDF("event_id", "ts", "event_type", "value").schema
 
     def run(): Unit = {
@@ -359,7 +359,7 @@ class StreamingSpec extends SparkSpec {
     def ev(is: Seq[Int], offsetMs: Long = 0L) = is.map { i =>
       (i.toLong, new Timestamp(t0 + i * 60000L + offsetMs), "btc", 100.0 + i)
     }.toDF("event_id", "ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_soak_").toString
+    val dir = ScratchDirs.create("soak").toString
     val schema = ev(Seq(0)).schema
 
     def eventually(timeoutMs: Long)(cond: => Boolean): Boolean = {
@@ -431,7 +431,7 @@ class StreamingSpec extends SparkSpec {
     // oracle-able — the derived event set is). After ≥3 ProcessingTime
     // batches: every delivered id present exactly once (the upsert never
     // dropped or doubled a mid-flight batch), months consistent.
-    val dir = Files.createTempDirectory("graft_ratesoak_").toString
+    val dir = ScratchDirs.create("ratesoak").toString
     val events = spark.readStream.format("rate")
       .option("rowsPerSecond", "400").load()
       .select(col("value").as("event_id"),
@@ -475,7 +475,7 @@ class StreamingSpec extends SparkSpec {
     val d3 = drop(12, 18) :+
       ((99999L, new Timestamp(t0 + 1000L * 3600000L), "btc", 1.0)) // watermark push
     val schema = d1.toDF("event_id", "ts", "event_type", "value").schema
-    val dir = Files.createTempDirectory("graft_inc_").toString
+    val dir = ScratchDirs.create("inc").toString
 
     def land(rows: Seq[(Long, Timestamp, String, Double)]): Unit =
       rows.toDF("event_id", "ts", "event_type", "value")
@@ -529,7 +529,7 @@ class StreamingSpec extends SparkSpec {
     val events = (0 until 500).map { i =>
       (i.toLong, new Timestamp(1704067200000L + i * 60000L), "btc", 1.0)
     }.toDF("event_id", "ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_slide_").toString
+    val dir = ScratchDirs.create("slide").toString
     events.write.mode("overwrite").parquet(s"$dir/in")
     val q = StreamingResample.slidingVolume(spark, s"$dir/in", events.schema)
       .writeStream.format("memory").queryName("slide_t")
@@ -548,7 +548,7 @@ class StreamingSpec extends SparkSpec {
         if (i % 2 == 0) "btc" else "eth", 100.0 + rnd.nextGaussian())
     }.toDF("event_id", "ts", "event_type", "value")
     val dim = Seq(("btc", 2.0), ("eth", 0.5)).toDF("event_type", "weight")
-    val dir = Files.createTempDirectory("graft_enrich_").toString
+    val dir = ScratchDirs.create("enrich").toString
     events.write.mode("overwrite").parquet(s"$dir/in")
     val q = StreamingResample.enrichedVolume(spark, s"$dir/in", events.schema, dim)
       .writeStream.format("memory").queryName("enrich_t")
@@ -578,7 +578,7 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, new Timestamp(1704067200000L + i * 30000L),
         if (i % 4 < 2) "btc" else "eth", 100.0 + rnd.nextGaussian())
     }.toDF("event_id", "ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_ss_").toString
+    val dir = ScratchDirs.create("ss").toString
     events.write.mode("overwrite").parquet(s"$dir/in")
     val q = StreamingResample.tradesQuotesJoin(spark, s"$dir/in", events.schema)
       .writeStream.format("memory").queryName("ssj_t")
@@ -612,7 +612,7 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, new Timestamp(1704067200000L + i * 5000L),
         Seq("btc", "eth", "sol")(i % 3), 50.0 + rnd.nextGaussian() * 5)
     }.toDF("event_id", "ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_state_").toString
+    val dir = ScratchDirs.create("state").toString
     events.write.mode("overwrite").parquet(s"$dir/in")
     val q = graft.stream.StatefulRunning.runningStats(spark, s"$dir/in", events.schema)
       .writeStream.format("memory").queryName("state_t")
@@ -648,7 +648,7 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, new Timestamp(1704067200000L + i * 1000L),
         Seq("btc", "eth", "sol")(i % 3), 100.0 + (i * 41 % 23) - 11.0)
     }
-    val dir = Files.createTempDirectory("graft_sema_").toString
+    val dir = ScratchDirs.create("sema").toString
     all.grouped(100).foreach { chunk =>
       chunk.toDF("event_id", "ts", "event_type", "value")
         .coalesce(1).write.mode("append").parquet(s"$dir/in")
@@ -694,7 +694,7 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, new Timestamp(1704067200000L + i * 1000L), sym, px(sym),
         s"""{"k": ${i % 5 + 1}}""")
     }
-    val dir = Files.createTempDirectory("graft_sflow_").toString
+    val dir = ScratchDirs.create("sflow").toString
     // chunks of 104 rows: both symbols OPEN chunk 2 at k=52 (flat,
     // inheriting chunk 1's up-sign) and chunk 3 at k=104 (flat,
     // inheriting chunk 2's down-sign) — the carry must cross batches
@@ -741,7 +741,7 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, new Timestamp(1704067200000L + i * 1000L),
         Seq("btc", "eth")(i % 2), 100.0 + (i * 41 % 23) - 11.0)
     }
-    val dir = Files.createTempDirectory("graft_svb_").toString
+    val dir = ScratchDirs.create("svb").toString
     all.grouped(100).foreach { chunk =>
       chunk.toDF("event_id", "ts", "event_type", "value")
         .coalesce(1).write.mode("append").parquet(s"$dir/in")
@@ -796,7 +796,7 @@ class StreamingSpec extends SparkSpec {
         Seq("btc", "eth", "sol")(i % 3), 100.0 + (i * 41 % 23) - 11.0)
     }
     val (phase1, phase2) = all.splitAt(180) // 60 ticks/key, mid-series
-    val dir = Files.createTempDirectory("graft_semar_").toString
+    val dir = ScratchDirs.create("semar").toString
     val schema = all.take(1).toDF("event_id", "ts", "event_type", "value").schema
     // memory sink rejects checkpoint recovery; foreachBatch is the
     // recoverable sink contract, landing each run's update rows in its
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
         Seq("btc", "eth")(i % 2), 100.0 + (i * 41 % 23) - 11.0)
     }
     val (phase1, phase2) = all.splitAt(180)
-    val dir = Files.createTempDirectory("graft_svbr_").toString
+    val dir = ScratchDirs.create("svbr").toString
     val schema = all.take(1).toDF("event_id", "ts", "event_type", "value").schema
     val barUnits = 2000000L
     // append mode + the (recoverable) parquet file sink. The sink's
@@ -930,7 +930,7 @@ class StreamingSpec extends SparkSpec {
     // ends the up,up,flat,down,FLAT cycle), so the restored lastSign
     // (down) classifies nothing wrongly only if actually restored
     val (phase1, phase2) = all.splitAt(180)
-    val dir = Files.createTempDirectory("graft_sflowr_").toString
+    val dir = ScratchDirs.create("sflowr").toString
     val schema = all.take(1)
       .toDF("event_id", "ts", "event_type", "value", "props").schema
     def runOnce(outDir: String): Unit = {
@@ -989,7 +989,7 @@ class StreamingSpec extends SparkSpec {
     }
     val (phase1, phase2) = all.splitAt(360)
     val probe = Seq("alpha", "delta", "zeta", "missing")
-    val dir = Files.createTempDirectory("graft_cmsr_").toString
+    val dir = ScratchDirs.create("cmsr").toString
     val schema = all.take(1).toDF("doc_id", "lang", "text").schema
     def runOnce(outDir: String): Unit = {
       val q = graft.stream.StreamingCms
@@ -1042,7 +1042,7 @@ class StreamingSpec extends SparkSpec {
         s"${words((i % 21) % words.length)} ${words((i * i % 13) % words.length)} ${words((i / 3 + i % 3) % words.length)}")
     }
     val (phase1, phase2) = all.splitAt(360)
-    val dir = Files.createTempDirectory("graft_topkr_").toString
+    val dir = ScratchDirs.create("topkr").toString
     val schema = all.take(1).toDF("doc_id", "lang", "text").schema
     def runOnce(outDir: String): Unit = {
       val q = graft.stream.StreamingTopK
@@ -1093,7 +1093,7 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, new Timestamp(1704067200000L + i * 5000L), "btc", i * 1.0)
     }
     val replays = base.filter(_._1 % 5 == 0) ++ base.filter(_._1 % 50 == 0)
-    val dir = Files.createTempDirectory("graft_dedup_").toString
+    val dir = ScratchDirs.create("dedup").toString
     base.toDF("event_id", "ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/in")
     replays.toDF("event_id", "ts", "event_type", "value")
@@ -1118,7 +1118,7 @@ class StreamingSpec extends SparkSpec {
       val w2 = words((i * i % 13) % words.length)
       (i.toLong, lang, s"$w1 $w2")
     }
-    val dir = Files.createTempDirectory("graft_cms_").toString
+    val dir = ScratchDirs.create("cms").toString
     all.grouped(200).foreach { chunk =>
       chunk.toDF("doc_id", "lang", "text")
         .coalesce(1).write.mode("append").parquet(s"$dir/in")
@@ -1171,7 +1171,7 @@ class StreamingSpec extends SparkSpec {
       val w3 = words((i / 3 + i % 3) % words.length)
       (i.toLong, lang, s"$w1 $w2 $w3")
     }
-    val dir = Files.createTempDirectory("graft_topk_").toString
+    val dir = ScratchDirs.create("topk").toString
     all.grouped(200).foreach { chunk =>
       chunk.toDF("doc_id", "lang", "text")
         .coalesce(1).write.mode("append").parquet(s"$dir/in")
@@ -1215,7 +1215,7 @@ class StreamingSpec extends SparkSpec {
     val burst2 = (0 until 7).map(i => (100L + i,
       new Timestamp(1704067200000L + 40 * 60000L + i * 60000L), "btc", 1.0))
     val events = (burst1 ++ burst2).toDF("event_id", "ts", "event_type", "value")
-    val dir = Files.createTempDirectory("graft_sess_").toString
+    val dir = ScratchDirs.create("sess").toString
     events.write.mode("overwrite").parquet(s"$dir/in")
     val q = StreamingResample.sessionCounts(spark, s"$dir/in", events.schema, "5 minutes")
       .writeStream.format("memory").queryName("sess_t")

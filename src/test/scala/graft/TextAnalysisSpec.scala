@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.sum
 
+import graft.io.ScratchDirs
 import graft.ops.TextAnalysis
 
 /** Repetition-signal contracts: hand-computed duplicate fractions on
@@ -128,7 +129,7 @@ class TextAnalysisSpec extends SparkSpec {
     assert(!out.contains(4L))
     // the persisted artifact the registered queries read gives the same
     // profile, and its k stamp refuses a reader at another k
-    val dir = java.nio.file.Files.createTempDirectory("graft_dup_starts_")
+    val dir = ScratchDirs.create("dup_starts")
       .toString + "/starts"
     starts.write.parquet(dir)
     val persisted = graft.ops.TextAnalysis.readDupStarts(spark, dir, 3)
@@ -178,7 +179,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("substringDedupIncremental: batch windows flag against the persisted artifact and within-batch, corpus never re-read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_winh_").toString + "/h"
+    val dir = ScratchDirs.create("winh").toString + "/h"
     val corpus = Seq((10L, "a b c d e")).toDF("doc_id", "text")
     graft.ops.TextAnalysis.writeWindowHashes(corpus, dir, 3)
     val batch = Seq(
@@ -463,6 +464,23 @@ class TextAnalysisSpec extends SparkSpec {
     // source b: single doc, single lang → zero dups, zero entropy
     assert(out("b")._1 == 1L && out("b")._4 == 0L)
     assert(out("b")._5 == 0.0)
+  }
+
+  test("data_card: bit-identical rows at shuffle partitions 1 and 7 and with AQE off") {
+    // mean_quality and lang_entropy are double sums; their last bits must
+    // not follow the order the shuffle delivers the rows in
+    def card(conf: (String, String)*): Seq[String] = {
+      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try SparkEntry.queries("data_card")(spark, "/root/testdata/sf0.001")
+        .collect().map(_.toString).sorted.toSeq
+      finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val base = card()
+    assert(base.nonEmpty)
+    assert(card("spark.sql.shuffle.partitions" -> "1") == base)
+    assert(card("spark.sql.shuffle.partitions" -> "7") == base)
+    assert(card("spark.sql.adaptive.enabled" -> "false") == base)
   }
 
   test("featureEmbed: exact JVM replay of the md5-signed projection; parity bound per component") {

@@ -44,9 +44,12 @@ object Sinks {
   /** S11: analytics export — single header CSV with the reference's
     * empty-result guard (`duckdb2csv.py:11-12` raises on empty).
     * `coalesce(1)` only touches the final (small, aggregated) result.
+    * The guard is `isEmpty`, a take of one row: one job when the first
+    * partition holds a row, where `limit(1).count()` ran two and an
+    * exchange.
     */
   def exportCsv(df: DataFrame, path: String): Unit = {
-    if (df.limit(1).count() == 0)
+    if (df.isEmpty)
       throw new IllegalStateException("No data found in table")
     df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
   }

@@ -4,7 +4,10 @@ import java.io.{BufferedOutputStream, File, FileOutputStream}
 import java.util.zip.ZipInputStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{call_function, col, lit}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.functions.GraftFunctions
 
 /** Ingest surface (SURVEY §2.1 S1-S5): explicit-schema header-less CSV,
   * schema-enforced parquet, header injection with arity validation, and
@@ -24,9 +27,40 @@ object Sources {
 
   /** S3: header-less CSV scan with a declared schema — positional columns,
     * zero inference (`process_data.py:79`, `old-process_data.py:53`).
+    *
+    * Gives bit for bit what `spark.read.schema(schema).option("header",
+    * "false").csv(path)` gives, without univocity on the lines that do
+    * not need it:
+    *  - a line scan (`spark.read.text`), so splits, compression codecs,
+    *    line endings (LF, CRLF, lone CR) and partition columns are the
+    *    CSV source's;
+    *  - the lines that source keeps: Java `String.trim` non-empty
+    *    (`graft_csv_kept`);
+    *  - one `graft_csv_field(line, i, schema)` per schema field, named
+    *    and nullable as the source's columns. Catalyst prunes the fields
+    *    no one reads, as CSV column pruning does: the kline chain parses
+    *    only fields 0 and 4.
+    *
+    * Exactness rule (see [[graft.functions.CsvFieldExpr]]): a line of
+    * exactly `schema.length` fields, with no `\` and no `"` other than a
+    * field's enclosing pair, is split at its commas and its numbers
+    * parsed in place (an empty field is null). A field outside the
+    * inline number forms goes through Spark's own converter, and any
+    * other line through Spark's own `UnivocityParser`, built with the
+    * options the CSV source builds, taking the (partial) row PERMISSIVE
+    * mode returns. Fields are LONG, DOUBLE or STRING.
     */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("header", "false").csv(path)
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    GraftFunctions.register(spark)
+    val text = spark.read.text(path)
+    val ddl = lit(schema.toDDL)
+    val fields = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+      call_function("graft_csv_field", col("value"), lit(i), ddl).as(f.name, f.metadata)
+    }
+    val partitions = text.columns.toSeq.tail.map(c => col(s"`$c`"))
+    text.filter(call_function("graft_csv_kept", col("value")))
+      .select(fields ++ partitions: _*)
+  }
 
   /** S3+P7 variant: tolerate an optional header row (the reference drops a
     * leading `"Open time,..."` line, `old-process_data.py:42-45`).

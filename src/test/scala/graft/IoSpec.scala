@@ -172,6 +172,27 @@ class IoSpec extends SparkSpec {
     assert(e.getMessage.contains("No data"))
   }
 
+  test("exportCsv: the guard runs one job on a non-empty frame; an empty one leaves the dir as it was") {
+    val dir = tmpDir()
+    val df = spark.range(0, 100, 1, 4).toDF("n")
+    val exportJobs = jobsOf(Sinks.exportCsv(df, s"$dir/export")).size
+    val writeJobs = jobsOf(df.coalesce(1).write.mode("overwrite")
+      .option("header", "true").csv(s"$dir/write")).size
+    assert(exportJobs - writeJobs == 1, s"export $exportJobs jobs, its write $writeJobs")
+    // the count spelling of the same guard took two
+    assert(jobsOf(df.limit(1).count()).size == 2)
+
+    val before = new File(s"$dir/export").listFiles().map(f =>
+      f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    val e = intercept[IllegalStateException] {
+      Sinks.exportCsv(df.filter($"n" < 0), s"$dir/export")
+    }
+    assert(e.getMessage == "No data found in table")
+    val after = new File(s"$dir/export").listFiles().map(f =>
+      f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+    assert(after == before && before.keys.exists(_.endsWith(".csv")))
+  }
+
   test("writeJsonl + readJsonl: lossless roundtrip, schema binds by NAME") {
     import org.apache.spark.sql.types._
     val dir = tmpDir()

@@ -4,7 +4,6 @@ import java.nio.file.{Files, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -26,35 +25,6 @@ class TablesSpec extends SparkSpec {
 
   private val confKey = "spark.sql.legacy.parquet.nanosAsLong"
   private val sf = "/root/testdata/sf0.001"
-
-  /** The jobs `body` starts on this thread; each says whether it ran in a
-    * SQL execution. A marker job follows the body: the listener bus
-    * delivers in order, so once the marker is seen every job the body
-    * started has been seen too.
-    */
-  private def jobsOf(body: => Unit): Seq[Boolean] = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach(p => seen.add(
-          (p.getProperty("spark.jobGroup.id"),
-            p.getProperty("spark.sql.execution.id") != null)))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(_._1 == s"$group-marker") &&
-        System.nanoTime() < deadline) Thread.sleep(5)
-      assert(seen.asScala.exists(_._1 == s"$group-marker"), "marker job not seen")
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.filter(_._1 == group).map(_._2).toSeq
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq

@@ -39,10 +39,8 @@ object GraftSession {
     */
   def tuned(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
-      // SPARK_GRAFT_INIT_PARTS overrides the 8x default (diagnostics /
-      // unusual topologies); the profile itself stays one source of truth.
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", (cores * 8).toString))
+        (cores * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // r18-opt: the generated-class cache (STATIC conf, default 100
       // entries) thrashes on a session that plans the full 215-query
@@ -53,8 +51,7 @@ object GraftSession {
       // long-lived session running a large query mix wants the same.
       // Scale-neutral: per-core behavior is untouched (the driver's
       // low-core scaling runs compile the same classes either way).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** The local[n] form every graft main uses (UI off — these are
     * headless batch runs).

@@ -95,21 +95,10 @@ object Stress {
 
     // Text-tier scale-up: 500k synthetic docs (100× the sf0.1 documents
     // table), ~40 tokens each from a 10k-word vocabulary, with every
-    // 100th doc an exact copy of its neighbor (planted dups). All
-    // constructed relationally — the same codegen pipeline the real
-    // corpus takes.
-    val docRows = rows / 10
-    val docs = spark.range(docRows)
-      .select(col("id").as("doc_id"),
-        concat_ws(" ", (0 until 40).map(i =>
-          concat(lit("w"), pmod(xxhash64(
-            // ids ending in 99 copy their left neighbor's text exactly
-            (col("id") - when(pmod(col("id"), lit(100)) === 99L, lit(1L))
-              .otherwise(lit(0L))) * 1000003L + i),
-            lit(10000L)))): _*).as("text"),
-        concat(lit("l"), pmod(col("id"), lit(5))).as("lang"),
-        concat(lit("s"), pmod(col("id"), lit(7))).as("source"),
-        lit(200L).as("n_chars"))
+    // 100th doc an exact copy of its neighbor (planted dups): the
+    // StressScaling corpus, constructed relationally — the same codegen
+    // pipeline the real corpus takes.
+    val docs = StressScaling.docs(spark, rows / 10)
     time(s"docs_exact_dedup")(ops.Similarity.exactDedup(docs))
     time(s"docs_minhash_sigs")(ops.Similarity.minhashSignatures(docs))
     time(s"docs_simhash_md5")(ops.Similarity.simhashMd5(docs))
@@ -133,7 +122,7 @@ object Stress {
     time(s"docs_unigram_logprob")(ops.TextAnalysis.unigramLogProb(docs))
     time(s"docs_kl_drift")(ops.TextAnalysis.klDrift(docs))
     // Writer-layout + mixing at 500k docs: shuffle-shard's only shuffle
-    // is the per-shard window (32 shards → ~docRows/32 rows per sort);
+    // is the per-shard window (32 shards → ~1/32 of the docs per sort);
     // the token-budget prefix is one running-sum window per source
     // (7 sources here — the giant-stratum case by construction).
     time(s"docs_shuffle_shard")(ops.Sampling.shuffleShard(docs, "doc_id", 32))

@@ -45,10 +45,10 @@ object StressScaling {
     * 8-token boilerplate, so at n docs ONE 8-window fingerprint occurs
     * n times — the template-heavy web-crawl shape (shared site headers,
     * license banners) that concentrates a corpus-sized group on a
-    * single key. This is the skew case the two-level agg verdict in
-    * [[graft.ops.TextAnalysis]] exists for: the single-pass window
-    * verdict sorts that key's entire group into one spilling window
-    * buffer on one task.
+    * single key. This is the skew case the routed verdict's hot-key
+    * salting in [[graft.ops.TextAnalysis]] exists for: the single-pass
+    * window verdict sorts that key's entire group into one spilling
+    * window buffer on one task.
     */
   private[graft] def docsHotKey(spark: SparkSession, n: Long): DataFrame =
     docs(spark, n).withColumn("text",
@@ -199,14 +199,14 @@ object StressScaling {
         record("substring_dedup", scale, nDocs, timed(
           ops.TextAnalysis.substringDedup(d, ops.TextAnalysis.dupStarts(d, 8), 8)))
       // Contrast arm: the single-pass window verdict on the same corpus
-      // (fastest when no key is hot — the number the agg form must stay
-      // within band of on skew-FREE data).
+      // (fastest when no key is hot — the number the routed form must
+      // stay within band of on skew-FREE data).
       if (want("substring_dedup_window"))
         record("substring_dedup_window", scale, nDocs, timed(
           ops.TextAnalysis.substringDedupWindowVerdict(d, 8)))
       // Skew arms: every doc shares an 8-token boilerplate prefix, so one
-      // fingerprint occurs nDocs times. The agg verdict must stay FLAT vs
-      // the uniform corpus; the window verdict documents the spill cliff.
+      // fingerprint occurs nDocs times. The routed verdict must stay FLAT
+      // vs the uniform corpus; the window verdict documents the spill cliff.
       lazy val dh = docsHotKey(spark, nDocs).localCheckpoint()
       if (want("substring_dedup_hotkey"))
         record("substring_dedup_hotkey", scale, nDocs, timed(

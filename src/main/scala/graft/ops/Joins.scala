@@ -101,65 +101,13 @@ object Joins {
       .drop("_salt")
   }
 
-  /** J4: as-of join — each event picks up the close of the latest hourly
-    * bar (same event_type) that closed at-or-before the event's timestamp.
-    *
-    * Union the bar stream (keyed at `bucket_end`, the instant the bar
-    * becomes knowable) with the event stream, sort per symbol by time with
-    * bars winning ties, and carry the last seen bar close forward with
-    * `last(ignoreNulls)`. One shuffle on event_type, linear scan per
-    * symbol — the standard scale-safe as-of shape (vs. a range cross-join
-    * that would explode at 100 TB).
-    */
-  /** [[asofJoin]] for the deep-single-symbol regime: the carry-forward
-    * window runs per `(symbol, time-chunk)` instead of per symbol. The
-    * cross-chunk state is one number — the as-of bar close at each
-    * chunk's start — computed from a tiny per-chunk bar summary
-    * (last bar per chunk, `last(ignoreNulls)` EXCLUSIVE prefix over the
-    * symbol's chunk list, so bar-less chunks inherit through gaps) and
-    * injected as a seed pseudo-row at the chunk start, sorting before
-    * any native row at the same instant. Output row-identical to
-    * [[asofJoin]] (parity-spec'd).
+  /** [[asofJoin]] for the deep-single-symbol regime ([[asofChunked]]):
+    * the carry is the close of the last bar of the chunks before. Output
+    * row-identical to [[asofJoin]] (parity-spec'd).
     */
   def asofJoinChunked(events: DataFrame,
-                      chunkMicros: Long = 6L * 3600L * 1000000L): DataFrame = {
-    val hourly = Resample.ohlcHourlyTs(events)
-    val bars = hourly.select(
-      col("event_type"), unix_micros(col("bucket_end")).as("t_us"),
-      lit(1).as("is_bar"), col("close").as("bar_close"),
-      lit(null).cast("long").as("event_id"),
-      lit(null).cast("double").as("value"))
-    val evs = events.select(
-      col("event_type"), unix_micros(col("ts")).as("t_us"),
-      lit(0).as("is_bar"), lit(null).cast("double").as("bar_close"),
-      col("event_id"), col("value"))
-    val un = bars.unionByName(evs)
-      .withColumn("chunk", floor(col("t_us") / lit(chunkMicros)))
-    val bySymbolChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-    val chunksAll = un.select(col("event_type"), col("chunk")).distinct()
-    val barLast = un.filter(col("is_bar") === 1)
-      .groupBy(col("event_type"), col("chunk"))
-      .agg(max_by(col("bar_close"), col("t_us")).as("chunk_last_bar"))
-    val seeds = chunksAll
-      .join(barLast, Seq("event_type", "chunk"), "left")
-      .withColumn("seed", last(col("chunk_last_bar"), ignoreNulls = true)
-        .over(bySymbolChunk.rowsBetween(Window.unboundedPreceding, -1)))
-      .filter(col("seed").isNotNull)
-      .select(col("event_type"), col("chunk"),
-        (col("chunk") * chunkMicros).as("t_us"),
-        lit(2).as("is_bar"), // sorts before bars/events at the same instant
-        col("seed").as("bar_close"),
-        lit(null).cast("long").as("event_id"),
-        lit(null).cast("double").as("value"))
-    val w = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("t_us").asc, col("is_bar").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    un.unionByName(seeds)
-      .withColumn("last_close", last(col("bar_close"), ignoreNulls = true).over(w))
-      .filter(col("is_bar") === 0)
-      .select(col("event_id"), col("event_type"), col("value"),
-        col("last_close").as("bar_close"))
-  }
+                      chunkMicros: Long = 6L * 3600L * 1000000L): DataFrame =
+    asofChunked(events, chunkMicros, forward = false)
 
   /** FORWARD as-of join — the label-generation direction: each event
     * paired with the OPEN of the next hourly bar starting at or after
@@ -202,57 +150,66 @@ object Joins {
         col("next_open"))
   }
 
-  /** [[asofJoinForward]] for the deep-single-symbol regime — the mirror
-    * of [[asofJoinChunked]] run over reversed time. The carry window runs
-    * per `(symbol, time-chunk)`; the cross-chunk state is one number per
-    * chunk — the FIRST bar open at-or-after the chunk's exclusive end —
-    * computed from a tiny per-chunk summary (first bar per chunk,
-    * `last(ignoreNulls)` EXCLUSIVE prefix over the symbol's chunk list in
-    * DESCENDING chunk order, so bar-less chunks inherit through gaps) and
-    * injected as a seed pseudo-row at the chunk's end boundary
-    * (`(chunk+1)·chunkMicros`, strictly above every in-chunk `t_us`, so
-    * it sorts first in the reversed order). Output row-identical to
+  /** [[asofJoinForward]] for the deep-single-symbol regime
+    * ([[asofChunked]] over reversed time): the carry is the open of the
+    * first bar of the chunks after. Output row-identical to
     * [[asofJoinForward]] (parity-spec'd across chunk sizes).
     */
   def asofJoinForwardChunked(events: DataFrame,
-                             chunkMicros: Long = 6L * 3600L * 1000000L): DataFrame = {
+                             chunkMicros: Long = 6L * 3600L * 1000000L): DataFrame =
+    asofChunked(events, chunkMicros, forward = true)
+
+  /** The [[Chunks]] carry of the as-of joins: the carry-forward window
+    * runs per `(symbol, time-chunk)` instead of per symbol. The state
+    * across chunks is one number — the bar value in force at the chunk's
+    * edge — from a per-chunk bar summary (the chunk's edge bar: last bar
+    * backward, first bar forward), `last(ignoreNulls)` over the chunks
+    * before in the direction of travel, so bar-less chunks inherit
+    * through gaps. It enters each chunk as a seed pseudo-row at the
+    * chunk's edge in that direction (`chunk·µs` backward, `(chunk+1)·µs`
+    * forward — strictly beyond every in-chunk `t_us`), tagged
+    * `is_bar = 2` so it sorts before any native row at the same instant.
+    */
+  private def asofChunked(events: DataFrame, chunkMicros: Long,
+                          forward: Boolean): DataFrame = {
+    val (barTs, barValue, carried, edge, running) =
+      if (forward) ("bucket_ts", "open", "bar_open", "chunk_first_bar", "next_open")
+      else ("bucket_end", "close", "bar_close", "chunk_last_bar", "last_close")
     val hourly = Resample.ohlcHourlyTs(events)
     val bars = hourly.select(
-      col("event_type"), unix_micros(col("bucket_ts")).as("t_us"),
-      lit(1).as("is_bar"), col("open").as("bar_open"),
+      col("event_type"), unix_micros(col(barTs)).as("t_us"),
+      lit(1).as("is_bar"), col(barValue).as(carried),
       lit(null).cast("long").as("event_id"),
       lit(null).cast("double").as("value"))
     val evs = events.select(
       col("event_type"), unix_micros(col("ts")).as("t_us"),
-      lit(0).as("is_bar"), lit(null).cast("double").as("bar_open"),
+      lit(0).as("is_bar"), lit(null).cast("double").as(carried),
       col("event_id"), col("value"))
     val un = bars.unionByName(evs)
-      .withColumn("chunk", floor(col("t_us") / lit(chunkMicros)))
-    val bySymbolChunkDesc =
-      Window.partitionBy(col("event_type")).orderBy(col("chunk").desc)
+      .withColumn("chunk", Chunks.key(col("t_us"), chunkMicros))
     val chunksAll = un.select(col("event_type"), col("chunk")).distinct()
-    val barFirst = un.filter(col("is_bar") === 1)
+    val edgeBar = un.filter(col("is_bar") === 1)
       .groupBy(col("event_type"), col("chunk"))
-      .agg(min_by(col("bar_open"), col("t_us")).as("chunk_first_bar"))
+      .agg((if (forward) min_by(col(carried), col("t_us"))
+        else max_by(col(carried), col("t_us"))).as(edge))
     val seeds = chunksAll
-      .join(barFirst, Seq("event_type", "chunk"), "left")
-      .withColumn("seed", last(col("chunk_first_bar"), ignoreNulls = true)
-        .over(bySymbolChunkDesc.rowsBetween(Window.unboundedPreceding, -1)))
+      .join(edgeBar, Seq("event_type", "chunk"), "left")
+      .withColumn("seed", last(col(edge), ignoreNulls = true)
+        .over(Chunks.before(if (forward) col("chunk").desc else col("chunk"))))
       .filter(col("seed").isNotNull)
       .select(col("event_type"), col("chunk"),
-        ((col("chunk") + 1) * chunkMicros).as("t_us"),
-        lit(2).as("is_bar"), // above every in-chunk t: first in DESC order
-        col("seed").as("bar_open"),
+        ((if (forward) col("chunk") + 1 else col("chunk")) * chunkMicros).as("t_us"),
+        lit(2).as("is_bar"),
+        col("seed").as(carried),
         lit(null).cast("long").as("event_id"),
         lit(null).cast("double").as("value"))
-    val w = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("t_us").desc, col("is_bar").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val w = Chunks.growing(
+      Seq(if (forward) col("t_us").desc else col("t_us").asc, col("is_bar").desc))
     un.unionByName(seeds)
-      .withColumn("next_open", last(col("bar_open"), ignoreNulls = true).over(w))
+      .withColumn(running, last(col(carried), ignoreNulls = true).over(w))
       .filter(col("is_bar") === 0)
       .select(col("event_id"), col("event_type"), col("value"),
-        col("next_open"))
+        if (forward) col(running) else col(running).as(carried))
   }
 
   /** Bucketed range (interval) join: each left row whose `leftTs` falls in
@@ -381,6 +338,16 @@ object Joins {
       .select((keyCols :+ leftTs) ++ leftRest ++ payloadCols map col: _*)
   }
 
+  /** J4: as-of join — each event picks up the close of the latest hourly
+    * bar (same event_type) that closed at-or-before the event's timestamp.
+    *
+    * Union the bar stream (keyed at `bucket_end`, the instant the bar
+    * becomes knowable) with the event stream, sort per symbol by time with
+    * bars winning ties, and carry the last seen bar close forward with
+    * `last(ignoreNulls)`. One shuffle on event_type, linear scan per
+    * symbol — the standard scale-safe as-of shape (vs. a range cross-join
+    * that would explode at 100 TB).
+    */
   def asofJoin(events: DataFrame): DataFrame = {
     val hourly = Resample.ohlcHourlyTs(events)
     val bars = hourly.select(

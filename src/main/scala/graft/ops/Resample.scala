@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,19 +21,39 @@ import org.apache.spark.sql.functions._
   *     query. It inherits the reference's single-partition global-window
   *     hazard (SURVEY §4.3.1) and is NOT the scale path.
   *
-  * Both replace the reference's non-deterministic `first`/`last`
-  * aggregates (`process_data.py:50-55`, SURVEY §4.3.2) with
-  * `min_by`/`max_by` keyed on the timestamp — deterministic under any
-  * partitioning/shuffle order, and oracle-checkable (DuckDB
-  * `arg_min`/`arg_max` use the same tie rule; `ts` is unique in the data).
-  *
-  * Determinism fine print (property-tested): open/high/low/close/n_trades
-  * are bit-exact under any input order; `volume` is a float SUM whose
-  * accumulation order is partition-dependent, so it is reproducible only
-  * to ~1 ULP — an inherent property of every distributed float sum, and
-  * well inside the oracle's float tolerance.
+  * Every bar operator here, and the streaming twin, aggregates the same
+  * OHLC [[bar]].
   */
 object Resample {
+
+  /** The OHLC bar of `value` in `order`: open, high, low, close, volume
+    * (sum of value) and n_trades (count).
+    *
+    * Replaces the reference's non-deterministic `first`/`last` aggregates
+    * (`process_data.py:50-55`, SURVEY §4.3.2) with `min_by`/`max_by` on
+    * `order` — deterministic under any partitioning/shuffle order, and
+    * oracle-checkable (DuckDB `arg_min`/`arg_max` use the same tie rule;
+    * `ts` is unique in the data). Determinism fine print
+    * (property-tested): open/high/low/close/n_trades are bit-exact under
+    * any input order; `volume` is a float SUM whose accumulation order is
+    * partition-dependent, so it is reproducible only to ~1 ULP — an
+    * inherent property of every distributed float sum, and well inside
+    * the oracle's float tolerance.
+    */
+  private[graft] def bar(value: Column, order: Column): Seq[Column] = Seq(
+    min_by(value, order).as("open"),
+    max(value).as("high"),
+    min(value).as("low"),
+    max_by(value, order).as("close"),
+    sum(value).as("volume"),
+    count(lit(1)).as("n_trades"))
+
+  /** The [[bar]] of `value` per group of `grouped`. */
+  private def bars(grouped: RelationalGroupedDataset,
+                   order: Column = col("ts")): DataFrame = {
+    val b = bar(col("value"), order)
+    grouped.agg(b.head, b.tail: _*)
+  }
 
   /** Hourly OHLCV per `event_type` ("symbol"), keyed by bucket epoch-seconds.
     *
@@ -41,32 +61,16 @@ object Resample {
     * close, volume (sum of value), n_trades (count).
     */
   def ohlcHourly(events: DataFrame): DataFrame =
-    events
-      .groupBy(
-        unix_timestamp(date_trunc("hour", col("ts"))).as("bucket"),
-        col("event_type"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+    bars(events.groupBy(
+      unix_timestamp(date_trunc("hour", col("ts"))).as("bucket"),
+      col("event_type")))
 
   /** Hourly OHLC keyed by a timestamp bucket column (for joins/as-of use).
     * Same aggregate as [[ohlcHourly]] but keeps the bucket as a timestamp
     * and adds `bucket_end` = bucket + 1h (the instant the bar "closes").
     */
   def ohlcHourlyTs(events: DataFrame): DataFrame =
-    events
-      .groupBy(date_trunc("hour", col("ts")).as("bucket_ts"), col("event_type"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+    bars(events.groupBy(date_trunc("hour", col("ts")).as("bucket_ts"), col("event_type")))
       .withColumn("bucket_end", col("bucket_ts") + expr("INTERVAL 1 HOUR"))
 
   /** Time-weighted average price (TWAP) per hourly bar: each tick's
@@ -115,17 +119,9 @@ object Resample {
     * sort.
     */
   def ohlcRollup(events: DataFrame): DataFrame = {
-    val minute = events
-      .groupBy(
-        unix_timestamp(date_trunc("minute", col("ts"))).as("mbucket"),
-        col("event_type"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+    val minute = bars(events.groupBy(
+      unix_timestamp(date_trunc("minute", col("ts"))).as("mbucket"),
+      col("event_type")))
     minute
       .groupBy((col("mbucket") - pmod(col("mbucket"), lit(3600L))).as("bucket"),
         col("event_type"))
@@ -165,58 +161,34 @@ object Resample {
     val wGrow = Window.partitionBy(col("event_type"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .withColumn("units", round(col("value") * 1000).cast("long"))
-      .withColumn("cum", sum(col("units")).over(wGrow))
-      .withColumn("bar", expr("(cum - units) div " + barUnits))
-      .groupBy(col("event_type"), col("bar"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+    volumeBarsOf(withUnits(events).withColumn("cum", sum(col("units")).over(wGrow)),
+      barUnits)
   }
 
-  /** [[volumeBars]] for the deep-single-symbol regime: the unbounded
-    * cumsum window factors into bounded per-(symbol, time-chunk) windows
-    * plus a one-BIGINT-per-chunk carry (the chunk total, prefix-summed
-    * exclusively over the tiny summary table and broadcast back).
-    * Integer arithmetic end-to-end → BIT-identical bars to
-    * [[volumeBars]].
+  /** [[volumeBars]] for the deep-single-symbol regime ([[Chunks]]): the
+    * carry is one BIGINT per chunk, the chunk's unit total summed over
+    * the chunks before it. Integer arithmetic end-to-end → BIT-identical
+    * bars to [[volumeBars]].
     */
   def volumeBarsChunked(events: DataFrame,
                         barUnits: Long = 10000000L,
                         chunkMicros: Long = 3600L * 1000000L): DataFrame = {
     require(barUnits > 0, s"barUnits must be positive, got $barUnits")
-    val wChunkGrow = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wCarry = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val chunked = events
-      .withColumn("units", round(col("value") * 1000).cast("long"))
-      .withColumn("chunk", floor(unix_micros(col("ts")) / lit(chunkMicros)))
-    val carries = chunked.groupBy(col("event_type"), col("chunk"))
-      .agg(sum(col("units")).as("chunk_units"))
-      .withColumn("carry",
-        coalesce(sum(col("chunk_units")).over(wCarry), lit(0L)))
-      .select(col("event_type"), col("chunk"), col("carry"))
-    chunked
-      .withColumn("cum_in_chunk", sum(col("units")).over(wChunkGrow))
-      .join(broadcast(carries), Seq("event_type", "chunk"))
-      .withColumn("cum", col("cum_in_chunk") + col("carry"))
-      .withColumn("bar", expr("(cum - units) div " + barUnits))
-      .groupBy(col("event_type"), col("bar"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+    val chunked = withUnits(events).withColumn("chunk", Chunks.ofTs(chunkMicros))
+    val carries = Chunks.summary(chunked, Seq(sum(col("units")).as("chunk_units")),
+      "carry" -> coalesce(sum(col("chunk_units")).over(Chunks.before()), lit(0L)))
+    volumeBarsOf(Chunks.joinBack(chunked.withColumn("cum_in_chunk",
+        sum(col("units")).over(Chunks.growing())), carries)
+      .withColumn("cum", col("cum_in_chunk") + col("carry")), barUnits)
   }
+
+  private def withUnits(events: DataFrame): DataFrame =
+    events.withColumn("units", round(col("value") * 1000).cast("long"))
+
+  /** The bars of rows carrying their unit count `units` and running total `cum`. */
+  private def volumeBarsOf(cum: DataFrame, barUnits: Long): DataFrame =
+    bars(cum.withColumn("bar", expr("(cum - units) div " + barUnits))
+      .groupBy(col("event_type"), col("bar")))
 
   /** Day-anchored running TWAP — the anchored-VWAP indicator family:
     * from each day's first tick, the running ratio of cumulative
@@ -256,17 +228,10 @@ object Resample {
     */
   def ohlcRowBucket(events: DataFrame, trackEach: Int): DataFrame = {
     val w = Window.orderBy(col("ts"))
-    events
+    bars(events
       .withColumn("rn", row_number().over(w))
       .withColumn("group_id", floor((col("rn") - 1) / trackEach))
-      .groupBy(col("group_id"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+      .groupBy(col("group_id")))
   }
 
   /** [[ohlcRowBucket]] semantics WITHOUT the single-task global window:
@@ -287,14 +252,6 @@ object Resample {
       .zipWithIndex()
       .map { case ((tsUs, value), idx) => (idx / trackEach, tsUs, value) }
       .toDF("group_id", "ts_us", "value")
-    indexed
-      .groupBy(col("group_id"))
-      .agg(
-        min_by(col("value"), col("ts_us")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts_us")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+    bars(indexed.groupBy(col("group_id")), col("ts_us"))
   }
 }

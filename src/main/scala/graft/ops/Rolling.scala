@@ -21,12 +21,8 @@ import graft.agg.{CumProd, Ewma}
   * unpartitioned window, SURVEY §4.3.1).
   *
   * Known limit: with FEW symbols and deep history, one symbol's entire
-  * series still lands in one window task. The evolution for that regime
-  * is the chunked two-pass implemented by [[cumprodEquityChunked]] —
-  * bucket each series by coarse time, compute per-chunk partials under
-  * bounded (symbol, chunk) windows, prefix-merge the tiny chunk-summary
-  * table, then finalize within chunks — turning the unbounded-preceding
-  * aggregate into bounded sorts plus one small-window pass.
+  * series still lands in one window task. The `…Chunked` twins are that
+  * regime's forms, each built on the [[Chunks]] carry.
   */
 object Rolling {
 
@@ -76,37 +72,16 @@ object Rolling {
         col("prev_value"), col("ret"))
   }
 
-  /** [[returnsLag]] for the deep-single-symbol regime: time-chunked, no
-    * unbounded per-symbol window. lag(1) needs exactly ONE row across
-    * each chunk boundary, so the carry is the per-chunk last value
-    * (tiny summary, lag'd over the per-symbol chunk list and broadcast
-    * back). rn-gated like [[cumprodEquityChunked]]: a null VALUE
-    * mid-chunk must surface as a null prev (ret null), never fall back
-    * to the previous chunk.
+  /** [[returnsLag]] for the deep-single-symbol regime: the carry is the
+    * previous chunk's last value ([[Chunks.withPrevious]]). Identical
+    * output to [[returnsLag]].
     */
   def returnsLagChunked(events: DataFrame,
-                        chunkMicros: Long = 3600L * 1000000L): DataFrame = {
-    val wChunk = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts"), col("event_id"))
-    val bySymbolChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-    val ord = struct(col("ts"), col("event_id"))
-    val chunked = events
-      .withColumn("chunk", floor(unix_micros(col("ts")) / lit(chunkMicros)))
-    val lasts = chunked.groupBy(col("event_type"), col("chunk"))
-      .agg(max_by(col("value"), ord).as("chunk_last"))
-      .withColumn("prev_chunk_last",
-        lag(col("chunk_last"), 1).over(bySymbolChunk))
-      .select(col("event_type"), col("chunk"), col("prev_chunk_last"))
-    chunked
-      .withColumn("rn", row_number().over(wChunk))
-      .withColumn("lag_in_chunk", lag(col("value"), 1).over(wChunk))
-      .join(broadcast(lasts), Seq("event_type", "chunk"))
-      .withColumn("prev_value",
-        when(col("rn") === 1, col("prev_chunk_last")).otherwise(col("lag_in_chunk")))
+                        chunkMicros: Long = 3600L * 1000000L): DataFrame =
+    Chunks.withPrevious(events, chunkMicros)
       .withColumn("ret", try_divide(col("value"), col("prev_value")) - 1)
       .select(col("event_id"), col("event_type"), col("value"),
         col("prev_value"), col("ret"))
-  }
 
   /** Equity curve (notebook cell 16): cumulative product of per-row growth
     * factors `value / lag(value)` (≡ 1 + return), exact via the CumProd
@@ -137,22 +112,7 @@ object Rolling {
       .select(col("event_id"), col("event_type"), col("value"), col("ema"))
   }
 
-  /** [[ewma]] for the deep-single-symbol regime: identical output, but
-    * NO unbounded per-symbol window — the [[cumprodEquityChunked]]
-    * factoring applied to the EMA's affine state:
-    *
-    *   1. within-chunk running (num, den, decay) state over a
-    *      `(event_type, chunk)` window — sort + state bounded by chunk
-    *      span, parallel across chunks of the SAME symbol;
-    *   2. a per-chunk state summary (the chunk-final state via `max_by`,
-    *      one row per chunk);
-    *   3. an exclusive order-faithful state merge over the summary table
-    *      ([[graft.agg.EwmaMergeAgg]]) — the only per-symbol sequential
-    *      step, sized #chunks not #rows;
-    *   4. a broadcast join back; per row,
-    *      ema = merge(carry, within) = (A_w·num_c + num_w) /
-    *      (A_w·den_c + den_w).
-    *
+  /** [[ewma]] for the deep-single-symbol regime ([[chunkedEmas]]).
     * Results match [[ewma]] up to float re-association (parity spec pins
     * ≤ 1e-12 relative).
     */
@@ -161,13 +121,13 @@ object Rolling {
     chunkedEmas(events, Seq(("value", "ema", alpha)), chunkMicros)
       .select(col("event_id"), col("event_type"), col("value"), col("ema"))
 
-  /** The chunked two-pass EMA core, generalized to ANY set of
-    * (source column, output column, alpha) triples so composite
-    * indicators pay the machinery ONCE: all within-chunk states ride a
-    * single `(event_type, chunk)` window pass (one sort), the chunk
-    * summaries travel in one groupBy, every cross-chunk carry is an
-    * order-faithful [[graft.agg.EwmaMergeAgg]] prefix over the same tiny
-    * summary table, and one broadcast join finalizes every EMA. Output =
+  /** The [[Chunks]] carry of EMAs, for ANY set of (source column,
+    * output column, alpha) triples so composite indicators pay the
+    * machinery ONCE: all in-chunk (num, den, decay) states ride one
+    * window pass (one sort), the chunk-final states travel in one
+    * summary, each carry is an order-faithful [[graft.agg.EwmaMergeAgg]]
+    * prefix over the chunks before, and one broadcast join finalizes
+    * every EMA: ema = (A_w·num_c + num_w) / (A_w·den_c + den_w). Output =
     * the input columns plus one EMA column per triple (empty-state rows
     * — e.g. before a series' first non-null — finalize to NULL via
     * `try_divide`, where the windowed Aggregator yields NaN; callers of
@@ -176,32 +136,25 @@ object Rolling {
   private[graft] def chunkedEmas(events: DataFrame,
                                  specs: Seq[(String, String, Double)],
                                  chunkMicros: Long): DataFrame = {
-    val wChunk = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts"), col("event_id"))
-    val wChunkGrow = wChunk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wCarry = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ord = struct(col("ts"), col("event_id"))
     def stCol(out: String) = s"_st_$out"
-    val pass1 = specs.foldLeft(
-      events.withColumn("chunk", floor(unix_micros(col("ts")) / lit(chunkMicros)))) {
-      case (df, (src, out, alpha)) =>
-        df.withColumn(stCol(out), Ewma.state(col(src), alpha).over(wChunkGrow))
+    val pass1 = specs.foldLeft(events.withColumn("chunk", Chunks.ofTs(chunkMicros))) {
+      case (df, (src, out, alpha)) => df.withColumn(stCol(out),
+        Ewma.state(col(src), alpha).over(Chunks.growing()))
     }
     val prefixes = pass1.groupBy(col("event_type"), col("chunk"))
-      .agg(max_by(col(stCol(specs.head._2)), ord).as(s"_t_${specs.head._2}"),
+      .agg(max_by(col(stCol(specs.head._2)), Chunks.timeKey).as(s"_t_${specs.head._2}"),
         specs.tail.map { case (_, out, _) =>
-          max_by(col(stCol(out)), ord).as(s"_t_$out") }: _*)
+          max_by(col(stCol(out)), Chunks.timeKey).as(s"_t_$out") }: _*)
     val carried = specs.foldLeft(prefixes) { case (df, (_, out, _)) =>
-      df.withColumn(s"_c_$out", Ewma.mergeStates(
-        col(s"_t_$out._1"), col(s"_t_$out._2"), col(s"_t_$out._3")).over(wCarry))
+      df.withColumn(s"_c_$out", Ewma.mergeStates(col(s"_t_$out._1"),
+        col(s"_t_$out._2"), col(s"_t_$out._3")).over(Chunks.before()))
     }.select(col("event_type") +: col("chunk") +: specs.flatMap {
       case (_, out, _) => Seq(
         // first chunk: empty exclusive frame → NULL carry → identity map
         coalesce(col(s"_c_$out._1"), lit(0.0)).as(s"_cnum_$out"),
         coalesce(col(s"_c_$out._2"), lit(0.0)).as(s"_cden_$out"))
     }: _*)
-    val joined = pass1.join(broadcast(carried), Seq("event_type", "chunk"))
+    val joined = Chunks.joinBack(pass1, carried)
     val finals = specs.foldLeft(joined) { case (df, (_, out, _)) =>
       df.withColumn(out, try_divide(
         col(s"${stCol(out)}._3") * col(s"_cnum_$out") + col(s"${stCol(out)}._1"),
@@ -232,35 +185,20 @@ object Rolling {
         col("macd"), col("signal"), (col("macd") - col("signal")).as("hist"))
   }
 
-  /** [[rsi]] for the deep-single-symbol regime: the gain/loss pair rides
-    * ONE chunked two-pass (the lag for deltas is itself the chunked
-    * [[returnsLagChunked]] shape — chunk-last closes broadcast back).
-    * Identical output to [[rsi]] (parity spec ≤ 1e-12).
+  /** [[rsi]] for the deep-single-symbol regime: the deltas' lag is
+    * [[Chunks.withPrevious]], and the gain/loss pair rides ONE
+    * [[chunkedEmas]] pass. Identical output to [[rsi]] (parity spec
+    * ≤ 1e-12).
     */
   def rsiChunked(events: DataFrame, length: Int = 14,
                  chunkMicros: Long = 3600L * 1000000L): DataFrame = {
-    val wChunk = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts"), col("event_id"))
-    val bySymbolChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-    val ord = struct(col("ts"), col("event_id"))
-    val chunked = events
-      .withColumn("chunk", floor(unix_micros(col("ts")) / lit(chunkMicros)))
-    // chunk-bounded lag with the previous chunk's last value broadcast in
-    val lasts = chunked.groupBy(col("event_type"), col("chunk"))
-      .agg(max_by(col("value"), ord).as("chunk_last"))
-      .withColumn("prev_chunk_last", lag(col("chunk_last"), 1).over(bySymbolChunk))
-      .select(col("event_type"), col("chunk"), col("prev_chunk_last"))
-    val withDeltas = chunked
-      .withColumn("rn", row_number().over(wChunk))
-      .withColumn("lag_in_chunk", lag(col("value"), 1).over(wChunk))
-      .join(broadcast(lasts), Seq("event_type", "chunk"))
-      .withColumn("delta", col("value") -
-        when(col("rn") === 1, col("prev_chunk_last")).otherwise(col("lag_in_chunk")))
+    val withDeltas = Chunks.withPrevious(events, chunkMicros)
+      .withColumn("delta", col("value") - col("prev_value"))
       .withColumn("gain",
         when(col("delta").isNotNull, greatest(col("delta"), lit(0.0))))
       .withColumn("loss",
         when(col("delta").isNotNull, greatest(-col("delta"), lit(0.0))))
-      .drop("chunk", "rn", "lag_in_chunk", "prev_chunk_last")
+      .drop("prev_value")
     // chunkedEmas finalizes empty states (pre-first-delta rows) to NULL
     // already — no NaN mapping needed here, unlike the windowed form
     chunkedEmas(withDeltas,
@@ -423,13 +361,9 @@ object Rolling {
       .groupBy(col("event_type"))
       .agg(min(col("dd")).as("max_dd"), count(lit(1)).as("n"))
 
-  /** [[drawdown]] for the deep-single-symbol regime: NO unbounded
-    * per-symbol window. The prefix max factors the same way the EMA's
-    * affine state does, but with the simplest possible carry:
-    * within-chunk running max under a bounded `(symbol, chunk)` window,
-    * a one-double-per-chunk summary (the chunk max), an exclusive
-    * running max over the summary table, and
-    * `peak = greatest(withinChunkPeak, carry)` (both engines' `greatest`
+  /** [[drawdown]] for the deep-single-symbol regime ([[Chunks]]): the
+    * carry is one double per chunk, the max of the chunks before it, and
+    * `peak = greatest(peak_in_chunk, carry)` (both engines' `greatest`
     * skips the NULL carry of a series' first chunk). Output is
     * bit-identical to [[drawdown]] — max and division re-associate
     * losslessly, so the parity spec asserts EXACT equality, not an
@@ -437,20 +371,11 @@ object Rolling {
     */
   def drawdownChunked(events: DataFrame,
                       chunkMicros: Long = 3600L * 1000000L): DataFrame = {
-    val wChunkGrow = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wCarry = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val chunked = events
-      .withColumn("chunk", floor(unix_micros(col("ts")) / lit(chunkMicros)))
-    val peaks = chunked.groupBy(col("event_type"), col("chunk"))
-      .agg(max(col("value")).as("chunk_peak"))
-      .withColumn("carry_peak", max(col("chunk_peak")).over(wCarry))
-      .select(col("event_type"), col("chunk"), col("carry_peak"))
-    chunked
-      .withColumn("peak_in_chunk", max(col("value")).over(wChunkGrow))
-      .join(broadcast(peaks), Seq("event_type", "chunk"))
+    val chunked = events.withColumn("chunk", Chunks.ofTs(chunkMicros))
+    val peaks = Chunks.summary(chunked, Seq(max(col("value")).as("chunk_peak")),
+      "carry_peak" -> max(col("chunk_peak")).over(Chunks.before()))
+    Chunks.joinBack(chunked.withColumn("peak_in_chunk",
+        max(col("value")).over(Chunks.growing())), peaks)
       .withColumn("peak", greatest(col("peak_in_chunk"), col("carry_peak")))
       .withColumn("dd", try_divide(col("value"), col("peak")) - 1)
       .select(col("event_id"), col("event_type"), col("value"),
@@ -561,82 +486,38 @@ object Rolling {
       .select(col("bucket"), col("event_type"), col("illiq_bar"), col("illiq"))
   }
 
-  /** [[cumprodEquity]] for the deep-single-symbol regime: identical
-    * output, but NO unbounded per-symbol window. Rows are chunked by
-    * coarse time (`floor(epoch_µs / chunkMicros)` — a pure map, so chunk
-    * assignment never shuffles), and the unbounded-preceding product
-    * factors into:
-    *
-    *   1. within-chunk lag + running product over a
-    *      `(event_type, chunk)` window — sort + state bounded by chunk
-    *      span, parallel across chunks of the SAME symbol;
-    *   2. a per-chunk summary (last value, chunk product — one row per
-    *      chunk, via `max_by` over the already-computed running column);
-    *   3. a prefix merge over the summary table — the only per-symbol
-    *      sequential step, sized #chunks not #rows (100 TB of one symbol
-    *      at 1-day chunks ≈ 10⁴ summary rows: trivial);
-    *   4. a broadcast join of the prefix back, `equity = prefix × running`.
-    *
-    * Chunk-boundary factors use the previous chunk's last value, so
-    * results match [[cumprodEquity]] exactly up to float re-association
-    * (chunk products multiply as one term; parity spec pins ≤ 1e-12
-    * relative). Empty time-chunks cost nothing — the summary window's
-    * `lag` skips to the previous chunk that exists.
+  /** [[cumprodEquity]] for the deep-single-symbol regime ([[Chunks]]).
+    * In-chunk: the factor (rn-gated, NOT null-lag-gated: a null VALUE
+    * mid-chunk must mean factor 1.0, exactly as the plain form's
+    * try_divide-by-null does, not a fallback to the previous chunk) and
+    * the running product g (g=1 at the chunk's first row). The carry per
+    * chunk: the first row's factor f1 = first/prev-last, and the product
+    * e_prev of the full-chunk products (f1 × g_total) before it;
+    * `equity = e_prev × f1 × g`. Results match [[cumprodEquity]] up to
+    * float re-association (chunk products multiply as one term; parity
+    * spec pins ≤ 1e-12 relative).
     */
   def cumprodEquityChunked(events: DataFrame,
-                           chunkMicros: Long = 3600L * 1000000L,
-                           workDir: Option[String] = None): DataFrame = {
-    val wChunk = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts"), col("event_id"))
-    val wChunkGrow = wChunk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bySymbolChunk = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-    val ord = struct(col("ts"), col("event_id"))
-
-    // Pass 1 — the ONLY per-row window work, self-contained within each
-    // (symbol, chunk): within-chunk factor (rn-gated, NOT null-lag-gated:
-    // a null VALUE mid-chunk must mean factor 1.0, exactly as the plain
-    // form's try_divide-by-null does, not a fallback to the previous
-    // chunk) and the within-chunk running product g (g=1 at the chunk's
-    // first row — the cross-chunk factor is applied at finalize).
+                           chunkMicros: Long = 3600L * 1000000L): DataFrame = {
+    val wChunk = Chunks.within()
     val pass1 = events
-      .withColumn("chunk", floor(unix_micros(col("ts")) / lit(chunkMicros)))
+      .withColumn("chunk", Chunks.ofTs(chunkMicros))
       .withColumn("rn", row_number().over(wChunk))
       .withColumn("fw", when(col("rn") === 1, lit(1.0)).otherwise(
         coalesce(try_divide(col("value"), lag(col("value"), 1).over(wChunk)),
           lit(1.0))))
-      .withColumn("g", CumProd.product(col("fw")).over(wChunkGrow))
+      .withColumn("g", CumProd.product(col("fw")).over(Chunks.growing()))
       .select(col("event_id"), col("event_type"), col("chunk"), col("ts"),
         col("value"), col("rn"), col("fw"), col("g"))
-
-    // Two-pass means pass 1 is MATERIALIZED: at production scale pass it a
-    // workDir so summary + finalize read the artifact instead of
-    // recomputing the window per consumer (in-plan, Spark recomputes a
-    // shared subtree once per sink). Tests pin both paths identical.
-    val base = workDir match {
-      case Some(d) =>
-        pass1.write.mode("overwrite").parquet(d)
-        events.sparkSession.read.parquet(d)
-      case None => pass1
-    }
-
-    // Tiny per-chunk summary → per-symbol prefix merge, sized #chunks not
-    // #rows: cross-chunk first-row factor f1 = first/prev-last, exclusive
-    // running product e_prev of the full-chunk products (f1 × g_total).
-    val prefixes = base.groupBy(col("event_type"), col("chunk"))
-      .agg(
-        min_by(col("value"), ord).as("first_value"),
-        max_by(col("value"), ord).as("last_value"),
-        max_by(col("g"), ord).as("g_total"))
-      .withColumn("f1", coalesce(
-        try_divide(col("first_value"),
-          lag(col("last_value"), 1).over(bySymbolChunk)), lit(1.0)))
-      .withColumn("e_prev", coalesce(
-        CumProd.product(col("f1") * col("g_total")).over(
-          bySymbolChunk.rowsBetween(Window.unboundedPreceding, -1)), lit(1.0)))
-      .select(col("event_type"), col("chunk"), col("f1"), col("e_prev"))
-
-    base
-      .join(broadcast(prefixes), Seq("event_type", "chunk"))
+    val prefixes = Chunks.summary(pass1, Seq(
+        min_by(col("value"), Chunks.timeKey).as("first_value"),
+        max_by(col("value"), Chunks.timeKey).as("last_value"),
+        max_by(col("g"), Chunks.timeKey).as("g_total")),
+      "f1" -> coalesce(try_divide(col("first_value"),
+        lag(col("last_value"), 1).over(Chunks.across())), lit(1.0)),
+      "e_prev" -> coalesce(CumProd.product(col("f1") * col("g_total"))
+        .over(Chunks.before()), lit(1.0)))
+    Chunks.joinBack(pass1, prefixes)
       .select(col("event_id"), col("event_type"), col("value"),
         when(col("rn") === 1, col("f1")).otherwise(col("fw")).as("factor"),
         (col("e_prev") * col("f1") * col("g")).as("equity"))
@@ -846,49 +727,35 @@ object Rolling {
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     events
-      .withColumn("gappy",
-        when(pmod(col("event_id"), lit(7)) === 0L, lit(null).cast("double"))
-          .otherwise(col("value")))
+      .withColumn("gappy", gappy)
       .select(col("event_id"), col("event_type"), col("gappy"),
         last(col("gappy"), ignoreNulls = true).over(w).as("filled"))
   }
 
-  /** [[fillForward]] for the deep-single-symbol regime — the same
-    * two-pass factoring as [[cumprodEquityChunked]]: (1) fill within
-    * bounded (symbol, time-chunk) windows; (2) reduce each chunk to its
-    * last non-null value, prefix-scan THAT tiny summary table for the
-    * cross-chunk carry (a whole chunk of nulls correctly inherits from
-    * earlier chunks), broadcast-join the carry back and coalesce. The
-    * unbounded per-symbol window never touches full-size data, so one
-    * symbol's history fills in parallel across its chunks.
+  /** [[fillForward]] for the deep-single-symbol regime ([[Chunks]]): the
+    * carry is the last non-null value of the chunks before (a whole
+    * chunk of gaps inherits from earlier chunks), coalesced under the
+    * in-chunk fill. Identical output to [[fillForward]].
     */
   def fillForwardChunked(events: DataFrame,
                          chunkMicros: Long = 4L * 3600L * 1000000L): DataFrame = {
-    val raw = events
-      .withColumn("gappy",
-        when(pmod(col("event_id"), lit(7)) === 0L, lit(null).cast("double"))
-          .otherwise(col("value")))
+    val local = events
+      .withColumn("gappy", gappy)
       .withColumn("ts_us", unix_micros(col("ts")))
-      .withColumn("chunk", floor(col("ts_us") / lit(chunkMicros)))
-    val wChunk = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts_us"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = raw.withColumn("f_local",
-      last(col("gappy"), ignoreNulls = true).over(wChunk))
-    // one row per (symbol, chunk): the chunk-last fill state (null iff
-    // the whole chunk is gaps) — #chunks rows, not #events
-    val summaries = local
-      .groupBy(col("event_type"), col("chunk"))
-      .agg(max_by(col("f_local"),
-        struct(col("ts_us"), col("event_id"))).as("chunk_last"))
-    val wCarry = Window.partitionBy(col("event_type")).orderBy(col("chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carries = summaries
-      .withColumn("carry", last(col("chunk_last"), ignoreNulls = true).over(wCarry))
-      .select(col("event_type"), col("chunk"), col("carry"))
-    local
-      .join(broadcast(carries), Seq("event_type", "chunk"), "left")
+      .withColumn("chunk", Chunks.key(col("ts_us"), chunkMicros))
+      .withColumn("f_local", last(col("gappy"), ignoreNulls = true)
+        .over(Chunks.growing(Seq(col("ts_us"), col("event_id")))))
+    // the chunk-last fill state is null iff the whole chunk is gaps
+    val carries = Chunks.summary(local,
+      Seq(max_by(col("f_local"), struct(col("ts_us"), col("event_id"))).as("chunk_last")),
+      "carry" -> last(col("chunk_last"), ignoreNulls = true).over(Chunks.before()))
+    Chunks.joinBack(local, carries, "left")
       .select(col("event_id"), col("event_type"), col("gappy"),
         coalesce(col("f_local"), col("carry")).as("filled"))
   }
+
+  /** `value` with every 7th event masked to NULL — [[fillForward]]'s gaps. */
+  private def gappy: Column =
+    when(pmod(col("event_id"), lit(7)) === 0L, lit(null).cast("double"))
+      .otherwise(col("value"))
 }

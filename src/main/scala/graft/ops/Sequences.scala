@@ -131,14 +131,11 @@ object Sequences {
     *   2. count-chunks of `chunkRows` rows (`chunk = sidx / chunkRows`)
     *      — count-based, not time-based, so every carry below is
     *      guaranteed to have enough rows regardless of time gaps;
-    *   3. each chunk's working set = its rows ∪ the previous chunk's
-    *      last n−1 rows (frame fill for the first anchors) ∪ the next
-    *      chunk's first row (the `lead` target of the last anchor) —
-    *      n extra rows per boundary, shipped by two cheap filters;
-    *   4. the SAME window logic as [[slidingSequences]], but over
-    *      `(event_type, chunk)` partitions — bounded sort + state,
-    *      parallel across chunks of one symbol. Carried rows are
-    *      role-tagged and filtered from the output.
+    *   3. each chunk's halo ([[Chunks.withHalo]]) = the previous
+    *      chunk's last n−1 rows (frame fill for the first anchors) ∪ the
+    *      next chunk's first row (the `lead` target of the last anchor) —
+    *      n extra rows per boundary;
+    *   4. the SAME window logic as [[slidingSequences]], per chunk.
     *
     * Output is row-identical to [[slidingSequences]] (parity-spec'd,
     * boundary and gap cases included).
@@ -161,23 +158,16 @@ object Sequences {
     val rows = indexed
       .join(broadcast(bases), col("event_type") === col("et"))
       .withColumn("sidx", col("gidx") - col("base"))
-      .withColumn("chunk", floor(col("sidx") / chunkRows))
+      .withColumn("chunk", Chunks.key(col("sidx"), chunkRows))
       .select("event_id", "event_type", "value", "sidx", "chunk")
-    val native = rows.withColumn("role", lit(0))
-    val carry = rows
-      .filter(col("sidx") % chunkRows >= chunkRows - (n - 1))
-      .withColumn("chunk", col("chunk") + 1).withColumn("role", lit(1))
-    val lookahead = rows
-      .filter(col("sidx") % chunkRows === 0 && col("chunk") > 0)
-      .withColumn("chunk", col("chunk") - 1).withColumn("role", lit(2))
-    val wC = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("sidx"))
-    native.unionByName(carry).unionByName(lookahead)
+    val wC = Chunks.within(Seq(col("sidx")))
+    Chunks.withHalo(rows,
+      (col("sidx") % chunkRows >= chunkRows - (n - 1)) -> (col("chunk") + 1),
+      (col("sidx") % chunkRows === 0 && col("chunk") > 0) -> (col("chunk") - 1))
       .withColumn("seq",
         collect_list(col("value")).over(wC.rowsBetween(-(n - 1), 0)))
       .withColumn("target", lead(col("value"), 1).over(wC))
-      .filter(col("role") === 0 &&
-        size(col("seq")) === n && col("target").isNotNull)
+      .filter(Chunks.own && size(col("seq")) === n && col("target").isNotNull)
       .select(col("event_id"), col("event_type"), col("seq"), col("target"))
   }
 

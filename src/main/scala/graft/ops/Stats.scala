@@ -205,34 +205,27 @@ object Stats {
 
   /** [[rangeFrameAvg]] for the deep-single-symbol regime: time-chunked
     * with `chunkMicros ≥ frameMicros`, so a native row's trailing frame
-    * reaches at most one chunk back — the carry is exactly the previous
-    * chunk's last `frameMicros` of rows, shipped by one filter. The
-    * range window then runs over bounded `(symbol, chunk)` partitions,
-    * parallel across chunks of one symbol; carried rows are role-tagged
-    * out of the output. RANGE frames are value-inclusive, so boundary
-    * timestamp ties need no extra tie-break.
+    * reaches at most one chunk back — the halo ([[Chunks.withHalo]]) is
+    * exactly the previous chunk's last `frameMicros` of rows. RANGE
+    * frames are value-inclusive, so boundary timestamp ties need no
+    * extra tie-break.
     */
   def rangeFrameAvgChunked(events: DataFrame,
                            frameMicros: Long = 3600L * 1000000L,
                            chunkMicros: Long = 4L * 3600L * 1000000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(chunkMicros >= frameMicros,
       s"chunkMicros ($chunkMicros) must be >= frameMicros ($frameMicros)")
     val raw = events
       .select(col("event_id"), col("event_type"), col("value"),
         unix_micros(col("ts")).as("ts_us"))
-      .withColumn("chunk", floor(col("ts_us") / lit(chunkMicros)))
-    val native = raw.withColumn("role", lit(0))
-    val carry = raw
-      .filter(col("ts_us") >= (col("chunk") + 1) * lit(chunkMicros) - lit(frameMicros))
-      .withColumn("chunk", col("chunk") + 1)
-      .withColumn("role", lit(1))
-    val w = Window.partitionBy(col("event_type"), col("chunk"))
-      .orderBy(col("ts_us")).rangeBetween(-frameMicros, 0)
-    native.unionByName(carry)
+      .withColumn("chunk", Chunks.key(col("ts_us"), chunkMicros))
+    val w = Chunks.within(Seq(col("ts_us"))).rangeBetween(-frameMicros, 0)
+    Chunks.withHalo(raw,
+      (col("ts_us") >= (col("chunk") + 1) * lit(chunkMicros) - lit(frameMicros)) ->
+        (col("chunk") + 1))
       .withColumn("avg_1h", avg(col("value")).over(w))
       .withColumn("n_1h", count(lit(1)).over(w))
-      .filter(col("role") === 0)
+      .filter(Chunks.own)
       .select(col("event_id"), col("event_type"), col("value"),
         col("avg_1h"), col("n_1h"))
   }

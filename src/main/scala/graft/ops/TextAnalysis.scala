@@ -931,11 +931,10 @@ object TextAnalysis {
   /** (doc_id, s) starts of windows whose key occurs in ≥ 2 distinct docs
     * of the SAME frame — the `min(doc_id) != max(doc_id)` verdict.
     *
-    * Three interchangeable physical forms (same rows out, so every
-    * downstream hash is identical); `SPARK_GRAFT_SUBSTRING_VERDICT`
-    * picks one, default `routed`:
+    * Two physical forms (same rows out, so every downstream hash is
+    * identical):
     *
-    *  - `routed` (the production default — [[crossDocDupStartsRouted]]):
+    *  - routed ([[crossDocDupStartsRouted]], what every entry point runs):
     *    the single-pass window verdict, made skew-immune by a fixed-seed
     *    1% document-sample pre-pass that detects hot fingerprints and
     *    SALTS only their window groups. Measured at the 5M-doc stress
@@ -951,22 +950,22 @@ object TextAnalysis {
     *    web-crawl shape where an unsalted verdict turns into an
     *    hours-long straggler or an executor OOM.
     *
-    *  - `window` ([[crossDocDupStartsWindow]], single-pass): two
+    *  - window ([[crossDocDupStartsWindow]], single-pass): two
     *    unbounded-frame WINDOW aggregates over h on the exploded frame
-    *    itself — one explode, one shuffle, one WindowExec pass. Fastest
-    *    on skew-free corpora, but groups are key-multiplicity-sized: ONE
-    *    hot boilerplate fingerprint (the template-heavy web-crawl shape
-    *    Lee et al. dedup hits) buffers its whole group in the window
-    *    buffer (ExternalAppendOnlyUnsafeRowArray rotation + spill) on a
-    *    single task — the classic straggler cliff.
+    *    itself — one explode, one shuffle, one WindowExec pass. It is
+    *    routed's plan when no key is hot, and the contrast arm of
+    *    [[graft.StressScaling]] ([[substringDedupWindowVerdict]]).
+    *    Fastest on skew-free corpora, but groups are
+    *    key-multiplicity-sized: ONE hot boilerplate fingerprint (the
+    *    template-heavy web-crawl shape Lee et al. dedup hits) buffers its
+    *    whole group in the window buffer (ExternalAppendOnlyUnsafeRowArray
+    *    rotation + spill) on a single task — the classic straggler cliff.
     *
-    *  - `agg` ([[crossDocDupStartsAgg]]): min/max hash aggregate per key
-    *    (partial+final = the map-side-combined two-level form) followed
-    *    by a SHUFFLE_HASH left-semi join of the exploded frame against
-    *    the cross-doc key set. Never buffers a group anywhere, but pays
-    *    the explode + md5 twice and the frame shuffle twice — measured
-    *    2.0× the window form on the skew-free 500k-doc corpus (32.5 s vs
-    *    16.0 s), which is why `routed` is the default instead.
+    * Salting only the hot keys is the skew remedy because the
+    * alternative that never buffers a group — a min/max hash aggregate
+    * per key plus a SHUFFLE_HASH left-semi join back — pays the explode
+    * and the frame shuffle twice: 2.0× the window form on the skew-free
+    * 500k-doc corpus (32.5 s vs 16.0 s).
     */
   /** Sample-routed skew-immune verdict — see the form inventory above.
     *
@@ -998,10 +997,9 @@ object TextAnalysis {
     * decision is also environment-sensitive (Bernoulli sampling seeds
     * per PARTITION, so a different input split can flip a near-threshold
     * key between the hot and cold routes) even though the emitted row
-    * set is provably invariant — callers that need a construction-pure
-    * transformation should call [[crossDocDupStartsWindow]] /
-    * [[crossDocDupStartsAgg]] via the explicit `form` parameter of the
-    * public entry points instead.
+    * set is provably invariant. No public entry point offers a
+    * construction-pure form: [[substringDedupWindowVerdict]] is the
+    * window verdict's only caller outside the routing.
     */
   private[graft] def crossDocDupStartsRouted(base: DataFrame, k: Int,
                                              sampleFrac: Double = 0.01,
@@ -1010,8 +1008,10 @@ object TextAnalysis {
       sampleFrac, hotMin)
 
   /** [[crossDocDupStartsRouted]] with the full window frame supplied by
-    * the caller (the [[dupWindowStartsFromWin]] seam); the hot-key
-    * sample pre-pass still explodes its own 1% of `base`.
+    * the caller — the seam that lets [[substringDedupIncremental]] share
+    * ONE window explode (typically stable-cut) between the artifact
+    * semi-join and the in-batch verdict (r18-opt); the hot-key sample
+    * pre-pass still explodes its own 1% of `base`.
     */
   private def crossDocDupStartsRoutedFromWin(base: DataFrame, win: DataFrame,
                                              k: Int,
@@ -1050,47 +1050,6 @@ object TextAnalysis {
       .filter(col("mn") =!= col("mx"))
       .select(col("doc_id"), col("s"))
   }
-
-  /** The skew-immune two-level verdict — see [[crossDocDupStarts]].
-    *
-    * The two levels are Spark's own partial + final hash aggregate: the
-    * partial level collapses a hot key to ONE (mn, mx) partial per map
-    * task before the shuffle (exactly the salted first level a manual
-    * (h, salt) pre-aggregate would add — an explicit salt layer on top
-    * measured only a second pass over the same 165M rows for no extra
-    * bound, so it was dropped). The semi-join back is hinted
-    * SHUFFLE_HASH: sort-merge would re-SORT the exploded probe side —
-    * the very corpus-sized sort this form exists to avoid — while the
-    * hash build side is only the cross-doc KEY set (≈ dup mass / k,
-    * 16-byte keys), which AQE splits across reducers; no driver-side
-    * broadcast, so the shape survives a 1B-doc corpus where the key set
-    * outgrows any broadcast threshold.
-    */
-  private def crossDocDupStartsAgg(win: DataFrame): DataFrame = {
-    val crossDocKeys = win
-      .groupBy(col("h"))
-      .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-      .filter(col("mn") =!= col("mx"))
-      .select(col("h"))
-    win.join(crossDocKeys.hint("SHUFFLE_HASH"), Seq("h"), "left_semi")
-      .select(col("doc_id"), col("s"))
-  }
-
-  private def dupWindowStarts(base: DataFrame, k: Int): DataFrame =
-    dupWindowStartsFromWin(base, windowRows(base, k), k)
-
-  /** [[dupWindowStarts]] over an already-built (and typically stable-cut)
-    * window frame — the seam that lets [[substringDedupIncremental]]
-    * share ONE window explode between the artifact semi-join and the
-    * in-batch verdict (r18-opt).
-    */
-  private def dupWindowStartsFromWin(base: DataFrame, win: DataFrame,
-                                     k: Int): DataFrame =
-    sys.env.getOrElse("SPARK_GRAFT_SUBSTRING_VERDICT", "routed") match {
-      case "window" => crossDocDupStartsWindow(win)
-      case "agg"    => crossDocDupStartsAgg(win)
-      case _        => crossDocDupStartsRoutedFromWin(base, win, k)
-    }
 
   /** The per-document coverage profile over a (doc_id, s) dup-start
     * frame — the shared tail of the substring-dedup family.
@@ -1155,9 +1114,9 @@ object TextAnalysis {
     coverageProfile(base, starts.select(col("doc_id"), col("s")), k)
   }
 
-  /** [[substringDedup]] pinned to the single-pass WINDOW verdict
-    * regardless of the env switch — the stress harness's contrast arm
-    * (see [[crossDocDupStarts]] for the trade).
+  /** [[substringDedup]] pinned to the single-pass WINDOW verdict, with
+    * no hot-key routing — the stress harness's contrast arm (see
+    * [[crossDocDupStartsRouted]] for the trade).
     */
   private[graft] def substringDedupWindowVerdict(documents: DataFrame,
                                                  k: Int = 8): DataFrame = {
@@ -1182,7 +1141,7 @@ object TextAnalysis {
   def dupStarts(documents: DataFrame, k: Int = 8): DataFrame = {
     require(k >= 2, s"window must span at least 2 tokens, got $k")
     val base = documents.withColumn("w", toks).filter(size(col("w")) >= k)
-    dupWindowStarts(base, k).withColumn("k", lit(k))
+    crossDocDupStartsRouted(base, k).withColumn("k", lit(k))
   }
 
   /** Read a persisted [[dupStarts]] artifact, asserting its k stamp
@@ -1253,7 +1212,7 @@ object TextAnalysis {
     val corpusHits = win
       .join(corpus.select(col("h")), Seq("h"), "left_semi")
       .select(col("doc_id"), col("s"))
-    val batchHits = dupWindowStartsFromWin(base, win, k)
+    val batchHits = crossDocDupStartsRoutedFromWin(base, win, k)
     coverageProfile(base,
       corpusHits.unionByName(batchHits).dropDuplicates("doc_id", "s"), k)
   }

@@ -4,10 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.Resample
+
 /** Structured Streaming twin of the flagship hourly OHLC resample
   * (SURVEY §2.8): file source over a landing zone, event-time tumbling
-  * window with a watermark for late rows, the same deterministic
-  * `min_by`/`max_by` aggregates as the batch query
+  * window with a watermark for late rows, the same OHLC bar
+  * (`graft.ops.Resample.bar`) as the batch query
   * (`graft.ops.Resample.ohlcHourly`), which stays the oracle.
   *
   * The reference is pure batch on a monthly schedule
@@ -38,18 +40,13 @@ object StreamingResample {
                  schema: StructType,
                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader = spark.readStream.schema(schema)
+    val bar = Resample.bar(col("value"), col("ts"))
     maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
       .parquet(inputDir)
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(
-        min_by(col("value"), col("ts")).as("open"),
-        max(col("value")).as("high"),
-        min(col("value")).as("low"),
-        max_by(col("value"), col("ts")).as("close"),
-        sum(col("value")).as("volume"),
-        count(lit(1)).as("n_trades"))
+      .agg(bar.head, bar.tail: _*)
       .select(
         unix_timestamp(col("window.start")).as("bucket"),
         col("event_type"), col("open"), col("high"), col("low"),

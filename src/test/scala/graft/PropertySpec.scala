@@ -2,11 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.ops.{Resample, Rolling, Similarity, TextAnalysis}
+import graft.ops.{Joins, Resample, Rolling, Similarity, TextAnalysis}
 
 /** ScalaCheck properties (SURVEY §5.2.3): resample invariants on generated
   * gapless series, scaler round-trip, shuffle-invariance. Generators are
@@ -54,15 +55,17 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // chunks of ~1 row, a few rows, one bar, and one chunk covering all
+  private val chunkedGen = for {
+    prices <- seriesGen
+    chunkMinutes <- Gen.oneOf(1, 7, 60, 100000)
+  } yield (prices, chunkMinutes)
+
   test("chunked cumprod: equals the unbounded window for generated series and chunk sizes") {
     // property: for ANY series and ANY chunk granularity (including
     // chunks of ~1 row and one-chunk-covers-all), the two-pass result
     // matches the single-window form to float re-association.
-    val gen = for {
-      prices <- seriesGen
-      chunkMinutes <- Gen.oneOf(1, 7, 60, 100000)
-    } yield (prices, chunkMinutes)
-    samples(gen, 6, 400L).foreach { case (prices, chunkMinutes) =>
+    samples(chunkedGen, 6, 400L).foreach { case (prices, chunkMinutes) =>
       val df = toEvents(prices).repartition(5)
       val w = Rolling.cumprodEquity(df).orderBy("event_id").collect()
       val c = Rolling.cumprodEquityChunked(df, chunkMinutes * 60000000L)
@@ -73,6 +76,38 @@ class PropertySpec extends SparkSpec {
           s"factor @ ${x.getLong(0)} (chunk=$chunkMinutes)")
         assert(approx(x.getDouble(4), y.getDouble(4), 1e-10),
           s"equity @ ${x.getLong(0)} (chunk=$chunkMinutes)")
+      }
+    }
+  }
+
+  // The exact twins: (name, plain form, chunked form at a chunk size in
+  // µs, a key that orders the output totally).
+  private val exactTwins: Seq[(String, DataFrame => DataFrame,
+    (DataFrame, Long) => DataFrame, Seq[String])] = Seq(
+    ("drawdownChunked", Rolling.drawdown, Rolling.drawdownChunked(_, _),
+      Seq("event_id")),
+    ("returnsLagChunked", Rolling.returnsLag, Rolling.returnsLagChunked(_, _),
+      Seq("event_id")),
+    ("fillForwardChunked", Rolling.fillForward, Rolling.fillForwardChunked(_, _),
+      Seq("event_id")),
+    ("volumeBarsChunked", Resample.volumeBars(_),
+      Resample.volumeBarsChunked(_, 10000000L, _), Seq("event_type", "bar")),
+    ("asofJoinChunked", Joins.asofJoin, Joins.asofJoinChunked(_, _),
+      Seq("event_id")),
+    ("asofJoinForwardChunked", Joins.asofJoinForward,
+      Joins.asofJoinForwardChunked(_, _), Seq("event_id")))
+
+  exactTwins.foreach { case (name, plain, chunked, key) =>
+    test(s"chunked $name: equals its plain form exactly for generated series and chunk sizes") {
+      samples(chunkedGen, 6, 700L).foreach { case (prices, chunkMinutes) =>
+        val df = toEvents(prices).repartition(5)
+        val p = plain(df).orderBy(key.map(col): _*).collect()
+        val c = chunked(df, chunkMinutes * 60000000L)
+          .orderBy(key.map(col): _*).collect()
+        assert(p.length == c.length, s"(chunk=$chunkMinutes)")
+        p.zip(c).foreach { case (x, y) =>
+          assert(x == y, s"$x vs $y (chunk=$chunkMinutes)")
+        }
       }
     }
   }

@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.agg.CumProd
-import graft.io.ScratchDirs
 import graft.ops.Rolling
 
 /** Notebook-analytics fixtures (FIXTURES §A2): rolling means, cumprod
@@ -59,22 +58,15 @@ class RollingSpec extends SparkSpec {
     }
     val df = rows.toDF("event_id", "ts", "event_type", "value").repartition(7)
     val exact = Rolling.cumprodEquity(df).orderBy("event_id").collect()
-    def check(chunk: Array[org.apache.spark.sql.Row]): Unit = {
-      assert(exact.length == chunk.length && exact.length == 3005)
-      exact.zip(chunk).foreach { case (e, c) =>
-        assert(e.getLong(0) == c.getLong(0))
-        assert(e.getDouble(3) == c.getDouble(3), s"factor @ ${e.getLong(0)}")
-        val (ee, ce) = (e.getDouble(4), c.getDouble(4))
-        assert(math.abs(ee - ce) <= 1e-12 * math.max(math.abs(ee), 1.0),
-          s"equity @ ${e.getLong(0)}: $ee vs $ce")
-      }
+    val chunk = Rolling.cumprodEquityChunked(df).orderBy("event_id").collect()
+    assert(exact.length == chunk.length && exact.length == 3005)
+    exact.zip(chunk).foreach { case (e, c) =>
+      assert(e.getLong(0) == c.getLong(0))
+      assert(e.getDouble(3) == c.getDouble(3), s"factor @ ${e.getLong(0)}")
+      val (ee, ce) = (e.getDouble(4), c.getDouble(4))
+      assert(math.abs(ee - ce) <= 1e-12 * math.max(math.abs(ee), 1.0),
+        s"equity @ ${e.getLong(0)}: $ee vs $ce")
     }
-    check(Rolling.cumprodEquityChunked(df).orderBy("event_id").collect())
-    // persisted two-pass: pass-1 artifact on disk, same result
-    val work = ScratchDirs.create("cumprod").toString + "/pass1"
-    check(Rolling.cumprodEquityChunked(df, workDir = Some(work))
-      .orderBy("event_id").collect())
-    assert(spark.read.parquet(work).columns.contains("g"))
   }
 
   test("returnsLagChunked / rangeFrameAvgChunked: match the plain forms incl. nulls and gaps") {

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.optimizer.RemoveLiteralFromGroupExpressions
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** The ONE documented production session profile — every graft main
   * (Bench, Verify, Stress*, AnnRecall, KlineScale) builds through here,
@@ -31,14 +34,39 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.session.timeZone = UTC` — the reference pipeline's
   *    contract (epoch-ms kline timestamps; see graft.Etl): every
   *    date_format/window boundary is UTC-stable regardless of box TZ.
+  *
+  * And one optimizer rule, [[LiteralGroupKeys]]: Spark's own
+  * `RemoveLiteralFromGroupExpressions`, run again in the
+  * operator-optimization fixed point. Spark runs it once, in its
+  * "Aggregate" batch, BEFORE that fixed point, where
+  * `FoldablePropagation` turns a grouping column that a projection
+  * below set to a literal into the literal itself. The kline chain
+  * hits exactly that: Binance kline files carry no symbol, so the
+  * symbol is attached as `lit("BTCUSDT-1s").as("event_type")` (as the
+  * reference does), and without the rule the flagship resample's hash
+  * aggregate and its exchange hash and compare that string on every
+  * row. Streaming plans are left alone, so a state store's key schema
+  * never depends on the rule. [[tuned]] installs it, and so does
+  * `graft.functions.GraftExtensions` for `spark.sql.extensions` users.
   */
 object GraftSession {
+
+  /** `RemoveLiteralFromGroupExpressions` on batch plans (see above). */
+  object LiteralGroupKeys extends Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan =
+      if (plan.isStreaming) plan else RemoveLiteralFromGroupExpressions(plan)
+  }
+
+  /** Inject graft's optimizer rule into a session's extensions. */
+  def injectRules(ext: SparkSessionExtensions): Unit =
+    ext.injectOptimizerRule(_ => LiteralGroupKeys)
 
   /** Apply the production sizing profile to ANY builder (the cluster
     * entry point — pass the cluster's total core count).
     */
   def tuned(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", cores.toString)
+    b.withExtensions(injectRules)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cores * 8).toString)
       .config("spark.sql.session.timeZone", "UTC")

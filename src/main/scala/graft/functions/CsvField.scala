@@ -43,8 +43,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * the type (`NaN`/`Inf`/`-Inf` first, then `parseDouble` or
   * `parseLong`; a failure is null), and any other line through Spark's
   * own `UnivocityParser`, whose row (or partial row) is what PERMISSIVE
-  * mode returns, parsed again for each field read of the line. Parser
-  * and converter are built once per task, on first use.
+  * mode returns, parsed once per line and shared by every field the row
+  * reads (`CsvField.parsedRow`). Parser and converter are built once per
+  * task, on first use.
   *
   * Types: LONG, DOUBLE and STRING, the ones the kline and staged
   * schemas use.
@@ -322,6 +323,33 @@ object CsvField {
     if (neg) -v else v
   }
 
+  /** The last non-plain line parsed on this thread: its schema, a copy
+    * of its bytes and its row. A scan hands every field expression of a
+    * row the same line, one field after the other on one thread, so the
+    * first field read parses the line and the others reuse the row. It
+    * is keyed by the line's bytes, not its identity: a scan reuses one
+    * buffer for successive lines.
+    */
+  private final class Parsed(val schema: StructType, val line: UTF8String,
+                             val row: InternalRow)
+
+  private val lastParsed = new ThreadLocal[Parsed]
+
+  /** The row `parse` gives for `line` under `schema`, parsed at most once
+    * per line and thread (see [[Parsed]]); `parse` must return a row it
+    * will not reuse.
+    */
+  private[graft] def parsedRow(schema: StructType, line: UTF8String,
+                               parse: String => InternalRow): InternalRow = {
+    val last = lastParsed.get
+    if (last != null && last.line == line && last.schema == schema) last.row
+    else {
+      val row = parse(line.toString)
+      lastParsed.set(new Parsed(schema, line.copy(), row))
+      row
+    }
+  }
+
   /** The options Spark's CSV source builds for `header=false`. */
   private[functions] def options(): CSVOptions = {
     val conf = SQLConf.get
@@ -353,11 +381,13 @@ final class CsvFieldReader(schema: StructType, index: Int) {
 
   /** Field `index` of a non-plain line: its value in the row, or in the
     * partial row of a malformed record, that PERMISSIVE mode returns.
+    * The parser reuses its row, so the shared one is a copy.
     */
   private def parsed(line: UTF8String): Any = {
-    val row = try parser.parse(line.toString).orNull catch {
-      case e: BadRecordException => e.partialResults().headOption.orNull
-    }
+    val row = CsvField.parsedRow(schema, line, l =>
+      (try parser.parse(l) catch {
+        case e: BadRecordException => e.partialResults().headOption
+      }).map(_.copy()).orNull)
     if (row == null || row.isNullAt(index)) null else row.get(index, dataType)
   }
 

@@ -997,11 +997,15 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions`-style injection point:
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. It
+  * installs the native functions and `graft.GraftSession`'s optimizer
+  * rule.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.Natives.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    graft.GraftSession.injectRules(ext)
+  }
 }

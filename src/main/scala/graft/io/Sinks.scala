@@ -1,6 +1,12 @@
 package graft.io
 
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, date_format}
 
 /** Sink surface (SURVEY §2.1 S6-S11): parquet zones, the warehouse table,
@@ -48,10 +54,39 @@ object Sinks {
     * partition holds a row, where `limit(1).count()` ran two and an
     * exchange.
     */
-  def exportCsv(df: DataFrame, path: String): Unit = {
-    if (df.isEmpty)
-      throw new IllegalStateException("No data found in table")
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+  def exportCsv(df: DataFrame, path: String): Unit =
+    exportCsv(!df.isEmpty, Seq(df -> path))
+
+  /** S11 for frames whose emptiness the caller already knows (graft.Etl
+    * reads it from the warehouse load's own row count, so the guard
+    * starts no job): raises the reference's error before any export is
+    * written when `nonEmpty` is false, else writes every export at once.
+    * The first export is written on the calling thread, each other on a
+    * side thread that carries the caller's local properties (its job
+    * group, so cancelling the group cancels every write) and active
+    * session (`SQLExecution.withThreadLocalCaptured`). Returns once
+    * every write has ended, and rethrows the first failed write's own
+    * exception.
+    */
+  private[graft] def exportCsv(nonEmpty: Boolean, exports: Seq[(DataFrame, String)]): Unit = {
+    if (!nonEmpty) throw new IllegalStateException("No data found in table")
+    def write(export: (DataFrame, String)): Unit =
+      export._1.coalesce(1).write.mode("overwrite").option("header", "true").csv(export._2)
+    val side = exports.tail.map { e =>
+      SQLExecution.withThreadLocalCaptured(
+        e._1.sparkSession.asInstanceOf[ClassicSession], ExportThreads)(write(e))
+    }
+    val first = Try(write(exports.head))
+    val rest = side.map(f => Try(f.get()).recoverWith {
+      case e: ExecutionException => Failure(e.getCause)
+    })
+    (first +: rest).foreach(_.get)
+  }
+
+  private lazy val ExportThreads = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-export")
+    t.setDaemon(true)
+    t
   }
 
   /** JSON-Lines export — the interchange format LLM-data consumers expect

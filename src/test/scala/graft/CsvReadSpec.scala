@@ -196,6 +196,50 @@ class CsvReadSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
+  test("readCsv equals the CSV source on kline lines with escaped quotes and backslashes") {
+    val dir = ScratchDirs.create("csvread_escaped").toString
+    // every field of a non-plain line is read from one parse of it; lines
+    // that repeat, or differ from the last in one byte, must not share a
+    // stale row
+    val lines = (0 until 3000).map { i =>
+      val t = 1704067200000L + i * 1000L
+      val price = f"${50000 + i % 97}%d.${i % 100}%02d"
+      val rest = s"$price,$price,$price,1.5,${t + 999},7.25,${i % 200},0.5,0.25"
+      i % 6 match {
+        case 0 => s"$t,$price,$rest,0"
+        case 1 => s"$t,$price,$rest,\"he said \"\"hi\"\" $i\""
+        case 2 => s"$t,$price,$rest,\"a\\\"b $i\""
+        case 3 => s"$t,$price,$rest,a\\b"
+        case 4 => s"${t - 1000},$price,$rest,a\\b"
+        case _ => s"\"$t\",\"$price\",$rest,\"x\"\"\""
+      }
+    }
+    write(dir, "k.csv", (lines ++ lines.take(7)).mkString("", "\n", "\n").getBytes(UTF_8))
+    assertSameAsCsvSource(dir, KlineSchema.schema)
+  }
+
+  test("parsedRow: one parse per line, keyed by the line's bytes") {
+    var parses = 0
+    val parse: String => org.apache.spark.sql.catalyst.InternalRow = l => {
+      parses += 1
+      org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(l))
+    }
+    val schema = StructType.fromDDL("a STRING")
+    val buf = "x\"1".getBytes(UTF_8)
+    val line = UTF8String.fromBytes(buf)
+    val r1 = CsvField.parsedRow(schema, line, parse)
+    // an equal line in another object reuses the row
+    assert(CsvField.parsedRow(schema, UTF8String.fromString("x\"1"), parse) eq r1)
+    assert(parses == 1)
+    // the same object over rewritten bytes is a new line
+    buf(2) = '2'.toByte
+    assert(CsvField.parsedRow(schema, line, parse).getUTF8String(0).toString == "x\"2")
+    assert(parses == 2)
+    // another schema parses again
+    CsvField.parsedRow(StructType.fromDDL("b STRING"), line, parse)
+    assert(parses == 3)
+  }
+
   test("readCsv keeps the CSV source's partition columns and column metadata") {
     val dir = ScratchDirs.create("csvread_part").toString
     Seq("2025-08", "2025-09").foreach { m =>

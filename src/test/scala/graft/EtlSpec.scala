@@ -49,4 +49,36 @@ class EtlSpec extends SparkSpec {
         org.apache.spark.sql.functions.col("bucket"))).schema
     assert(Etl.silverSchema(written) == spark.read.parquet(cfg.aggregatedDir).schema)
   }
+
+  /** `n` one-second klines in the benchmark's shape: the symbol is a
+    * literal, as kline files carry none.
+    */
+  private def klineEvents(n: Long) = {
+    import org.apache.spark.sql.functions.{col, lit, rand, timestamp_seconds}
+    spark.range(0, n, 1, 4).select(
+      timestamp_seconds(col("id") + 1704067200L).as("ts"),
+      (lit(50000.0) + rand(3) * 100).as("value"),
+      lit("BTCUSDT-1s").as("event_type"))
+  }
+
+  test("Etl.run: over no events it raises the reference's error and writes no export") {
+    val base = ScratchDirs.create("etlspec").toString
+    val cfg = Etl.EtlConfig(Seq("BTCUSDT-1s"), Seq("2024-01"), s"$base/landing",
+      s"$base/agg", "etlspec_empty_table", s"$base/wh", s"$base/export")
+    val events = klineEvents(0)
+    val e = intercept[IllegalStateException](Etl.run(spark, events, cfg))
+    assert(e.getMessage == "No data found in table")
+    assert(!new java.io.File(cfg.exportDir).exists())
+    assert(!new java.io.File(cfg.exportDir + "_summary").exists())
+  }
+
+  test("Etl.run: five jobs, all in the caller's job group") {
+    val base = ScratchDirs.create("etlspec").toString
+    val cfg = Etl.EtlConfig(Seq("BTCUSDT-1s"), Seq("2024-01"), s"$base/landing",
+      s"$base/agg", "etlspec_jobs_table", s"$base/wh", s"$base/export")
+    val events = klineEvents(2 * 86400)
+    Etl.run(spark, events, cfg)
+    val jobs = jobsOf(Etl.run(spark, events, cfg))
+    assert(jobs.size == 5 && jobs.forall(identity), jobs)
+  }
 }

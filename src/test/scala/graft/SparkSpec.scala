@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture for operator specs. */
+/** Shared local SparkSession fixture for operator specs. It installs
+  * [[GraftSession]]'s optimizer rule, as every graft main's session
+  * does.
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -16,6 +19,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .withExtensions(GraftSession.injectRules)
     .getOrCreate()
 
   override def afterAll(): Unit = {

@@ -907,28 +907,6 @@ object GraftFunctions {
       s"graft_normalize takes exactly 1 argument, got ${other.length}")
   }
 
-  private val csvFieldInfo = new ExpressionInfo(
-    classOf[CsvFieldExpr].getName, "graft_csv_field")
-
-  // `i` and `schema` (a DDL string) must be literals: they fix the
-  // result type at analysis.
-  private val csvFieldBuilder: Seq[Expression] => Expression = {
-    case Seq(line, i, schema) if i.foldable && schema.foldable =>
-      CsvFieldExpr(line, i.eval().asInstanceOf[Number].intValue,
-        StructType.fromDDL(schema.eval().toString))
-    case other => throw new IllegalArgumentException(
-      s"graft_csv_field takes (line, i, schema) with i and schema literals, got ${other.length} arguments")
-  }
-
-  private val csvKeptInfo = new ExpressionInfo(
-    classOf[CsvKeptExpr].getName, "graft_csv_kept")
-
-  private val csvKeptBuilder: Seq[Expression] => Expression = {
-    case Seq(line) => CsvKeptExpr(line)
-    case other => throw new IllegalArgumentException(
-      s"graft_csv_kept takes exactly 1 argument, got ${other.length}")
-  }
-
   // Spark ships Bloom-filter expressions for its own runtime row-level
   // filtering but does NOT register them as SQL functions; exposing them
   // through the registry gives the dedup tier a standing membership
@@ -983,8 +961,6 @@ object GraftFunctions {
     ("graft_sdot", sdotInfo, sdotBuilder),
     ("graft_entropy", entropyInfo, entropyBuilder),
     ("graft_normalize", normalizeInfo, normalizeBuilder),
-    ("graft_csv_field", csvFieldInfo, csvFieldBuilder),
-    ("graft_csv_kept", csvKeptInfo, csvKeptBuilder),
     ("graft_bloom_agg", bloomAggInfo, bloomAggBuilder),
     ("graft_might_contain", mightContainInfo, mightContainBuilder))
 

@@ -4,10 +4,7 @@ import java.io.{BufferedOutputStream, File, FileOutputStream}
 import java.util.zip.ZipInputStream
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{call_function, col, lit}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-
-import graft.functions.GraftFunctions
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Ingest surface (SURVEY §2.1 S1-S5): explicit-schema header-less CSV,
   * schema-enforced parquet, header injection with arity validation, and
@@ -29,37 +26,17 @@ object Sources {
     * zero inference (`process_data.py:79`, `old-process_data.py:53`).
     *
     * Gives bit for bit what `spark.read.schema(schema).option("header",
-    * "false").csv(path)` gives, without univocity on the lines that do
-    * not need it:
-    *  - a line scan (`spark.read.text`), so splits, compression codecs,
-    *    line endings (LF, CRLF, lone CR) and partition columns are the
-    *    CSV source's;
-    *  - the lines that source keeps: Java `String.trim` non-empty
-    *    (`graft_csv_kept`);
-    *  - one `graft_csv_field(line, i, schema)` per schema field, named
-    *    and nullable as the source's columns. Catalyst prunes the fields
-    *    no one reads, as CSV column pruning does: the kline chain parses
-    *    only fields 0 and 4.
-    *
-    * Exactness rule (see [[graft.functions.CsvFieldExpr]]): a line of
-    * exactly `schema.length` fields, with no `\` and no `"` other than a
-    * field's enclosing pair, is split at its commas and its numbers
-    * parsed in place (an empty field is null). A field outside the
-    * inline number forms goes through Spark's own converter, and any
-    * other line through Spark's own `UnivocityParser`, built with the
-    * options the CSV source builds, taking the (partial) row PERMISSIVE
-    * mode returns. Fields are LONG, DOUBLE or STRING.
+    * "false").csv(path)` gives, partition columns and column metadata
+    * included, through the [[CsvLines]] format, which splits each line
+    * once and takes univocity only for the lines that need it; its
+    * scaladoc states the exactness rule. Fields are LONG, DOUBLE or
+    * STRING.
     */
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    GraftFunctions.register(spark)
-    val text = spark.read.text(path)
-    val ddl = lit(schema.toDDL)
-    val fields = schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      call_function("graft_csv_field", col("value"), lit(i), ddl).as(f.name, f.metadata)
-    }
-    val partitions = text.columns.toSeq.tail.map(c => col(s"`$c`"))
-    text.filter(call_function("graft_csv_kept", col("value")))
-      .select(fields ++ partitions: _*)
+    require(schema.forall(f => f.dataType == LongType || f.dataType == DoubleType ||
+      f.dataType.isInstanceOf[StringType]),
+      s"readCsv reads LONG, DOUBLE or STRING fields, got ${schema.simpleString}")
+    spark.read.format(classOf[CsvLines].getName).schema(schema).load(path)
   }
 
   /** S3+P7 variant: tolerate an optional header row (the reference drops a

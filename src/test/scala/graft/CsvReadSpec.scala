@@ -5,22 +5,23 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.util.zip.GZIPOutputStream
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.{CsvField, CsvFieldReader}
-import graft.io.{ScratchDirs, Sources}
+import graft.io.{CsvField, CsvLineReader, ScratchDirs, Sources}
 import graft.schema.KlineSchema
 
 /** `Sources.readCsv` reads exactly what Spark's CSV source reads
   * (`spark.read.schema(s).option("header", "false").csv(p)`): the same
   * rows, bit for bit with doubles compared by their raw bits, and the
-  * same `count()`, over lines that take every branch of the field
-  * extractor — plain lines, quoted and escaped lines (Spark's parser),
+  * same `count()`, over lines that take every branch of the line
+  * reader — plain lines, quoted and escaped lines (Spark's parser),
   * blank lines, line endings, wrong arity, number forms outside the
   * inline ones, non-ASCII and invalid UTF-8, a gzip part.
   */
@@ -218,28 +219,6 @@ class CsvReadSpec extends SparkSpec {
     assertSameAsCsvSource(dir, KlineSchema.schema)
   }
 
-  test("parsedRow: one parse per line, keyed by the line's bytes") {
-    var parses = 0
-    val parse: String => org.apache.spark.sql.catalyst.InternalRow = l => {
-      parses += 1
-      org.apache.spark.sql.catalyst.InternalRow(UTF8String.fromString(l))
-    }
-    val schema = StructType.fromDDL("a STRING")
-    val buf = "x\"1".getBytes(UTF_8)
-    val line = UTF8String.fromBytes(buf)
-    val r1 = CsvField.parsedRow(schema, line, parse)
-    // an equal line in another object reuses the row
-    assert(CsvField.parsedRow(schema, UTF8String.fromString("x\"1"), parse) eq r1)
-    assert(parses == 1)
-    // the same object over rewritten bytes is a new line
-    buf(2) = '2'.toByte
-    assert(CsvField.parsedRow(schema, line, parse).getUTF8String(0).toString == "x\"2")
-    assert(parses == 2)
-    // another schema parses again
-    CsvField.parsedRow(StructType.fromDDL("b STRING"), line, parse)
-    assert(parses == 3)
-  }
-
   test("readCsv keeps the CSV source's partition columns and column metadata") {
     val dir = ScratchDirs.create("csvread_part").toString
     Seq("2025-08", "2025-09").foreach { m =>
@@ -254,21 +233,28 @@ class CsvReadSpec extends SparkSpec {
     assertSameAsCsvSource(dir, schema)
   }
 
-  test("graft_csv_field from SQL, its plan prunes unread fields, unsupported types are refused") {
-    graft.functions.GraftFunctions.register(spark)
-    val row = spark.sql(
-      "SELECT graft_csv_field('7,2.5,x', 0, 'a BIGINT, b DOUBLE, c STRING'), " +
-        "graft_csv_field(line, 1, 'a BIGINT, b DOUBLE, c STRING'), " +
-        "graft_csv_kept(line) FROM VALUES ('1,\"3.5\",y') AS t(line)").head()
-    assert(row == Row(7L, 3.5, true))
+  test("readCsv's scan reads only the selected fields, unsupported types are refused") {
     val dir = ScratchDirs.create("csvread_plan").toString
     write(dir, "k.csv", "1,2.5,x\n".getBytes(UTF_8))
-    val plan = Sources.readCsv(spark, dir, mixed).select(col("b"))
-      .queryExecution.optimizedPlan.toString
-    assert(plan.split("graft_csv_field").length == 2, plan)
+    val scan = Sources.readCsv(spark, dir, mixed).select(col("b")).queryExecution.executedPlan
+      .collectFirst { case s: FileSourceScanExec => s }
+    assert(scan.map(_.metadata("ReadSchema")) == Some("struct<b:double>"), scan)
     intercept[IllegalArgumentException] {
       Sources.readCsv(spark, dir, StructType.fromDDL("a INT, b DOUBLE, c STRING"))
     }
+  }
+
+  test("readCsv equals the CSV source under a filter on one field and a projection of another") {
+    val dir = ScratchDirs.create("csvread_filter").toString
+    write(dir, "e.csv", edgeLines.mkString("", "\n", "\n").getBytes(UTF_8))
+    def query(df: DataFrame) = df.filter(col("b") > 1.0 || col("b").isNull).select(col("c"))
+    val ours = query(Sources.readCsv(spark, dir, mixed))
+    val theirs = query(spark.read.schema(mixed).option("header", "false").csv(dir))
+    // the scan is handed the filter and must leave it to the plan above
+    val scan = ours.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }
+    assert(scan.exists(_.metadata("PushedFilters") != "[]"), scan)
+    assert(canonical(ours).sorted == canonical(theirs).sorted)
+    assert(canonical(ours).nonEmpty)
   }
 
   private val decimalGen: Gen[String] = for {
@@ -289,15 +275,17 @@ class CsvReadSpec extends SparkSpec {
   }
 
   test("property: the double path equals java.lang.Double.parseDouble bit for bit") {
-    val reader = new CsvFieldReader(StructType.fromDDL("d DOUBLE"), 0)
+    val schema = StructType.fromDDL("d DOUBLE")
+    val reader = new CsvLineReader(schema, schema, new CSVOptions(Map("header" -> "false"), true, "UTC"))
     val cases = (0 until 4000).flatMap(i => decimalGen(Gen.Parameters.default, Seed(7000L + i))) ++
       (0 until 4000).flatMap(i => shortGen(Gen.Parameters.default, Seed(9000L + i)))
     var fast = 0
     cases.foreach { s =>
       val line = UTF8String.fromString(s)
       if (!CsvField.fastDouble(line, 0, line.numBytes).isNaN) fast += 1
-      val got = reader.readDouble(line)
-      assert(!reader.wasNull, s)
+      val row = reader.read(line)
+      assert(!row.isNullAt(0), s)
+      val got = row.getDouble(0)
       assert(java.lang.Double.doubleToRawLongBits(got) ==
         java.lang.Double.doubleToRawLongBits(java.lang.Double.parseDouble(s)), s)
     }

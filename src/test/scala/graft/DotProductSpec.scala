@@ -414,7 +414,7 @@ class DotProductSpec extends SparkSpec {
     val before = reg.listFunction().map(_.funcName).toSet
     GraftFunctions.register(fresh)
     val registered = reg.listFunction().map(_.funcName).toSet -- before
-    assert(registered.size == 15, registered)
+    assert(registered.size == 13, registered)
     assert(injected.keySet == registered)
     registered.foreach { n =>
       assert(reg.lookupFunction(FunctionIdentifier(n)).map(_.getClassName)
